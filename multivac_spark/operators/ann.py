@@ -40,11 +40,11 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     Output (q_id, neighbor, rank, cos_sim_micro) — integer-scaled
     similarity for cross-engine comparison. Casts and norms are
     precomputed per row (``_norm``), not per pair."""
-    qv = F.col(vec_col).cast("array<double>")
+    vd = F.col(vec_col).cast("array<double>")
     q = F.broadcast(queries.select(F.col(q_id_col).alias("q_id"),
-                                   qv.alias("qv"), _norm(qv).alias("qn")))
+                                   vd.alias("qv"), _norm(vd).alias("qn")))
     c = corpus.select(F.col(id_col).alias("neighbor"),
-                      qv.alias("cv"), _norm(qv).alias("cn"))
+                      vd.alias("cv"), _norm(vd).alias("cn"))
     sim = _dot("qv", "cv") / (F.col("qn") * F.col("cn"))
     scored = (q.crossJoin(c)
               .filter(F.col("q_id") != F.col("neighbor"))

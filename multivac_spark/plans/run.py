@@ -1,7 +1,7 @@
 """Materialized pipeline runner with stage-level resume.
 
 ``spark-submit --py-files multivac_spark.zip`` shape: each checkpoint
-stage writes parquet + a lineage manifest; a rerun with the same
+stage writes parquet + a lineage manifest entry; a rerun with the same
 (out_dir, run_id) skips completed stages and feeds their materialized
 output to downstream stages (FIXTURES.md invariant #4). Stages are
 wired so a resumed stage's *parquet* is what downstream reads — no
@@ -12,11 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.clean import clean_text_stage
-from ..functions.html_text import extract_text_stage
 from ..functions.normalize import normalize_triples
-from ..functions.parse import parse_stage
-from ..functions.svo import extract_triples_stage
 from ..operators import canon, materialize
 from ..sources import vocab
 from . import lineage

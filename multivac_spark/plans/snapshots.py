@@ -45,12 +45,12 @@ anywhere in this module.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from .manifest import read_json, write_json
 
 _MANIFEST = "_SNAPSHOTS.json"
 
@@ -60,19 +60,13 @@ def _manifest_path(base: str) -> str:
 
 
 def _read_manifest(base: str) -> dict:
-    p = _manifest_path(base)
-    if not os.path.exists(p):
-        return {"current": -1, "last_batch_id": -1, "snapshots": []}
-    with open(p) as f:
-        return json.load(f)
+    return read_json(_manifest_path(base),
+                     {"current": -1, "last_batch_id": -1, "snapshots": []})
 
 
 def _write_manifest(base: str, manifest: dict) -> None:
     # atomic pointer swap — readers see the old manifest or the new one
-    fd, tmp = tempfile.mkstemp(dir=base, suffix=".manifest")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(base))
+    write_json(_manifest_path(base), manifest)
 
 
 def _snapshot_dirname(version: int) -> str:

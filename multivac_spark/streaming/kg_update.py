@@ -36,11 +36,11 @@ the ``kg_incremental_counts`` driver entry.
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..plans.manifest import read_json, write_json
 
 TRIPLES_DDL = ("url string, sent_id int, rdf_idx int, "
                "subj string, pred string, obj string")
@@ -49,19 +49,13 @@ _MANIFEST = "_VERSION.json"
 
 
 def _read_manifest(counts_dir: str) -> dict:
-    p = os.path.join(counts_dir, _MANIFEST)
-    if not os.path.exists(p):
-        return {"version": -1, "last_batch_id": -1}
-    with open(p) as f:
-        return json.load(f)
+    return read_json(os.path.join(counts_dir, _MANIFEST),
+                     {"version": -1, "last_batch_id": -1})
 
 
 def _write_manifest(counts_dir: str, manifest: dict) -> None:
     # atomic swap: readers either see the old version or the new one
-    fd, tmp = tempfile.mkstemp(dir=counts_dir, suffix=".manifest")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(counts_dir, _MANIFEST))
+    write_json(os.path.join(counts_dir, _MANIFEST), manifest)
 
 
 def _version_dirname(batch_id: int) -> str:
@@ -80,10 +74,7 @@ def read_counts(spark: SparkSession, counts_dir: str,
     m = _read_manifest(counts_dir)
     if m["version"] < 0:
         return None
-    # fallback covers pre-round-4 checkpoints whose manifests lack
-    # "dir" (v{N} layout); removable once no such checkpoints exist
-    vdir = m.get("dir", f"v{m['version']:06d}")
-    return spark.read.parquet(os.path.join(counts_dir, vdir, table))
+    return spark.read.parquet(os.path.join(counts_dir, m["dir"], table))
 
 
 def merge_count_deltas(spark: SparkSession, counts_dir: str,

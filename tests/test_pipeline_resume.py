@@ -1,15 +1,21 @@
 """End-to-end pipeline + resume invariant (FIXTURES.md #4): a rerun with
 the same run_id reproduces identical tables without recomputing, and no
-duplicate lineage rows appear for completed stages."""
+duplicate lineage entries appear for completed stages."""
 
+import json
+import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from multivac_spark.plans import lineage
 from multivac_spark.plans.pipeline import PipelineConfig
 from multivac_spark.plans.run import run_materialized
 from multivac_spark.sources import corpus
+
+STAGES = {"sentences", "triples", "entity_clusters", "final_triples",
+          "entities", "relations", "edges", "type_constraints"}
 
 
 @pytest.fixture(scope="module")
@@ -28,6 +34,11 @@ def first_run(spark, out_dir):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _attempts(base):
+    with open(os.path.join(base, "_LINEAGE.json")) as f:
+        return json.load(f)["attempts"]
 
 
 def test_pipeline_end_to_end(spark, first_run):
@@ -65,50 +76,98 @@ def test_resume_reproduces_identical_tables(spark, out_dir, first_run):
 
 
 def test_no_duplicate_lineage_markers(spark, out_dir, first_run):
-    m = spark.read.parquet(f"{out_dir}/_lineage")
-    dup = (m.filter("complete").groupBy("run_id", "stage")
-           .count().filter("count > 1").count())
-    assert dup == 0
+    # one entry per committed stage, also after the resume above
+    stages = [(a["run_id"], a["stage"]) for a in _attempts(out_dir)]
+    assert len(stages) == len(set(stages))
+    assert {s for _, s in stages} == STAGES
 
 
-def test_crash_retry_converges(spark):
-    """Crash between parquet write and marker append, then retry: the
-    retry's full manifest set must validate against its OWN marker
-    (latest attempt), not the union of both attempts' rows — resume
-    must report complete and stop recomputing (VERDICT r1 'what's
-    wrong' — lineage self-defeat)."""
-    from multivac_spark.plans import lineage
+def test_committed_stages_match_spark_oracle(spark, out_dir, first_run):
+    """Every committed stage of a real build: the footer row counts sum
+    to Spark's count, and the recorded schema is the one Spark infers."""
+    for a in _attempts(out_dir):
+        out = os.path.join(out_dir, a["stage"])
+        inferred = spark.read.parquet(out)
+        assert a["rows"] == inferred.count(), a["stage"]
+        pinned = lineage.run_or_resume(spark, out_dir, "runA", a["stage"],
+                                       lambda: pytest.fail("recomputed"))
+        assert pinned.schema == inferred.schema, a["stage"]
 
+
+def _crash_before_swap(monkeypatch):
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before manifest swap")
+
+    monkeypatch.setattr(lineage, "write_json", crash)
+
+
+def _counting(df, calls):
+    return lambda: (calls.append(1), df)[1]
+
+
+def test_crash_after_write_before_swap_recomputes(spark, monkeypatch):
+    """The output is fully written (``_SUCCESS`` present) but the
+    manifest swap never happened: the stage is not complete, and the
+    next call recomputes it."""
     df = spark.range(100).withColumnRenamed("id", "k")
     with tempfile.TemporaryDirectory() as d:
-        # attempt 1: simulate crash AFTER partition stats were appended
-        # but BEFORE the marker row — write the stats slice by hand.
-        import time as _t
-        out = f"{d}/stg"
-        df.write.mode("overwrite").parquet(out)
-        back = spark.read.parquet(out)
-        stats = (lineage.partition_stats(back)
-                 .select(F.lit("r").alias("run_id"),
-                         F.lit("stg").alias("stage"),
-                         F.lit(_t.time_ns()).alias("attempt_id"),
-                         "partition_id", "row_count",
-                         F.lit(False).alias("complete"),
-                         F.lit(0).alias("wall_ms")))
-        stats.write.mode("append").parquet(f"{d}/_lineage")
-        # crashed attempt alone: NOT complete (no marker for newest)
+        with monkeypatch.context() as mp:
+            _crash_before_swap(mp)
+            with pytest.raises(RuntimeError):
+                lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
+        assert os.path.exists(f"{d}/stg/_SUCCESS")
         assert not lineage.stage_complete(spark, d, "r", "stg")
 
-        # attempt 2: full retry through the real API
         calls = []
-        lineage.run_or_resume(spark, d, "r", "stg",
-                              lambda: (calls.append(1), df)[1])
+        lineage.run_or_resume(spark, d, "r", "stg", _counting(df, calls))
         assert calls == [1]
-        # the manifest now holds both attempts' rows; completeness must
-        # hold (latest attempt validates against its own marker)...
         assert lineage.stage_complete(spark, d, "r", "stg")
-        # ...so a third run resumes without recomputing
+
+
+def test_overwritten_output_of_older_entry_recomputes(spark):
+    """A complete entry whose files were since overwritten (same total
+    rows, different files) no longer describes the output: recompute."""
+    df = spark.range(100).withColumnRenamed("id", "k")
+    with tempfile.TemporaryDirectory() as d:
+        lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
+        assert lineage.stage_complete(spark, d, "r", "stg")
+        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/stg")
+        assert os.path.exists(f"{d}/stg/_SUCCESS")
+        assert not lineage.stage_complete(spark, d, "r", "stg")
+
+        calls = []
+        lineage.run_or_resume(spark, d, "r", "stg", _counting(df, calls))
+        assert calls == [1]
+        assert lineage.stage_complete(spark, d, "r", "stg")
+
+
+def test_crash_retry_converges(spark, monkeypatch):
+    """A newer attempt overwrites a committed stage and crashes before
+    its manifest swap; the retry's entry must validate on its own
+    (latest attempt), not against the older entry — resume must report
+    complete and stop recomputing (VERDICT r1 'what's wrong' — lineage
+    self-defeat)."""
+    df = spark.range(100).withColumnRenamed("id", "k")
+    with tempfile.TemporaryDirectory() as d:
+        lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
+        # attempt 2: overwrite, then crash before the swap
+        with monkeypatch.context() as mp:
+            _crash_before_swap(mp)
+            with pytest.raises(RuntimeError):
+                lineage.write_stage(spark, df.repartition(3), d, "r", "stg")
+        assert not lineage.stage_complete(spark, d, "r", "stg")
+
+        # attempt 3: full retry through the real API
+        calls = []
+        lineage.run_or_resume(spark, d, "r", "stg", _counting(df, calls))
+        assert calls == [1]
+        # the manifest now holds both committed attempts' entries;
+        # completeness must hold (latest attempt validates alone)...
+        assert len(_attempts(d)) == 2
+        assert lineage.stage_complete(spark, d, "r", "stg")
+        # ...so a further run resumes without recomputing
         calls2 = []
         got = lineage.run_or_resume(spark, d, "r", "stg",
-                                    lambda: (calls2.append(1), df)[1])
+                                    _counting(df, calls2))
         assert calls2 == []
         assert got.count() == 100

@@ -5,8 +5,9 @@ internals is held output-identical to the formulation it replaced.
   32-way fold (``simhash_bits``), including empty/whitespace-only docs.
 * Corpus sampling: ``_weighted_draw`` replays ``RandomState.choice``'s
   exact draw (same RNG stream, same index) for every cached CDF.
-* Mention averaging: the ``np.add.reduceat`` segment-sum in the driver
-  clustering kernel is bit-identical to the per-mention ``np.mean``.
+* Mention averaging: the grouped sequential-add vectorized averaging in
+  the driver clustering kernel is bit-identical to the per-mention
+  ``np.mean``.
 * Cosine with per-row norms: dot/(na·nb) with precomputed na/nb equals
   the original three-fold ``cosine`` expression bit-for-bit.
 """
