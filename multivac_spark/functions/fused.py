@@ -5,9 +5,10 @@ sentence split → dependency parse → SVO extraction per document. The
 intermediate token structs never cross the Arrow boundary — nested
 list<struct> serialization is the dominant cost of the staged path
 (SURVEY.md §1.2 flagged exactly this) — so this narrow, shuffle-free
-stage is the throughput path for the 100 TB pipeline. The staged
-variants remain for producing the ``sentences`` product table and for
-unit-level parity tests.
+stage is the throughput path for the 100 TB pipeline. Its twin
+``parse.fused_sentences_stage`` makes the ``sentences`` table; the
+staged variants make it only under ``coref=True`` (the resolver
+rewrites the cleaned text) and serve the unit-level parity tests.
 """
 
 from __future__ import annotations
@@ -16,9 +17,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from .clean import clean_document
-from .html_text import extract_article_text
-from .parse import parse_document
+from .parse import article_texts, parse_document
 from .svo import extract_svo
 
 TRIPLES_SCHEMA = ("url string, sent_id int, rdf_idx int, "
@@ -65,12 +64,7 @@ def fused_extract_stage(documents, lexicon: dict[str, str],
         for pdf in batches:
             out = {"url": [], "sent_id": [], "rdf_idx": [],
                    "subj": [], "pred": [], "obj": []}
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                if text is None:
-                    text = extract_article_text(html)
-                if text is None:
-                    continue
-                cleaned = clean_document(text, lexset)
+            for url, cleaned in article_texts(pdf, lexset):
                 for sid, _, toks in parse_document(cleaned, lexicon, lemmas):
                     spans = None
                     if mention_source:

@@ -21,6 +21,9 @@ from typing import Iterator
 
 import pandas as pd
 
+from .clean import clean_document
+from .html_text import extract_article_text
+
 SENT_SPLIT = re.compile(r"(?<=[.!?])\s+")
 _OPEN_PUNCT = "([{"
 _CLOSE_PUNCT = ")]}.,;:?!"
@@ -217,6 +220,43 @@ _FLAT_TOKENS_SCHEMA = (
     "ti array<int>, tt array<string>, tl array<string>, "
     "tp array<string>, th array<int>, td array<string>"
 )
+_TOKEN_COLS = ("ti", "tt", "tl", "tp", "th", "td")
+
+
+def _sentence_frame(docs, lexicon: dict[str, str],
+                    lemmas: dict[str, str]) -> pd.DataFrame:
+    """(url, text) pairs → one ``_FLAT_TOKENS_SCHEMA`` row per sentence
+    with at least one token: the per-batch kernel of both sentence
+    stages."""
+    cols: dict[str, list] = {k: [] for k in
+                             ("url", "sent_id", "text", *_TOKEN_COLS)}
+    for url, text in docs:
+        for sid, sent in enumerate(split_sentences(text)):
+            words = tokenize(sent)
+            if not words:
+                continue
+            row = (url, sid, sent,
+                   *parse_tokens_columns(words, lexicon, lemmas))
+            for col, v in zip(cols.values(), row):
+                col.append(v)
+    return pd.DataFrame(
+        {"url": pd.Series(cols["url"], dtype=object),
+         "sent_id": pd.Series(cols["sent_id"], dtype="int64"),
+         "text": pd.Series(cols["text"], dtype=object),
+         # dtype=object on every list column: pandas can coerce lists
+         # into an ndarray, which Arrow's NumPyConverter cannot
+         # serialize as list<...>
+         **{k: pd.Series(cols[k], dtype=object) for k in _TOKEN_COLS}})
+
+
+def article_texts(pdf: pd.DataFrame, lexset: frozenset):
+    """(url, cleaned text) of each document in a (url, html, text)
+    batch that has article text: ``text``, else extracted from ``html``."""
+    for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
+        if text is None:
+            text = extract_article_text(html)
+        if text is not None:
+            yield url, clean_document(text, lexset)
 
 
 def _zip_tokens(flat):
@@ -240,9 +280,6 @@ def fused_sentences_stage(documents, lexicon: dict[str, str],
     Arrow twice more; fusing removes both extra crossings. Output is
     identical to the staged path (parity-pinned in
     test_parse_and_svo.py)."""
-    from ..functions.clean import clean_document
-    from ..functions.html_text import extract_article_text
-
     lexset = frozenset(lexicon)
     src = documents
     if lang_filter:
@@ -251,36 +288,7 @@ def fused_sentences_stage(documents, lexicon: dict[str, str],
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in
-                                     ("url", "sent_id", "text", "ti", "tt",
-                                      "tl", "tp", "th", "td")}
-            for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-                if text is None:
-                    text = extract_article_text(html)
-                if text is None:
-                    continue
-                cleaned = clean_document(text, lexset)
-                for sid, sent in enumerate(split_sentences(cleaned)):
-                    words = tokenize(sent)
-                    if not words:
-                        continue
-                    ii, tt, lm, ps, hd, dp = parse_tokens_columns(
-                        words, lexicon, lemmas)
-                    cols["url"].append(url)
-                    cols["sent_id"].append(sid)
-                    cols["text"].append(sent)
-                    cols["ti"].append(ii)
-                    cols["tt"].append(tt)
-                    cols["tl"].append(lm)
-                    cols["tp"].append(ps)
-                    cols["th"].append(hd)
-                    cols["td"].append(dp)
-            yield pd.DataFrame(
-                {"url": pd.Series(cols["url"], dtype=object),
-                 "sent_id": pd.Series(cols["sent_id"], dtype="int64"),
-                 "text": pd.Series(cols["text"], dtype=object),
-                 **{k: pd.Series(cols[k], dtype=object)
-                    for k in ("ti", "tt", "tl", "tp", "th", "td")}})
+            yield _sentence_frame(article_texts(pdf, lexset), lexicon, lemmas)
 
     return _zip_tokens(src.mapInPandas(run, schema=_FLAT_TOKENS_SCHEMA))
 
@@ -299,41 +307,14 @@ def parse_stage(df, lexicon: dict[str, str], lemmas: dict[str, str],
     ``tokens array<struct<...>>`` of SENTENCES_SCHEMA is reassembled
     JVM-side by ``arrays_zip`` — same output schema, ~none of the
     serialization cost."""
-    from pyspark.sql import functions as F
-
     src = df.select("url", text_col)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in
-                                     ("url", "sent_id", "text", "ti", "tt",
-                                      "tl", "tp", "th", "td")}
-            for url, text in zip(pdf["url"], pdf[text_col]):
-                if text is None or (isinstance(text, float)):
-                    continue
-                for sid, sent in enumerate(split_sentences(text)):
-                    words = tokenize(sent)
-                    if not words:
-                        continue
-                    ii, tt, lm, ps, hd, dp = parse_tokens_columns(
-                        words, lexicon, lemmas)
-                    cols["url"].append(url)
-                    cols["sent_id"].append(sid)
-                    cols["text"].append(sent)
-                    cols["ti"].append(ii)
-                    cols["tt"].append(tt)
-                    cols["tl"].append(lm)
-                    cols["tp"].append(ps)
-                    cols["th"].append(hd)
-                    cols["td"].append(dp)
-            yield pd.DataFrame(
-                {"url": pd.Series(cols["url"], dtype=object),
-                 "sent_id": pd.Series(cols["sent_id"], dtype="int64"),
-                 "text": pd.Series(cols["text"], dtype=object),
-                 # dtype=object on every list column: pandas can coerce
-                 # lists into an ndarray, which Arrow's NumPyConverter
-                 # cannot serialize as list<...>
-                 **{k: pd.Series(cols[k], dtype=object)
-                    for k in ("ti", "tt", "tl", "tp", "th", "td")}})
+            # NULL text arrives from Arrow as None or NaN
+            yield _sentence_frame(
+                ((url, text) for url, text in zip(pdf["url"], pdf[text_col])
+                 if text is not None and not isinstance(text, float)),
+                lexicon, lemmas)
 
     return _zip_tokens(src.mapInPandas(run, schema=_FLAT_TOKENS_SCHEMA))

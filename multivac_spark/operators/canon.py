@@ -445,8 +445,8 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
     * **distributed path** otherwise: checkpointed mention embeddings,
       banded-LSH similarity join, distributed/driver CC
       (``driver_fastpath_edges`` is passed through, so ``=0`` on both
-      knobs forces the fully distributed route end-to-end — the
-      bench_twins.py scale exercise).
+      knobs forces the fully distributed route end-to-end, pinned
+      equal to the driver path in tests/test_canon_and_materialize.py).
     """
     n_mentions = mentions.count()
     if n_mentions <= driver_fastpath_mentions:

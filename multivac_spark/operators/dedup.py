@@ -181,19 +181,6 @@ def simhash_signatures_agg(df: DataFrame, text_col: str = "text",
     return agg.select(id_col, F.concat(*bits).alias("_sig"))
 
 
-def hamming_bits(a: Column, b: Column, n_bits: int) -> Column:
-    """Hamming distance between two fixed-width '0'/'1' bit-strings as
-    a sum of per-position inequalities — arithmetic identical in the
-    DuckDB oracle (no engine-specific popcount needed at 16 bits)."""
-    terms = [F.when(F.substring(a, i + 1, 1)
-                    != F.substring(b, i + 1, 1), 1).otherwise(0)
-             for i in range(n_bits)]
-    total = terms[0]
-    for t in terms[1:]:
-        total = total + t
-    return total.cast("long")
-
-
 def simhash_dup_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_bits: int = 16,
                       max_hamming: int = 3) -> DataFrame:

@@ -149,13 +149,30 @@ def match_parts(parts: DataFrame, embeddings: DataFrame,
             .filter("rn = 1").select("part", "entity", "sim"))
 
 
+def kg_vectors(final_triples: DataFrame,
+               embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """→ (entity_vecs, rel_vecs), checkpointed: the vectors of every
+    subj/obj and every pred. They depend only on the KG, so a service
+    builds them once and passes them to each ``answer_queries``."""
+    entity_vecs = mention_embeddings(
+        final_triples.select(F.col("subj").alias("mention"))
+        .union(final_triples.select(F.col("obj").alias("mention")))
+        .distinct(), embeddings).localCheckpoint()
+    rel_vecs = mention_embeddings(
+        final_triples.select(F.col("pred").alias("mention")).distinct(),
+        embeddings).localCheckpoint()
+    return entity_vecs, rel_vecs
+
+
 def answer_queries(query_parts: DataFrame,
                    final_triples: DataFrame,
                    embeddings: DataFrame,
                    threshold: float = MATCH_THRESHOLD,
                    impute: bool = False,
                    model: str = "blend",
-                   transe_opts: dict | None = None) -> DataFrame:
+                   transe_opts: dict | None = None,
+                   vectors: tuple[DataFrame, DataFrame] | None = None
+                   ) -> DataFrame:
     """Full get_answers analog: match subj/pred/obj parts to canonical
     entities/relations by embedding cosine, then answer from the triple
     table: (head, rel) → tails and (rel, tail) → heads.
@@ -173,14 +190,9 @@ def answer_queries(query_parts: DataFrame,
     the reference actually loads for this path (map_queries.py:90-137
     ranks with the OpenKE model). ``transe_opts`` forwards dim/epochs/
     lr/k to the trainer. Held-out completion quality trained ≥ blend
-    is pinned in tests/test_transe_completion.py."""
-    entity_vecs = mention_embeddings(
-        final_triples.select(F.col("subj").alias("mention"))
-        .union(final_triples.select(F.col("obj").alias("mention")))
-        .distinct(), embeddings).localCheckpoint()
-    rel_vecs = mention_embeddings(
-        final_triples.select(F.col("pred").alias("mention")).distinct(),
-        embeddings).localCheckpoint()
+    is pinned in tests/test_transe_completion.py. ``vectors`` defaults
+    to ``kg_vectors(final_triples, embeddings)``."""
+    entity_vecs, rel_vecs = vectors or kg_vectors(final_triples, embeddings)
 
     subj_m = match_parts(query_parts, embeddings, entity_vecs, "q_subj",
                          threshold).withColumnRenamed("entity", "head_ent") \

@@ -70,10 +70,6 @@ def digit_token_count(col: Column) -> Column:
     return F.size(F.filter(tokens(col), lambda t: t.rlike("[0-9]")))
 
 
-def lang_score(col: Column, markers: list[str]) -> Column:
-    return F.size(F.filter(tokens(F.lower(col)), lambda t: t.isin(markers)))
-
-
 def langid(col: Column) -> Column:
     """Argmax over marker scores; ties resolved by language code order
     (deterministic). Unknown when every score is 0. The token array is

@@ -15,10 +15,11 @@ echo-the-args-dict debug response.
 Serving model: ``http.server.ThreadingHTTPServer`` (stdlib — Flask is
 not a dependency of this repo) wrapping ONE long-lived SparkSession;
 each request is a short driver-side job over the pre-checkpointed
-triple/embedding tables, the same deployment shape as the reference's
-single-process Flask app. For production-scale QPS the service is a
-thin layer: the heavy state (canonical triples, mention vectors) is
-already materialized once at construction.
+triple and mention-vector tables, the same deployment shape as the
+reference's single-process Flask app. For production-scale QPS the
+service is a thin layer: the heavy state (canonical triples,
+``query.kg_vectors``) is materialized once at construction. A bad
+``threshold-input`` / ``num-top-input`` gets a 400 with a JSON ``error``.
 """
 from __future__ import annotations
 
@@ -28,6 +29,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import functions as F
+
+from ..operators import query as Q
 
 _FORM_HTML = b"""<!doctype html><html><body>
 <form action="/results" method="get">
@@ -50,14 +53,13 @@ class AnswerService:
         self.spark = spark
         self.triples = final_triples.localCheckpoint()
         self.embeddings = embeddings
+        self.vectors = Q.kg_vectors(self.triples, embeddings)
         self.lexicon = lexicon
         self.lemmas = lemmas
 
     def answer(self, search: str, model: str = "blend",
                threshold: float = 0.75, num_top: int = 10,
                impute: bool = False) -> list[dict]:
-        from multivac_spark.operators import query as Q
-
         cleaned = Q.clean_query(search)
         if not cleaned:
             return []
@@ -66,12 +68,26 @@ class AnswerService:
         parts = Q.extract_query_parts(qdf, self.lexicon, self.lemmas)
         answers = Q.answer_queries(
             parts, self.triples, self.embeddings,
-            threshold=threshold, impute=impute, model=model)
+            threshold=threshold, impute=impute, model=model,
+            vectors=self.vectors)
         cols = answers.columns
         order = [F.desc("score_micro")] if "score_micro" in cols else []
         rows = (answers.orderBy(*order, "answer")
                 .limit(int(num_top)).collect())
         return [r.asDict() for r in rows]
+
+
+def _number(qs: dict, name: str, default: str, kind, lo, hi):
+    """``qs[name]`` parsed by ``kind`` and checked against [lo, hi];
+    ValueError names the parameter."""
+    raw = qs.get(name, default)
+    try:
+        value = kind(raw)
+    except ValueError:
+        value = None
+    if value is None or not lo <= value <= hi:   # `not` also rejects nan
+        raise ValueError(f"{name} must be a number in [{lo}, {hi}]: {raw!r}")
+    return value
 
 
 def _make_handler(service: AnswerService):
@@ -102,14 +118,21 @@ def _make_handler(service: AnswerService):
                 self.send_header("Location", "/")
                 self.end_headers()
                 return
-            args = {
-                "search": search,
-                "model": qs.get("model-type-input", "blend"),
-                "threshold": float(qs.get("threshold-input", "0.75")),
-                "num_top_rel": int(qs.get("num-top-input", "10")),
-                "run": qs.get("run-input", "query"),
-                "verbose": qs.get("verbosity-input", "false"),
-            }
+            try:
+                args = {
+                    "search": search,
+                    "model": qs.get("model-type-input", "blend"),
+                    "threshold": _number(qs, "threshold-input", "0.75",
+                                         float, -1.0, 1.0),
+                    "num_top_rel": _number(qs, "num-top-input", "10",
+                                           int, 1, float("inf")),
+                    "run": qs.get("run-input", "query"),
+                    "verbose": qs.get("verbosity-input", "false"),
+                }
+            except ValueError as exc:
+                self._send(400, json.dumps({"error": str(exc)}).encode(),
+                           "application/json")
+                return
             try:
                 answers = service.answer(
                     search, model=args["model"],

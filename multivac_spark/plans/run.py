@@ -18,6 +18,11 @@ from ..sources import vocab
 from . import lineage
 from .pipeline import PipelineConfig, default_lexicons
 
+# PipelineConfig fields this runner does not implement (it builds the
+# default KG); plans.pipeline.run_pipeline does
+_UNSUPPORTED_FIELDS = ("coref", "cluster_relations", "extractor",
+                      "expand_mentions", "gazetteer")
+
 
 def run_materialized(spark: SparkSession,
                      documents: DataFrame,
@@ -26,8 +31,12 @@ def run_materialized(spark: SparkSession,
                      run_id: str = "run0",
                      cfg: PipelineConfig | None = None) -> dict[str, DataFrame]:
     cfg = cfg or PipelineConfig()
+    for name in _UNSUPPORTED_FIELDS:
+        if getattr(cfg, name) != getattr(PipelineConfig, name):
+            raise ValueError(
+                f"run_materialized does not support PipelineConfig.{name}"
+                f"={getattr(cfg, name)!r}; use plans.pipeline.run_pipeline")
     lex, lemmas = default_lexicons()
-    lexset = frozenset(lex)
 
     def stage(name: str, build, partition_by: str | None = None):
         return lineage.run_or_resume(spark, out_dir, run_id, name, build,

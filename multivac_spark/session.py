@@ -23,8 +23,8 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
-    ``local[*]``) so the bench harness can pin parallelism for the
-    N-vs-4N scaling runs.
+    ``local[*]``); ``kgbench`` and the tier-1 tests pin
+    ``SPARK_GRAFT_CPUS`` to the host's core count.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

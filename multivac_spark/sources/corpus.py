@@ -454,8 +454,8 @@ def documents_df(spark, n_docs: int, partitions: int | None = None,
     """Distributed generation: spark.range → mapInPandas, one seeded row
     per index. No driver-side loop, no collect — generation itself
     scales. ``start`` shifts the index range (disjoint delta batches
-    for incremental-ingest benches: ``documents_df(s, n, start=m)``
-    generates docs m..m+n-1)."""
+    for incremental ingest: ``documents_df(s, n, start=m)`` generates
+    docs m..m+n-1)."""
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
 
     def gen(batches):
@@ -471,11 +471,3 @@ def embeddings_df(spark):
     rows = vocab.embedding_rows()
     pdf = pd.DataFrame(rows, columns=["token", "vector"])
     return spark.createDataFrame(pdf, schema="token string, vector array<float>")
-
-
-def write_corpus(spark, out_dir: str, sf: float) -> None:
-    n = n_docs_for_sf(sf)
-    (documents_df(spark, n)
-     .write.mode("overwrite").parquet(f"{out_dir}/documents.parquet"))
-    (embeddings_df(spark)
-     .write.mode("overwrite").parquet(f"{out_dir}/embeddings.parquet"))

@@ -218,3 +218,36 @@ def test_simhash_dup_pairs_rejects_indivisible_bands():
 
     with pytest.raises(ValueError):
         dedup.simhash_dup_pairs(None, n_bits=16, max_hamming=2)
+
+
+def test_text_signals_match_single_signal_operators(spark):
+    """text_signals computes its seven columns with shared tokenizations;
+    each must equal its single-signal operator row by row."""
+    rows = [
+        (1, "The cat and the dog sat with this mat in 2024 ."),
+        (2, "Der Hund und die Katze mit 3 Beinen"),
+        (3, "le chat et la souris avec 42 fromages"),
+        (4, "el perro y los gatos con 7 huesos"),
+        (5, ""),
+        (6, "   "),
+        (7, "v2 x86 100% don't   stop;  THE AND WITH"),
+        (8, "und the und the"),
+        (9, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    col = F.col("text")
+    single = {r["doc_id"]: r.asDict() for r in df.select(
+        "doc_id",
+        textops.token_count(col).alias("n_tokens"),
+        textops.bpe_token_count(col).alias("n_bpe"),
+        textops.char_sum(col).alias("n_chars"),
+        textops.stopword_count(col).alias("n_stopwords"),
+        textops.digit_token_count(col).alias("n_digit_tokens"),
+        textops.langid(col).alias("lang_pred"),
+        textops.fingerprint(col).alias("fp")).collect()}
+    fused = {r["doc_id"]: r.asDict()
+             for r in textops.text_signals(df).collect()}
+    assert fused == single
+    assert {single[i]["lang_pred"] for i in (1, 2, 3, 4)} \
+        == {"en", "de", "fr", "es"}
+    assert single[1]["n_digit_tokens"] == 1 and single[1]["n_stopwords"] > 0

@@ -171,3 +171,20 @@ def test_crash_retry_converges(spark, monkeypatch):
                                     _counting(df, calls2))
         assert calls2 == []
         assert got.count() == 100
+
+
+@pytest.mark.parametrize("field, value", [
+    ("coref", True),
+    ("cluster_relations", True),
+    ("extractor", "textacy"),
+    ("expand_mentions", "ner"),
+    ("gazetteer", {"pathogen": "DISEASE"}),
+])
+def test_unsupported_config_is_rejected(spark, tmp_path, field, value):
+    """run_materialized builds only the default KG: a config asking for
+    anything else fails loudly, before any stage runs, instead of
+    quietly building the default KG."""
+    cfg = PipelineConfig(top_n_ent=2000, top_n_rel=50, **{field: value})
+    with pytest.raises(ValueError, match=f"PipelineConfig.{field}="):
+        run_materialized(spark, None, None, str(tmp_path), "runX", cfg)
+    assert not os.listdir(tmp_path)
