@@ -4,11 +4,11 @@ One Arrow-batched ``mapInPandas`` pass running html→text → clean →
 sentence split → dependency parse → SVO extraction per document. The
 intermediate token structs never cross the Arrow boundary — nested
 list<struct> serialization is the dominant cost of the staged path
-(SURVEY.md §1.2 flagged exactly this) — so this narrow, shuffle-free
-stage is the throughput path for the 100 TB pipeline. Its twin
-``parse.fused_sentences_stage`` makes the ``sentences`` table; the
-staged variants make it only under ``coref=True`` (the resolver
-rewrites the cleaned text) and serve the unit-level parity tests.
+(SURVEY.md §1.2 flagged exactly this). Streaming ingest
+(``streaming.ingest``) uses it: its stream keeps no sentences table.
+The batch build does not: it makes the ``sentences`` table with
+``parse.fused_sentences_stage`` and extracts the triples from that
+table (``svo.extract_triples_stage``), parsing each document once.
 """
 
 from __future__ import annotations
@@ -28,33 +28,20 @@ def fused_extract_stage(documents, lexicon: dict[str, str],
                         lemmas: dict[str, str],
                         lang_filter: str | None = "en",
                         normalize: bool = False,
-                        verb_lemmas: dict[str, str] | None = None,
-                        mention_source: str | None = None,
-                        gazetteer: dict[str, str] | None = None):
+                        verb_lemmas: dict[str, str] | None = None):
     """documents(url, warc_ts, html, text, lang) → raw (or, with
     ``normalize=True``, normalized) triples in a single Arrow pass.
 
     NULL-text pages (no <article>) flow through producing zero rows
     (FIXTURES.md invariant #5). ``normalize=True`` applies the
     preprocess_raw_tuples semantics in-pass via ``normalize_triple_py``
-    (parity-pinned against the Column implementation).
-    ``mention_source`` ('ner' | 'chunks' | None) applies the
-    expand_rdfs mention widening inside the same pass — staged-path
-    parity pinned in tests/test_ner_expand.py."""
+    (parity-pinned against the Column implementation)."""
     lexset = frozenset(lexicon)
     if normalize:
         from .normalize import normalize_triple_py
         vl = verb_lemmas or {}
         non_nouns = frozenset(
             k for k, v in lexicon.items() if not v.startswith("NN"))
-    if mention_source not in (None, "ner", "chunks"):
-        raise ValueError(f"unknown mention_source: {mention_source!r}")
-    if mention_source == "ner":
-        from .ner import entity_mentions
-        mention_fn = lambda tl: entity_mentions(tl, gazetteer)
-    elif mention_source == "chunks":
-        from .ner import chunk_mentions
-        mention_fn = chunk_mentions
     src = documents
     if lang_filter:
         src = src.filter(src.lang == lang_filter)
@@ -66,10 +53,7 @@ def fused_extract_stage(documents, lexicon: dict[str, str],
                    "subj": [], "pred": [], "obj": []}
             for url, cleaned in article_texts(pdf, lexset):
                 for sid, _, toks in parse_document(cleaned, lexicon, lemmas):
-                    spans = None
-                    if mention_source:
-                        spans = [(b, e) for b, e, _l in mention_fn(toks)]
-                    for idx, s, p, o in extract_svo(toks, mentions=spans):
+                    for idx, s, p, o in extract_svo(toks):
                         if normalize:
                             norm = normalize_triple_py(s, p, o, vl, non_nouns)
                             if norm is None:

@@ -274,8 +274,9 @@ def fused_sentences_stage(documents, lexicon: dict[str, str],
                           lemmas: dict[str, str],
                           lang_filter: str | None = "en"):
     """documents(url, warc_ts, html, text, lang) → sentences in ONE
-    Arrow pass (html→text → clean → parse fused, the sentences-product
-    twin of functions/fused.py). The staged ``parse_stage`` pays three
+    Arrow pass (html→text → clean → parse fused). The batch build
+    (``plans.pipeline``) parses each document here, once, and extracts
+    its triples from this table. The staged ``parse_stage`` pays three
     Python round-trips — html bytes and full document text each cross
     Arrow twice more; fusing removes both extra crossings. Output is
     identical to the staged path (parity-pinned in

@@ -2,25 +2,26 @@
 
 The Spark analog of the reference's ``build_graph.py:10-38`` run:
 extract_raw_tuples → preprocess_raw_tuples → cluster_entities →
-output_to_openke (SURVEY.md §3.1), declared as one lazy DataFrame DAG so
-Catalyst sees the whole plan (filter pushdown through the UDF stages'
-column pruning, broadcast joins for every dictionary-sized side).
+output_to_openke (SURVEY.md §3.1). ``_tables`` declares that DAG once;
+``run_pipeline`` keeps it one lazy DataFrame DAG so Catalyst sees the
+whole plan (filter pushdown through the UDF stages' column pruning,
+broadcast joins for every dictionary-sized side), and
+``plans.run.run_materialized`` commits its stages with resume.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping
 from dataclasses import dataclass
+from functools import cache
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions import parse, svo
 from ..functions.clean import clean_text_stage
-from ..functions.fused import fused_extract_stage
 from ..functions.html_text import extract_text_stage
 from ..functions.normalize import normalize_triples
-from ..functions.parse import parse_stage
-from ..functions.svo import extract_triples_stage  # noqa: F401 (staged path)
 from ..operators import canon, materialize
 from ..sources import vocab
 
@@ -38,14 +39,15 @@ class PipelineConfig:
     # optional relation clustering, off by default like the reference
     # (cluster_relations flag, rdf_extract.py:102-104,119-122)
     cluster_relations: bool = False
-    # which extraction path: 'rdf_parse' = the Phase-I substitute_rdfs
-    # twin (fused, default); 'textacy' = the Phase-II RDFExtractor twin
-    # (rdf_extract.py:767-833, functions/svo_textacy.py)
+    # which extractor reads the sentences table: 'rdf_parse' = the
+    # Phase-I substitute_rdfs twin (default, functions/svo.py);
+    # 'textacy' = the Phase-II RDFExtractor twin (rdf_extract.py:767-833,
+    # functions/svo_textacy.py)
     extractor: str = "rdf_parse"
     # optional expand_rdfs mention widening (rdf_parse.py:214-226 —
     # declared in the reference but never called, so off by default):
     # 'ner' = rule-NER entitymentions twin, 'chunks' = NP-chunk
-    # inventory. Rides the fused pass (staged when combined with coref).
+    # inventory. Applied by the 'rdf_parse' extractor.
     expand_mentions: str | None = None
     # RegexNER-style gazetteer (term → label) for expand_mentions='ner'
     gazetteer: dict | None = None
@@ -61,27 +63,126 @@ def default_lexicons() -> tuple[dict[str, str], dict[str, str]]:
 
 
 class LazyTables(Mapping):
-    """Mapping of table name → DataFrame where each value is built (and
-    memoized) on FIRST ACCESS. Constructing the mapping schedules zero
-    Spark jobs — the clustering stages (which are eager by design:
-    bounded dictionary collect + union-find, canon.py) only run when a
-    caller touches a clustering-dependent table. Job-count-listener
-    pinned in tests/test_query_mapping.py."""
+    """Mapping of table name → DataFrame where each value is built on
+    FIRST ACCESS by a memoized thunk of ``_tables``. Constructing the
+    mapping schedules zero Spark jobs — the clustering stages (which are
+    eager by design: bounded dictionary collect + union-find, canon.py)
+    only run when a caller touches a clustering-dependent table.
+    Job-count-listener pinned in tests/test_query_mapping.py."""
 
     def __init__(self, thunks: dict[str, Callable[[], DataFrame]]):
         self._thunks = thunks
-        self._cache: dict[str, DataFrame] = {}
 
     def __getitem__(self, key: str) -> DataFrame:
-        if key not in self._cache:
-            self._cache[key] = self._thunks[key]()
-        return self._cache[key]
+        return self._thunks[key]()
 
     def __iter__(self) -> Iterator[str]:
         return iter(self._thunks)
 
     def __len__(self) -> int:
         return len(self._thunks)
+
+
+def _tables(documents: DataFrame, embeddings: DataFrame,
+            cfg: PipelineConfig,
+            commit: Callable[[str, Callable[[], DataFrame]], DataFrame],
+            ) -> dict[str, Callable[[], DataFrame]]:
+    """The pipeline DAG, declared once: table name → memoized thunk, in
+    dependency order. Every table is made by ``commit(name, build)``
+    and downstream tables read what ``commit`` returns — ``build()``
+    itself for the lazy pipeline, the committed parquet for a
+    materialized build (so a resumed stage's output is what its
+    consumers read, FIXTURES.md invariant #4)."""
+    lex, lemmas = default_lexicons()
+    thunks: dict[str, Callable[[], DataFrame]] = {}
+
+    def table(name: str, build: Callable[[], DataFrame]):
+        thunks[name] = cache(lambda: commit(name, build))
+        return thunks[name]
+
+    def build_extracted() -> DataFrame:
+        df = extract_text_stage(documents)
+        if cfg.lang_filter:
+            df = df.filter(F.col("lang") == cfg.lang_filter)
+        return df
+
+    extracted = table("extracted", build_extracted)
+
+    def build_cleaned() -> DataFrame:
+        df = clean_text_stage(extracted(), frozenset(lex))
+        if cfg.coref:
+            from ..functions.coref import resolve_coref_stage
+            df = resolve_coref_stage(df, lex, lemmas)
+        return df
+
+    cleaned = table("cleaned", build_cleaned)
+
+    def build_sentences() -> DataFrame:
+        # the coref resolver rewrites the cleaned text, so it is parsed
+        # staged; otherwise html→text → clean → parse is one Arrow pass
+        if cfg.coref:
+            return parse.parse_stage(cleaned(), lex, lemmas)
+        return parse.fused_sentences_stage(documents, lex, lemmas,
+                                           cfg.lang_filter)
+
+    sentences = table("sentences", build_sentences)
+
+    def build_raw_triples() -> DataFrame:
+        # every extractor reads the sentences table: one parse per
+        # document per build
+        if cfg.extractor == "textacy":
+            from ..functions.svo_textacy import extract_triples_textacy_stage
+            return extract_triples_textacy_stage(sentences())
+        return svo.extract_triples_stage(
+            sentences(), mention_source=cfg.expand_mentions,
+            gazetteer=cfg.gazetteer)
+
+    raw_triples = table("raw_triples", build_raw_triples)
+    triples = table("triples", lambda: normalize_triples(
+        raw_triples(), vocab.verb_lemma_table(), lex))
+    uniq_ents = table("unique_entities", lambda: materialize.top_entities(
+        triples(), cfg.top_n_ent))
+    uniq_rels = table("unique_relations", lambda: materialize.top_relations(
+        triples(), cfg.top_n_rel))
+    clusters = table("entity_clusters", lambda: canon.cluster_entities(
+        uniq_ents().select("mention"), embeddings,
+        threshold=cfg.clust_dist_threshold, char_limit=cfg.char_limit))
+
+    def build_final_triples() -> DataFrame:
+        triples_for_canon, uniq_rels_final = triples(), uniq_rels()
+        if cfg.cluster_relations:
+            # same machinery over predicates (rdf_extract.py:119-122);
+            # the substitution maps each pred to its cluster
+            # representative
+            rel_clusters = canon.cluster_entities(
+                uniq_rels_final.select(F.col("pred").alias("mention")),
+                embeddings, threshold=cfg.clust_dist_threshold,
+                char_limit=cfg.char_limit)
+            pred_map = F.broadcast(rel_clusters.select(
+                F.col("mention").alias("pred"),
+                F.col("rep").alias("pred_rep")))
+            triples_for_canon = (
+                triples_for_canon.join(pred_map, "pred", "left")
+                .withColumn("pred", F.coalesce("pred_rep", "pred"))
+                .drop("pred_rep"))
+            # re-apply the top-N truncation on the clustered predicates:
+            # the reference still restricts to the top-relation list
+            # *after* clustering (rdf_extract.py:119-122 → rdf_graph
+            # top-N), so the coalesce above must not let unmapped preds
+            # bypass the cut.
+            uniq_rels_final = materialize.top_relations(
+                triples_for_canon, cfg.top_n_rel)
+        return canon.canonicalize_triples(
+            triples_for_canon.select("subj", "pred", "obj"), clusters(),
+            uniq_rels_final)
+
+    final_triples = table("final_triples", build_final_triples)
+    graph = cache(lambda: materialize.build_graph_tables(final_triples()))
+    table("entities", lambda: graph()["entities"])
+    table("relations", lambda: graph()["relations"])
+    edges = table("edges", lambda: graph()["edges"])
+    table("type_constraints", lambda: materialize.type_constraints(edges()))
+    return thunks
 
 
 def run_pipeline(spark: SparkSession,
@@ -94,100 +195,17 @@ def run_pipeline(spark: SparkSession,
     DataFrames; canonicalization-side tables materialize on first
     access (their clustering kernel is a deliberate bounded-dictionary
     driver pass, canon.cluster_entities)."""
-    cfg = cfg or PipelineConfig()
-    lex, lemmas = default_lexicons()
-    lexset = frozenset(lex)
 
-    extracted = extract_text_stage(documents)
-    if cfg.lang_filter:
-        extracted = extracted.filter(F.col("lang") == cfg.lang_filter)
-    cleaned = clean_text_stage(extracted, lexset)
-    if cfg.coref:
-        from ..functions.coref import resolve_coref_stage
-        cleaned = resolve_coref_stage(cleaned, lex, lemmas)
-        # coref rewrites feed the staged path; the fused path below is
-        # only taken when coref is off (the default, as in the reference)
-    # sentences is a *product* table; without coref it comes from the
-    # single-Arrow-pass fused stage (extract+clean+parse in one
-    # crossing); with coref the staged path is required because the
-    # resolver rewrites the cleaned text. Parity of the two paths is
-    # pytest-pinned.
-    if cfg.coref:
-        sentences = parse_stage(cleaned, lex, lemmas)
-    else:
-        from ..functions.parse import fused_sentences_stage
-        sentences = fused_sentences_stage(documents, lex, lemmas,
-                                          cfg.lang_filter)
-    if cfg.extractor == "textacy":
-        from ..functions.svo_textacy import extract_triples_textacy_stage
-        raw_triples = extract_triples_textacy_stage(sentences)
-    elif cfg.coref:
-        raw_triples = extract_triples_stage(
-            sentences, mention_source=cfg.expand_mentions,
-            gazetteer=cfg.gazetteer)
-    else:
-        # expand_mentions rides the fused pass — no extra Arrow crossing
-        raw_triples = fused_extract_stage(
-            documents, lex, lemmas, cfg.lang_filter,
-            mention_source=cfg.expand_mentions, gazetteer=cfg.gazetteer)
-    triples = normalize_triples(raw_triples, vocab.verb_lemma_table(), lex)
+    def commit(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        df = build()
+        if name == "sentences":
+            # a stage boundary between the parse and the SVO pass, as the
+            # materialized build gets from its sentences commit: chained
+            # Arrow passes in one task each hold a Python worker, which
+            # doubles the workers alive at once. An explicit partition
+            # count, so AQE does not coalesce the extraction onto one core.
+            df = df.repartition(spark.sparkContext.defaultParallelism, "url")
+        return df
 
-    uniq_ents = materialize.top_entities(triples, cfg.top_n_ent)
-    uniq_rels = materialize.top_relations(triples, cfg.top_n_rel)
-
-    from functools import cache
-
-    @cache
-    def clusters() -> DataFrame:
-        return canon.cluster_entities(
-            uniq_ents.select("mention"), embeddings,
-            threshold=cfg.clust_dist_threshold, char_limit=cfg.char_limit)
-
-    @cache
-    def canon_inputs() -> tuple[DataFrame, DataFrame]:
-        """(triples_for_canon, uniq_rels_final)."""
-        if not cfg.cluster_relations:
-            return triples, uniq_rels
-        # same machinery over predicates (rdf_extract.py:119-122); the
-        # substitution maps each pred to its cluster representative
-        rel_clusters = canon.cluster_entities(
-            uniq_rels.select(F.col("pred").alias("mention")), embeddings,
-            threshold=cfg.clust_dist_threshold, char_limit=cfg.char_limit)
-        pred_map = F.broadcast(rel_clusters.select(
-            F.col("mention").alias("pred"), F.col("rep").alias("pred_rep")))
-        mapped = (triples.join(pred_map, "pred", "left")
-                  .withColumn("pred", F.coalesce("pred_rep", "pred"))
-                  .drop("pred_rep"))
-        # re-apply the top-N truncation on the clustered predicates: the
-        # reference still restricts to the top-relation list *after*
-        # clustering (rdf_extract.py:119-122 → rdf_graph top-N), so the
-        # coalesce above must not let unmapped preds bypass the cut.
-        return mapped, materialize.top_relations(mapped, cfg.top_n_rel)
-
-    @cache
-    def final_triples() -> DataFrame:
-        triples_for_canon, uniq_rels_final = canon_inputs()
-        return canon.canonicalize_triples(
-            triples_for_canon.select("subj", "pred", "obj"), clusters(),
-            uniq_rels_final)
-
-    @cache
-    def graph() -> dict[str, DataFrame]:
-        return materialize.build_graph_tables(final_triples())
-
-    return LazyTables({
-        "extracted": lambda: extracted,
-        "cleaned": lambda: cleaned,
-        "sentences": lambda: sentences,
-        "raw_triples": lambda: raw_triples,
-        "triples": lambda: triples,
-        "unique_entities": lambda: uniq_ents,
-        "unique_relations": lambda: uniq_rels,
-        "entity_clusters": clusters,
-        "final_triples": final_triples,
-        "entities": lambda: graph()["entities"],
-        "relations": lambda: graph()["relations"],
-        "edges": lambda: graph()["edges"],
-        "type_constraints": lambda: materialize.type_constraints(
-            graph()["edges"]),
-    })
+    return LazyTables(_tables(documents, embeddings, cfg or PipelineConfig(),
+                              commit))

@@ -10,12 +10,13 @@ writes that layout through either engine:
   bucket(N, rel_id))`` — a hidden-partition bucket transform, the
   canonical Iceberg answer to Zipfian predicate skew; snapshot commits
   give the transactional manifest the lineage layer assumes.
-* **Parquet fallback** (this sandbox has no Iceberg jar): an explicit
-  ``rel_bucket = pmod(hash(rel_id), N)`` partition column +
-  ``partitionBy(rel_bucket)`` + in-partition salt repartition +
-  ``sortWithinPartitions(rel_id, head_id)`` — the same physical
-  layout (bounded files per bucket, clustered scans, predicate
-  pruning on bucket) minus snapshot isolation.
+* **Parquet fallback** (no Iceberg jar on the classpath): ``edges_layout``
+  — an explicit ``rel_bucket = pmod(hash(rel_id), N)`` partition
+  column + a ``(rel_id, salt)`` repartition + ``sortWithinPartitions(
+  rel_id, head_id, tail_id)`` — written with ``partitionBy(rel_bucket)``:
+  the same physical layout (bounded files per bucket, clustered scans,
+  predicate pruning on bucket) minus snapshot isolation. The batch
+  build (``plans.run``) commits its edges stage in this layout too.
 
 Reads reverse the mapping so downstream code sees identical columns
 either way.
@@ -27,8 +28,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators import materialize
+
 REL_BUCKETS = 16
-SALT_BUCKETS = 8
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -46,10 +48,22 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
     return None
 
 
+def edges_layout(edges: DataFrame,
+                 rel_buckets: int = REL_BUCKETS) -> DataFrame:
+    """edges(head_id, tail_id, rel_id) → the same rows plus the
+    ``rel_bucket`` partition column, repartitioned by (rel_id, salt) so
+    a hot predicate spreads over several writers instead of pinning
+    one, and sorted within partitions for clustered scans."""
+    return (materialize.salted(
+        edges.withColumn("rel_bucket",
+                         F.pmod(F.hash("rel_id"), F.lit(rel_buckets))),
+        "rel_id")
+        .sortWithinPartitions("rel_id", "head_id", "tail_id"))
+
+
 def write_edges(spark: SparkSession, edges: DataFrame, base: str,
                 name: str = "edges",
-                rel_buckets: int = REL_BUCKETS,
-                salt_buckets: int = SALT_BUCKETS) -> str:
+                rel_buckets: int = REL_BUCKETS) -> str:
     """edges(head_id, tail_id, rel_id) → bucketed table; returns the
     location (table identifier or path)."""
     cat = iceberg_catalog(spark)
@@ -61,16 +75,8 @@ def write_edges(spark: SparkSession, edges: DataFrame, base: str,
         return ident
 
     path = os.path.join(base, name)
-    salt = F.pmod(F.hash("head_id", "tail_id", "rel_id"),
-                  F.lit(salt_buckets))
-    out = (edges
-           .withColumn("rel_bucket",
-                       F.pmod(F.hash("rel_id"), F.lit(rel_buckets)))
-           # (bucket, salt) repartition: a hot predicate spreads over
-           # salt_buckets writers instead of pinning one
-           .repartition(F.col("rel_bucket"), salt)
-           .sortWithinPartitions("rel_id", "head_id", "tail_id"))
-    out.write.mode("overwrite").partitionBy("rel_bucket").parquet(path)
+    (edges_layout(edges, rel_buckets)
+     .write.mode("overwrite").partitionBy("rel_bucket").parquet(path))
     return path
 
 

@@ -17,13 +17,13 @@ document (no event-time aggregation in the reference's semantics).
 from __future__ import annotations
 
 import glob
-import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.fused import fused_extract_stage
+from ..plans.lineage import footer_rows
+from ..plans.manifest import read_json, write_json
 from ..sources.corpus import DOCUMENTS_SCHEMA
 
 
@@ -80,23 +80,7 @@ def ingest_available_now(spark: SparkSession,
 # --------------------------------------------------------------------------
 
 _WARC_STATE = "_INGEST_STATE.json"
-
-
-def _read_warc_state(state_dir: str) -> dict:
-    p = os.path.join(state_dir, _WARC_STATE)
-    if not os.path.exists(p):
-        return {"last_batch_id": -1, "files": []}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_warc_state(state_dir: str, state: dict) -> None:
-    # atomic swap — readers see the previous committed state or the
-    # new one, never a partial write
-    fd, tmp = tempfile.mkstemp(dir=state_dir, suffix=".state")
-    with os.fdopen(fd, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, os.path.join(state_dir, _WARC_STATE))
+_NO_WARC_STATE = {"last_batch_id": -1, "files": []}
 
 
 def warc_ingest_available_now(spark: SparkSession, warc_dir: str,
@@ -107,21 +91,23 @@ def warc_ingest_available_now(spark: SparkSession, warc_dir: str,
     container format. Returns documents appended this drain.
 
     Structured Streaming has no ``binaryFile`` source, so exactly-once
-    is the manifest protocol proven in ``kg_update``: the processed-
-    file set and last batch id live in an atomically-swapped JSON
-    state; each drain reads ONLY unseen files, writes their parsed
-    documents to a batch-named directory (``b{batch:09d}``), then
-    commits the state. A crash between write and commit leaves an
-    uncommitted directory that the RETRY of the same batch overwrites
-    in place; ``read_ingested_documents`` follows the committed batch
-    list, so readers never observe a half-ingested batch. The state
-    is O(#archive files) — the same bookkeeping a file-source stream
-    checkpoint keeps (Common Crawl: ~90k files per snapshot)."""
+    is the manifest protocol of ``kg_update``: the processed-file set
+    and last batch id live in a JSON state committed through
+    ``plans.manifest``; each drain reads ONLY unseen files, writes
+    their parsed documents to a batch-named directory
+    (``b{batch:09d}``), counts them from its parquet footers (no Spark
+    job), then commits the state. A crash between write and commit
+    leaves an uncommitted directory that the RETRY of the same batch
+    overwrites in place; ``read_ingested_documents`` follows the
+    committed batch list, so readers never observe a half-ingested
+    batch. The state is O(#archive files) — the same bookkeeping a
+    file-source stream checkpoint keeps (Common Crawl: ~90k files per
+    snapshot)."""
     from ..sources.warc import parse_warc_bytes
 
     os.makedirs(state_dir, exist_ok=True)
     os.makedirs(out_dir, exist_ok=True)
-    st = _read_warc_state(state_dir)
+    st = read_json(os.path.join(state_dir, _WARC_STATE), _NO_WARC_STATE)
     done = set(st["files"])
     names = sorted(
         os.path.basename(p)
@@ -150,11 +136,11 @@ def warc_ingest_available_now(spark: SparkSession, warc_dir: str,
     from ..sources.warc import WARC_DOCS_SCHEMA
     (files.mapInPandas(parse, schema=WARC_DOCS_SCHEMA)
      .write.mode("overwrite").parquet(bdir))
-    n = spark.read.parquet(bdir).count()
-    _write_warc_state(state_dir, {
+    n = sum(footer_rows(bdir).values())
+    write_json(os.path.join(state_dir, _WARC_STATE), {
         "last_batch_id": batch_id,
         "files": sorted(done | set(new))})
-    return int(n)
+    return n
 
 
 def read_ingested_documents(spark: SparkSession, out_dir: str,
@@ -163,7 +149,7 @@ def read_ingested_documents(spark: SparkSession, out_dir: str,
     union of batch directories up to the last COMMITTED batch id
     (uncommitted crash leftovers are invisible). None before the
     first committed drain."""
-    st = _read_warc_state(state_dir)
+    st = read_json(os.path.join(state_dir, _WARC_STATE), _NO_WARC_STATE)
     if st["last_batch_id"] < 0:
         return None
     dirs = [os.path.join(out_dir, f"b{b:09d}")

@@ -144,29 +144,6 @@ def test_stage_chunks_source_runs(spark):
     assert n_chunks == n_plain
 
 
-def test_fused_mention_route_matches_staged(spark):
-    """The fused single-pass widening must equal the staged
-    sentences → extract_triples_stage route (same corpus, same
-    gazetteer)."""
-    from multivac_spark.functions.fused import fused_extract_stage
-    from multivac_spark.plans.pipeline import default_lexicons
-
-    lex, lemmas = default_lexicons()
-    docs = corpus.documents_df(spark, 30, partitions=4).localCheckpoint()
-    fused = {tuple(r) for r in fused_extract_stage(
-        docs, lex, lemmas, "en", mention_source="ner",
-        gazetteer=_GAZ).collect()}
-    sents = _sentences_df_from(spark, docs, lex, lemmas)
-    staged = {tuple(r) for r in extract_triples_stage(
-        sents, mention_source="ner", gazetteer=_GAZ).collect()}
-    assert fused == staged and len(fused) > 0
-
-
-def _sentences_df_from(spark, docs, lex, lemmas):
-    from multivac_spark.functions.parse import fused_sentences_stage
-    return fused_sentences_stage(docs, lex, lemmas, "en")
-
-
 def test_pipeline_expand_mentions_route(spark):
     from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
 

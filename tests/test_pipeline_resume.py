@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from multivac_spark.plans import lineage
-from multivac_spark.plans.pipeline import PipelineConfig
+from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
 from multivac_spark.plans.run import run_materialized
 from multivac_spark.sources import corpus
 
@@ -173,18 +173,52 @@ def test_crash_retry_converges(spark, monkeypatch):
         assert got.count() == 100
 
 
-@pytest.mark.parametrize("field, value", [
-    ("coref", True),
-    ("cluster_relations", True),
-    ("extractor", "textacy"),
-    ("expand_mentions", "ner"),
-    ("gazetteer", {"pathogen": "DISEASE"}),
-])
-def test_unsupported_config_is_rejected(spark, tmp_path, field, value):
-    """run_materialized builds only the default KG: a config asking for
-    anything else fails loudly, before any stage runs, instead of
-    quietly building the default KG."""
-    cfg = PipelineConfig(top_n_ent=2000, top_n_rel=50, **{field: value})
-    with pytest.raises(ValueError, match=f"PipelineConfig.{field}="):
-        run_materialized(spark, None, None, str(tmp_path), "runX", cfg)
-    assert not os.listdir(tmp_path)
+def test_triples_come_from_committed_sentences(spark, monkeypatch,
+                                               tmp_path, first_run):
+    """One parse per document per build: a build that crashes right
+    after its ``sentences`` commit resumes with a poisoned (empty)
+    documents frame and still equals a full build, so its triples
+    stage reads the committed sentences, not the documents."""
+    tables, cfg = first_run
+    docs = corpus.documents_df(spark, 120, partitions=4)
+    emb = corpus.embeddings_df(spark)
+    base = str(tmp_path)
+    real = lineage.run_or_resume
+
+    def crash_at_triples(spark_, base_dir, run_id, stage, *a, **k):
+        if stage == "triples":
+            raise RuntimeError("injected crash after the sentences commit")
+        return real(spark_, base_dir, run_id, stage, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(lineage, "run_or_resume", crash_at_triples)
+        with pytest.raises(RuntimeError):
+            run_materialized(spark, docs, emb, base, "runB", cfg)
+    assert lineage.stage_complete(spark, base, "runB", "sentences")
+    assert not lineage.stage_complete(spark, base, "runB", "triples")
+
+    poison = spark.createDataFrame([], corpus.DOCUMENTS_SCHEMA)
+    resumed = run_materialized(spark, poison, emb, base, "runB", cfg)
+    for k in ("triples", "final_triples", "edges"):
+        assert _rows(resumed[k]) == _rows(tables[k]), k
+
+
+@pytest.mark.parametrize("options", [
+    {"coref": True},
+    {"cluster_relations": True},
+    {"extractor": "textacy"},
+    {"expand_mentions": "ner"},
+    {"expand_mentions": "ner", "gazetteer": {"the virus": "MISC"}},
+], ids=["coref", "cluster_relations", "extractor-textacy",
+        "expand_mentions-ner", "expand_mentions-ner-gazetteer"])
+def test_materialized_equals_lazy_pipeline(spark, tmp_path, options):
+    """run_materialized honours every PipelineConfig field: with each
+    non-default option its committed tables equal run_pipeline's."""
+    docs = corpus.documents_df(spark, 40, partitions=2)
+    emb = corpus.embeddings_df(spark)
+    cfg = PipelineConfig(top_n_ent=2000, top_n_rel=50, **options)
+    built = run_materialized(spark, docs, emb, str(tmp_path), "runX", cfg)
+    lazy = run_pipeline(spark, docs, emb, cfg)
+    for k in ("triples", "final_triples"):
+        want = _rows(lazy[k])
+        assert _rows(built[k]) == want and want, k

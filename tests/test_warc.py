@@ -150,8 +150,8 @@ def test_warc_incremental_drain_crash_resume(spark, tmp_path, monkeypatch):
     arrive("crawl-001.warc.gz", 30, 20)
 
     # crash AFTER the batch-1 parquet write, BEFORE the state commit
-    real = ingest._write_warc_state
-    monkeypatch.setattr(ingest, "_write_warc_state",
+    real = ingest.write_json
+    monkeypatch.setattr(ingest, "write_json",
                         lambda *a: (_ for _ in ()).throw(
                             RuntimeError("injected")))
     with pytest.raises(RuntimeError):
@@ -159,7 +159,7 @@ def test_warc_incremental_drain_crash_resume(spark, tmp_path, monkeypatch):
     # committed view still shows only batch 0
     got = ingest.read_ingested_documents(spark, out, state)
     assert got.count() == 30
-    monkeypatch.setattr(ingest, "_write_warc_state", real)
+    monkeypatch.setattr(ingest, "write_json", real)
 
     # retry of the same batch commits, no duplicates
     assert ingest.warc_ingest_available_now(spark, str(wdir), out,
