@@ -299,6 +299,55 @@ def _pagerank_driver(spark, e: DataFrame, n: int, damping: float,
                                                "score": x}))
 
 
+def frontier_reach(adj: DataFrame, start: DataFrame,
+                   max_hops: int | None = None) -> DataFrame:
+    """Semi-naive frontier walk → (``_s`` root, ``_n`` node, ``hops``):
+    every node reachable from a root through ``adj(u, v)``, once per
+    root, at its least hop count. ``start(_s, _n)`` holds the distinct
+    (root, node) rows at hop 0; ``max_hops`` stops after that many
+    rounds (None: walk until no new node is reached).
+
+    ``adj`` must already be cut with ``stats_barrier``: the loop joins
+    it every round, and an uncut slice would re-run its upstream scan
+    per round. Each round joins the newest delta against ``adj`` on one
+    key, takes ``distinct``, anti-joins the reached set, and cuts the
+    new delta — hop number included — with one ``stats_barrier``
+    (without the cut, Catalyst's BigInt size stats square per round;
+    see session.stats_barrier). The reached set stays a plan-level
+    union of those disjoint materialized deltas: checkpointing the
+    union itself would pin O(rounds × reached) blocks, the shape that
+    OOM'd a 24 GB heap on the sf1.0 transitive closure (24.9M pairs).
+
+    Work shape: each round costs |delta| × fanout, never reached ⋈
+    reached. Pointer doubling (P ∪ P∘P) was measured 6.5× slower on
+    the sf0.1 KG's densest predicate slice (1,332 edges → 390,590
+    reachability pairs, 34.1 s vs 5.2 s): its round-2/3 self-joins build a ~100M-row
+    intermediate that distinct() then crushes, while the delta chain
+    peaks at |delta| × fanout ≈ 1M. Rounds equal the walk's depth, and
+    a diameter-D digraph has ≥ D(D+1)/2 reachable pairs, so an
+    unbounded walk from every edge runs ≤ √(2·output) rounds.
+    """
+    from ..session import stats_barrier
+
+    delta = stats_barrier(start.select("_s", "_n", F.lit(0).alias("hops")))
+    reached = delta
+    hop = 0
+    while max_hops is None or hop < max_hops:
+        hop += 1
+        delta = stats_barrier(
+            adj.join(delta.select("_s", F.col("_n").alias("u")), "u")
+            .select("_s", F.col("v").alias("_n")).distinct()
+            .join(reached.select("_s", "_n"), ["_s", "_n"], "left_anti")
+            .withColumn("hops", F.lit(hop)))
+        reached = reached.unionByName(delta)
+        # an emptiness probe is one Spark job: none for the start frame
+        # (an empty one just yields an empty first round) and none after
+        # the last allowed round, where it would decide nothing
+        if hop != max_hops and delta.isEmpty():
+            break
+    return reached
+
+
 def k_hop(edges: DataFrame, seeds: DataFrame, k: int,
           direction: str = "both", src: str = "head_id",
           dst: str = "tail_id") -> DataFrame:
@@ -309,34 +358,22 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int,
     The subgraph-extraction primitive for KG question answering
     (restrict a query to the k-neighborhood of its seed entities)
     that the reference delegates to in-memory networkx traversals.
-    Frontier BFS: each round expands only the newest frontier through
-    one keyed equi-join + distinct, anti-joins away already-visited
-    nodes, and cuts lineage with ``stats_barrier`` — k rounds total,
+    `frontier_reach` from the seeds as one root, at most k rounds,
     never an all-pairs expansion. ``direction``: ``out`` follows
     src→dst, ``in`` follows dst→src, ``both`` treats edges as
-    undirected.
+    undirected (`_sym`).
     """
     from ..session import stats_barrier
 
     if direction not in ("out", "in", "both"):
         raise ValueError(f"direction must be out|in|both, got {direction}")
-    fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    rev = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    adj = {"out": fwd, "in": rev, "both": fwd.union(rev)}[direction]
-    adj = stats_barrier(adj.filter(F.col("u") != F.col("v")).distinct())
-
-    seed_col = seeds.columns[0]
-    visited = seeds.select(F.col(seed_col).alias("node")).distinct() \
-        .withColumn("hops", F.lit(0))
-    frontier = visited.select("node")
-    for depth in range(1, k + 1):
-        nxt = (adj.join(frontier.withColumnRenamed("node", "u"), "u")
-               .select(F.col("v").alias("node")).distinct()
-               .join(visited.select("node"), "node", "left_anti"))
-        frontier = stats_barrier(nxt)
-        if frontier.isEmpty():
-            break
-        visited = stats_barrier(
-            visited.unionByName(
-                frontier.withColumn("hops", F.lit(depth))))
-    return visited
+    if direction == "both":
+        adj = _sym(edges, src, dst)
+    else:
+        u, v = (src, dst) if direction == "out" else (dst, src)
+        adj = (edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
+               .filter(F.col("u") != F.col("v")).distinct())
+    start = seeds.select(F.lit(0).alias("_s"),
+                         F.col(seeds.columns[0]).alias("_n")).distinct()
+    return (frontier_reach(stats_barrier(adj), start, max_hops=k)
+            .select(F.col("_n").alias("node"), "hops"))

@@ -16,9 +16,10 @@ Spark-first replacement:
 2. random-hyperplane LSH blocking: banded sign-signatures over seeded
    hyperplanes, candidate pairs from equal band keys only (no O(n²));
 3. exact cosine on candidates, keep dist ≤ threshold → similarity edges;
-4. connected components by iterative min-label propagation (small-star
-   style; components here are near-duplicate groups, diameter ~2, so
-   convergence takes ≤ a handful of rounds) — GraphFrames-free;
+4. connected components by min-label propagation with pointer doubling
+   (driver union-find when the edge set is small enough to collect);
+   the distributed loop converges in O(log diameter) rounds —
+   GraphFrames-free;
 5. representative aggregation + broadcast-join substitution.
 
 Documented divergence (SURVEY.md §2.6): single-linkage-over-threshold
@@ -291,8 +292,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
       on the driver replaces 5+ shuffle rounds with one collect +
       one broadcast-joinable label map.
     * **distributed min-label propagation** otherwise: symmetrized
-      edges, one shuffle per round, localCheckpoint per round to cut
-      lineage; rounds ≈ component diameter.
+      edges, a one-hop neighbor-min step then a pointer-doubling jump
+      (label := label(label)) per round, one ``stats_barrier`` per round
+      to cut lineage and stats; rounds = O(log component diameter).
     """
     n_edges = edges.count()
     if n_edges < driver_fastpath_edges:

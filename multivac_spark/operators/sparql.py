@@ -141,6 +141,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, functions as F
 
 from ..sources.ntriples import DEFAULT_BASE
+from .analytics import frontier_reach
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -1180,9 +1181,9 @@ def _scan(triples: DataFrame, p: _Pattern, idx: int) -> tuple:
     """One pattern → (frame with variable-named columns, var set).
 
     Constant terms become pushed-down equality filters; a ``<p>+``
-    path pattern evaluates to its reachability pairs first (seeded
-    BFS when an endpoint is ground, pointer-doubling closure when
-    both are variables)."""
+    path pattern evaluates to its reachability pairs first
+    (`_path_pairs`: a semi-naive frontier walk, seeded from a ground
+    endpoint when there is one)."""
     if p.path:
         return _bind(_path_pairs(triples, p),
                      list(zip(("_ps", "_po"), (p.terms[0], p.terms[2]))),
@@ -1204,200 +1205,80 @@ def _edge_slice(triples: DataFrame, pred_term) -> DataFrame:
             .distinct())
 
 
-def _path_pairs(triples: DataFrame, p: _Pattern) -> DataFrame:
+def _path_pairs(triples: DataFrame, p: _Pattern,
+                seeds: DataFrame | None = None,
+                forward: bool = True) -> DataFrame:
     """All (``_ps``, ``_po``) pairs the path pattern connects:
     ``<p>+`` = ≥1 edges, ``<p>*`` = that plus the zero-length
     identity, ``<p>?`` = zero or one edge (§9.1; the zero-length
     path relates every graph term to itself, and a ground endpoint
     to itself even off-graph, as in the W3C ZeroLengthPath algebra).
 
-    Scale shape: the edge slice is a pushed-down pred filter. A
-    ground endpoint turns the closure into a seeded frontier BFS —
-    work proportional to the REACHABLE set (the `analytics.k_hop`
-    shape), never the graph. Only the both-variable form pays the
-    full transitive closure, and that runs semi-naive (delta ⋈ edges
-    per round — see `_closure` for the measured case against pointer
-    doubling) with `stats_barrier` lineage/stats cuts per round (the
-    Catalyst BigInt-stats trap documented in session.stats_barrier).
-    A both-variable path whose endpoint is bound by earlier patterns
-    never reaches here — `_solve` routes it to `_scan_seeded`."""
-    mode = p.path
-    edges = _edge_slice(triples, p.terms[1])
-    s_kind, s_val = p.terms[0]
-    o_kind, o_val = p.terms[2]
-    if s_kind == "const" or o_kind == "const":
-        seed, forward = ((s_val, True) if s_kind == "const"
-                         else (o_val, False))
-        if mode == "?":
-            src, dst = ("_ps", "_po") if forward else ("_po", "_ps")
-            reach = (edges.filter(F.col(src) == seed)
-                     .select(F.col(dst).alias("_n")).distinct())
-        else:
-            reach = _bfs(edges, seed, forward)
-        if mode in ("*", "?"):  # zero-length: the seed matches itself
-            one = triples.sparkSession.createDataFrame(
-                [(seed,)], "_n string")
-            reach = reach.unionByName(one).distinct()
-        if forward:
-            return reach.select(F.lit(seed).alias("_ps"),
-                                F.col("_n").alias("_po"))
-        return reach.select(F.col("_n").alias("_ps"),
-                            F.lit(seed).alias("_po"))
-    if mode == "+":
-        return _closure(edges)
-    base = edges if mode == "?" else _closure(edges)
-    nodes = (triples.select(F.col("subj").alias("_n"))
-             .unionByName(triples.select(F.col("obj").alias("_n")))
-             .distinct())
-    ident = nodes.select(F.col("_n").alias("_ps"),
-                         F.col("_n").alias("_po"))
-    return base.unionByName(ident).distinct()
-
-
-def _bfs(edges: DataFrame, seed: str, forward: bool) -> DataFrame:
-    """Nodes reachable from ``seed`` by ≥1 hops (column ``_n``)."""
+    ``seeds(_s)`` are the distinct values of the walked endpoint —
+    the subject when ``forward``, else the object — that earlier
+    patterns bound (`_scan_seeded`); a ground endpoint seeds the walk
+    itself. Every shape is one `analytics.frontier_reach` over the
+    pushed-down edge slice and differs only in its start frame: the
+    seeds' one-edge successors, or every edge when there are no seeds
+    (the full closure). Work is proportional to the seeds' reachable
+    set, never the graph, unless no endpoint is known. ``?`` is the
+    start frame itself, with no walk; ``*`` and ``?`` add the identity
+    rows of the seeds, or of every graph term without seeds."""
     from ..session import stats_barrier
 
-    # materialize the edge slice ONCE: the loop references it every
-    # round, and without the cut each round would re-run the filtered
-    # scan of the triples table (rounds × scan cost at 100 TB)
-    edges = stats_barrier(edges)
+    (s_kind, s_val), (o_kind, o_val) = p.terms[0], p.terms[2]
+    if seeds is None and "const" in (s_kind, o_kind):
+        forward = s_kind == "const"
+        # a JVM-side one-row frame: createDataFrame([(v,)]) is a Python
+        # RDD, and joining it costs a Python-worker round trip
+        seeds = triples.sparkSession.range(1).select(
+            F.lit(s_val if forward else o_val).alias("_s"))
     src, dst = ("_ps", "_po") if forward else ("_po", "_ps")
-    frontier = stats_barrier(
-        edges.filter(F.col(src) == seed)
-        .select(F.col(dst).alias("_n")).distinct())
-    acc = frontier
-    while not frontier.isEmpty():
-        step = stats_barrier(
-            edges.join(frontier.withColumnRenamed("_n", src), src)
-            .select(F.col(dst).alias("_n")).distinct()
-            .join(acc, "_n", "left_anti"))
-        # step is anti-joined against acc, so the union is distinct
-        # by construction — no re-distinct of the whole reached set.
-        # Only the DELTA is checkpointed; acc stays a plan-level
-        # union of already-materialized disjoint parts. Checkpointing
-        # the union itself would pin O(rounds × reached-set) blocks
-        # (each round's copy survives via the next round's lineage) —
-        # the sf1.0 closure leg OOM'd a 24 GB heap exactly that way.
-        acc = acc.unionByName(step)
-        frontier = step
-    return acc
-
-
-def _bfs_multi(edges: DataFrame, seeds: DataFrame,
-               forward: bool) -> DataFrame:
-    """(``_s`` root, ``_n`` node) pairs: every node reachable from
-    each seed by ≥1 hops. The multi-source generalization of `_bfs`
-    — semi-naive per-root frontiers, so total work is ∝ Σ per-seed
-    reachable set (output-bounded), never the graph's full closure."""
-    from ..session import stats_barrier
-
-    edges = stats_barrier(edges)  # one scan, not one per round
-    src, dst = ("_ps", "_po") if forward else ("_po", "_ps")
-    frontier = stats_barrier(
-        edges.join(seeds.withColumnRenamed("_s", "_sv"),
-                   F.col(src) == F.col("_sv"))
-        .select(F.col("_sv").alias("_s"), F.col(dst).alias("_n"))
-        .distinct())
-    acc = frontier
-    while not frontier.isEmpty():
-        step = stats_barrier(
-            edges.join(frontier.withColumnRenamed("_n", src), src)
-            .select("_s", F.col(dst).alias("_n")).distinct()
-            .join(acc, ["_s", "_n"], "left_anti"))
-        # delta-only checkpointing — see _bfs for the O(rounds × acc)
-        # block-pinning trap this avoids
-        acc = acc.unionByName(step)
-        frontier = step
-    return acc
+    adj = _edge_slice(triples, p.terms[1]).select(
+        F.col(src).alias("u"), F.col(dst).alias("v"))
+    if p.path != "?":
+        adj = stats_barrier(adj)  # the walk scans its edge slice once
+    if seeds is None:
+        start = adj.select(F.col("u").alias("_s"), F.col("v").alias("_n"))
+    else:
+        start = (adj.join(seeds, F.col("u") == F.col("_s"))
+                 .select("_s", F.col("v").alias("_n")))
+    reach = (start if p.path == "?"
+             else frontier_reach(adj, start).select("_s", "_n"))
+    if p.path in ("*", "?"):
+        if seeds is None:
+            seeds = (triples.select(F.col("subj").alias("_s"))
+                     .unionByName(triples.select(F.col("obj").alias("_s")))
+                     .distinct())
+        reach = reach.unionByName(
+            seeds.select("_s", F.col("_s").alias("_n"))).distinct()
+    return reach.select(F.col("_s").alias(src), F.col("_n").alias(dst))
 
 
 def _scan_seeded(triples: DataFrame, p: _Pattern, acc: DataFrame,
                  bound: set, idx) -> tuple:
     """A both-variable path pattern whose endpoint variable is already
-    bound by the accumulated join: evaluate it as a multi-source BFS
-    from the DISTINCT bound values instead of materializing the full
-    transitive closure. ``?s <name> "alice" . ?s <knows>+ ?o`` then
-    does work proportional to alice's reachable set, not every
-    reachability pair in the graph — the difference between
-    output-bounded and graph-bounded at 100×.
+    bound by the accumulated join: walk it from the DISTINCT bound
+    values instead of materializing the full transitive closure.
+    ``?s <name> "alice" . ?s <knows>+ ?o`` then does work proportional
+    to alice's reachable set, not every reachability pair in the
+    graph — the difference between output-bounded and graph-bounded
+    at 100×. Seeds come from pattern scans of the triples table, so
+    they are graph terms: their identity rows (``*`` / ``?``) are
+    exactly those the unseeded form would keep after the join.
 
-    The seed set is `stats_barrier`'d: the BFS loop re-references it
-    every round, and without the lineage cut each round would replay
-    the whole upstream join (and Catalyst's BigInt size-stats would
-    square per round — see session.stats_barrier)."""
+    The seed set is `stats_barrier`'d: the walk's start frame joins
+    it, and without the lineage cut that join would replay the whole
+    upstream join (and carry its BigInt size stats forward — see
+    session.stats_barrier)."""
     from ..session import stats_barrier
 
     s_term, o_term = p.terms[0], p.terms[2]
-    forward = s_term[0] == "var" and s_term[1] in bound
+    forward = s_term[1] in bound
     var = s_term[1] if forward else o_term[1]
-    seeds = stats_barrier(
-        acc.select(F.col(var).alias("_s")).distinct())
-    edges = _edge_slice(triples, p.terms[1])
-    mode = p.path
-    src, dst = ("_ps", "_po") if forward else ("_po", "_ps")
-    if mode == "?":
-        reach = (edges.join(seeds.withColumnRenamed("_s", "_sv"),
-                            F.col(src) == F.col("_sv"))
-                 .select(F.col("_sv").alias("_s"),
-                         F.col(dst).alias("_n")).distinct())
-    else:
-        reach = _bfs_multi(edges, seeds, forward)
-    if mode in ("*", "?"):
-        # zero-length: each seed relates to itself. Seeds come from
-        # pattern scans of the triples table, so they are graph terms
-        # — exactly the identity rows the unseeded form would keep
-        # after the join.
-        reach = reach.unionByName(
-            seeds.select("_s", F.col("_s").alias("_n"))).distinct()
-    pairs = (reach.select(F.col("_s").alias("_ps"),
-                          F.col("_n").alias("_po"))
-             if forward else
-             reach.select(F.col("_n").alias("_ps"),
-                          F.col("_s").alias("_po")))
-    return _bind(pairs, list(zip(("_ps", "_po"), (s_term, o_term))),
-                 idx)
-
-
-def _closure(edges: DataFrame) -> DataFrame:
-    """Full transitive closure, semi-naive: each round extends only
-    the DELTA (pairs first reached last round) by one edge hop, then
-    anti-joins the accumulated pairs.
-
-    Work shape: the per-round join is |delta| × edge-fanout — never
-    pairs ⋈ pairs. Pointer doubling (P ∪ P∘P) was measured 6.5×
-    slower on the sf0.1 KG's densest predicate slice (1,332 edges →
-    390,590 reachability pairs): its round-2/3 self-joins build a
-    ~100M-row intermediate that distinct() then crushes, while the
-    delta chain peaks at |delta|×fanout ≈ 1M. Rounds equal graph
-    diameter, but any diameter-D digraph has ≥ D(D+1)/2 reachable
-    pairs, so rounds ≤ √(2·output) — the loop is output-bounded, and
-    each round is stats_barrier'd against the Catalyst BigInt-stats
-    squaring trap (see session.stats_barrier)."""
-    from ..session import stats_barrier
-
-    paths = stats_barrier(edges)
-    # the per-round extension side comes from the MATERIALIZED slice,
-    # not the raw edges lineage — otherwise every round re-runs the
-    # filtered triples scan
-    right = paths.select(F.col("_ps").alias("_m"),
-                         F.col("_po").alias("_pe"))
-    delta = paths
-    while True:
-        ext = (delta.join(right, delta["_po"] == right["_m"])
-               .select("_ps", F.col("_pe").alias("_po")).distinct())
-        new = stats_barrier(ext.join(paths, ["_ps", "_po"], "left_anti"))
-        if new.isEmpty():
-            return paths
-        # checkpoint ONLY the delta; the accumulated set is a union of
-        # disjoint materialized deltas. Re-checkpointing the union each
-        # round stores every round's full copy (pinned by the next
-        # round's lineage): O(rounds × closure) blocks — the shape that
-        # OOM'd a 24 GB heap on the sf1.0 closure (24.9M pairs). The
-        # union keeps total block storage at exactly |closure|, and the
-        # per-round anti-join probe work is unchanged.
-        paths = paths.unionByName(new)
-        delta = new
+    seeds = stats_barrier(acc.select(F.col(var).alias("_s")).distinct())
+    return _bind(_path_pairs(triples, p, seeds, forward),
+                 list(zip(("_ps", "_po"), (s_term, o_term))), idx)
 
 
 def _union_frame(triples: DataFrame, u: _Union, idx) -> tuple:
@@ -1458,7 +1339,7 @@ def _solve(triples: DataFrame, q: _Query) -> tuple:
         if isinstance(p, _Pattern) and p.path \
                 and p.terms[0][0] == "var" and p.terms[2][0] == "var" \
                 and bound & {p.terms[0][1], p.terms[2][1]}:
-            # both-variable path with a bound endpoint: seeded BFS
+            # both-variable path with a bound endpoint: a seeded walk
             # instead of the full closure (a const endpoint already
             # seeds inside _path_pairs)
             frame, pvars = _scan_seeded(triples, p, acc, bound, i)

@@ -135,3 +135,28 @@ def test_k_hop_bad_direction(spark):
     seeds = spark.createDataFrame([(0,)], "node long")
     with pytest.raises(ValueError):
         analytics.k_hop(df, seeds, 1, "sideways")
+
+
+def test_k_hop_checkpoints_only_deltas(spark, monkeypatch):
+    """Each round checkpoints only the newly reached nodes: walking an
+    n-edge chain materializes ≤ 2n+1 rows in total (the adjacency,
+    the seed and one row per reached node), not the whole reached set
+    once per round (O(n²) rows)."""
+    from multivac_spark import session
+
+    n = 30
+    checkpointed = []
+    orig = session.stats_barrier
+
+    def counting(df):
+        out = orig(df)
+        checkpointed.append(out.count())
+        return out
+
+    monkeypatch.setattr(session, "stats_barrier", counting)
+    df = _edges_df(spark, [(i, i + 1) for i in range(n)])
+    seeds = spark.createDataFrame([(0,)], "node long")
+    got = {(r["node"], r["hops"])
+           for r in analytics.k_hop(df, seeds, n, "out").collect()}
+    assert got == {(i, i) for i in range(n + 1)}
+    assert sum(checkpointed) <= 2 * n + 1, sum(checkpointed)

@@ -877,12 +877,18 @@ def test_duckdb_twin_on_pipeline_triples(spark):
 
 def test_seeded_path_skips_full_closure(triples, monkeypatch):
     """A both-variable path whose endpoint is bound by earlier
-    patterns must evaluate as a seeded BFS — `_closure` (the full
-    transitive closure) may not run."""
+    patterns must walk from the bound values — `_path_pairs` may not
+    run unseeded (the full transitive closure) on a both-variable
+    path."""
     calls = []
-    orig = S._closure
-    monkeypatch.setattr(
-        S, "_closure", lambda e: calls.append(1) or orig(e))
+    orig = S._path_pairs
+
+    def spy(triples, p, seeds=None, forward=True):
+        if seeds is None and p.terms[0][0] == p.terms[2][0] == "var":
+            calls.append(1)
+        return orig(triples, p, seeds, forward)
+
+    monkeypatch.setattr(S, "_path_pairs", spy)
     got = run(triples, """
         SELECT ?s ?o WHERE { ?s "mutate" ?g . ?s "infect"+ ?o }""")
     assert got == [("virus x", "cell")]
