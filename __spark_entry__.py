@@ -1531,8 +1531,9 @@ def q_kg_incremental_counts(spark, sf_dir):
     from multivac_spark.plans.pipeline import default_lexicons
     from multivac_spark.sources import corpus, vocab
     from multivac_spark.streaming.ingest import ingest_available_now
+    from multivac_spark.operators.materialize import top_n
     from multivac_spark.streaming.kg_update import (
-        counts_update_available_now, read_counts, top_from_counts)
+        counts_update_available_now, read_counts)
 
     lex, lemmas = default_lexicons()
     vl = vocab.verb_lemma_table()
@@ -1547,8 +1548,7 @@ def q_kg_incremental_counts(spark, sf_dir):
                                  normalize=True, verb_lemmas=vl)
             counts_update_available_now(spark, f"{d}/triples",
                                         counts_dir, f"{d}/ckpt_c")
-        top = top_from_counts(
-            read_counts(spark, counts_dir, "entities"), "mention", 10)
+        top = top_n(read_counts(spark, counts_dir, "entities"), "mention", 10)
         # localCheckpoint: the tmp dir dies with the `with` block, so
         # materialize before leaving it
         return top.localCheckpoint()

@@ -18,10 +18,7 @@ from typing import Iterator
 import pandas as pd
 
 from .parse import article_texts, parse_document
-from .svo import extract_svo
-
-TRIPLES_SCHEMA = ("url string, sent_id int, rdf_idx int, "
-                  "subj string, pred string, obj string")
+from .svo import TRIPLES_SCHEMA, extract_svo
 
 
 def fused_extract_stage(documents, lexicon: dict[str, str],

@@ -36,13 +36,12 @@ from typing import Iterator
 
 import pandas as pd
 
+from .svo import TRIPLES_SCHEMA
+
 OBJECTS_TO_REPLACE = {"that", "which"}            # rdf_extract.py:23
 NORM_REGEX_CHARS1 = re.compile(                   # rdf_extract.py:25
     r'[\(\)\"\‘\,\.\%\{\}\`\\\:\[\]\“\•]+')
 NORM_REGEX_CHARS2 = re.compile(r'^([\-\—\–]|(’s)|(’))\s?')
-
-TRIPLES_SCHEMA = ("url string, sent_id int, rdf_idx int, "
-                  "subj string, pred string, obj string")
 
 _HAS_DIGIT = re.compile(r"[0-9]")
 

@@ -69,41 +69,16 @@ def mention_embeddings(mentions: DataFrame, embeddings: DataFrame) -> DataFrame:
                     .alias("vector")))
 
 
-def mention_embeddings_broadcast(mentions: DataFrame,
-                                 embeddings: DataFrame) -> DataFrame:
-    """Broadcast-dictionary variant (the north-star wording): the token→
-    vector dict rides into a vectorized pandas UDF; one narrow pass, no
-    shuffle at all. Preferred when the embedding vocabulary fits the
-    driver (GloVe-sized dictionaries); the relational variant above is
-    the fallback for unbounded vocabularies. Same output, pytest-pinned."""
-    import pandas as pd
-
-    spark = mentions.sparkSession
-    rows = embeddings.collect()
-    tok_vec = {r["token"]: np.asarray(r["vector"], dtype=np.float64)
-               for r in rows}
-    bc = spark.sparkContext.broadcast(tok_vec)
-
-    def run(batches):
-        d = bc.value
-        for pdf in batches:
-            out_m, out_v = [], []
-            for m in pdf["mention"]:
-                tv = [d[t] for t in m.split() if t in d]
-                if not tv:
-                    continue
-                out_m.append(m)
-                out_v.append([float(x) for x in np.mean(tv, axis=0)])
-            yield pd.DataFrame({"mention": pd.Series(out_m, dtype=object),
-                                "vector": pd.Series(out_v, dtype=object)})
-
-    return mentions.select("mention").mapInPandas(
-        run, schema="mention string, vector array<float>")
-
-
 # --------------------------------------------------------------------------
 # 2-3. LSH blocking + exact cosine on candidates
 # --------------------------------------------------------------------------
+
+# the LSH banding of both clustering paths: N_PLANES sign bits split into
+# BANDS bands; a band bucket of more than MAX_BUCKET mentions is skipped
+N_PLANES = 64
+BANDS = 8
+MAX_BUCKET = 1000
+
 
 def _seeded_planes(n_planes: int, dim: int, seed: str = "multivac-lsh") -> np.ndarray:
     s = int.from_bytes(hashlib.sha256(seed.encode()).digest()[:4], "big")
@@ -177,14 +152,11 @@ def average_linkage_labels(unit_vecs: np.ndarray,
 
 def similarity_edges(vectors: DataFrame,
                      threshold: float = DEFAULT_THRESHOLD,
-                     n_planes: int = 64,
-                     bands: int = 8,
-                     max_bucket: int = 1000,
                      key: str = "mention") -> DataFrame:
     """(key, vector) → (src, dst) pairs with cosine distance ≤ threshold.
 
-    Banded random-hyperplane signatures: ``n_planes`` sign bits split
-    into ``bands`` bands; a pair is a candidate iff it agrees on all
+    Banded random-hyperplane signatures: ``N_PLANES`` sign bits split
+    into ``BANDS`` bands; a pair is a candidate iff it agrees on all
     bits of at least one band. With 8 bands × 8 rows: near-duplicate
     pairs (dist ≤ 0.1, per-bit agree p≈0.86) collide with
     1-(1-p⁸)⁸ ≈ 0.93 — and transitive closure through connected
@@ -207,8 +179,8 @@ def similarity_edges(vectors: DataFrame,
     construction); dropDuplicates shuffles only final-edge-scale rows."""
     import pandas as pd
 
-    planes = _seeded_planes(n_planes, EMBED_DIM)
-    rows_per_band = n_planes // bands
+    planes = _seeded_planes(N_PLANES, EMBED_DIM)
+    rows_per_band = N_PLANES // BANDS
 
     def signatures(batches):
         for pdf in batches:
@@ -219,7 +191,7 @@ def similarity_edges(vectors: DataFrame,
                                     "bkeys": []})
                 continue
             Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            bits = (Xn @ planes.T > 0).astype(np.uint8)  # (n, n_planes)
+            bits = (Xn @ planes.T > 0).astype(np.uint8)  # (n, N_PLANES)
             bkeys, signed = [], []
             for row in bits:
                 s = "".join("1" if b else "0" for b in row)
@@ -227,7 +199,7 @@ def similarity_edges(vectors: DataFrame,
                 signed.append(v - (1 << 64) if v >= (1 << 63) else v)
                 bkeys.append(
                     [f"{bi}:{s[bi * rows_per_band:(bi + 1) * rows_per_band]}"
-                     for bi in range(bands)])
+                     for bi in range(BANDS)])
             yield pd.DataFrame({key: pdf[key],
                                 "uvec": [r.tolist() for r in Xn],
                                 "sigbits": signed,
@@ -239,17 +211,17 @@ def similarity_edges(vectors: DataFrame,
                 "bkeys array<string>"))
     sig = sig.localCheckpoint()
 
-    # Hamming cut: E[hamming] = n_planes * acos(1-threshold)/π at the
+    # Hamming cut: E[hamming] = N_PLANES * acos(1-threshold)/π at the
     # threshold, plus ~2.5σ headroom so true pairs survive.
     import math
     p_diff = math.acos(1.0 - threshold) / math.pi
-    cut = int(n_planes * p_diff + 2.5 * math.sqrt(
-        n_planes * p_diff * (1 - p_diff)))
+    cut = int(N_PLANES * p_diff + 2.5 * math.sqrt(
+        N_PLANES * p_diff * (1 - p_diff)))
 
     buckets = sig.select(key, "sigbits", F.explode("bkeys").alias("bkey"))
     sizes = buckets.groupBy("bkey").agg(F.count("*").alias("bsz"))
     buckets = (buckets.join(F.broadcast(
-        sizes.filter(F.col("bsz") <= max_bucket).select("bkey")), "bkey"))
+        sizes.filter(F.col("bsz") <= MAX_BUCKET).select("bkey")), "bkey"))
 
     a = buckets.select(F.col(key).alias("src"), F.col("sigbits").alias("sa"),
                        "bkey")
@@ -431,19 +403,23 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
                      driver_fastpath_edges: int = 5_000_000) -> DataFrame:
     """End-to-end: mentions(mention) → (mention, label, rep).
 
-    Two paths with identical algorithm (same planes, same banding, same
-    Hamming cut, same union-find semantics):
+    Two paths with the same planes, the same banding (``N_PLANES``,
+    ``BANDS``, ``MAX_BUCKET``) and the same union-find semantics. Only
+    the distributed path applies the Hamming prefilter; the driver path
+    runs the exact cosine on every bucket pair, so its candidate set is
+    a superset (parity pinned by test):
 
-    * **driver fast path** (default when the mention dictionary is
-      ≤ 200k entries — it always is: top_n_ent=50000 by reference
-      design, rdf_graph.py:25): collect mentions + the needed token
-      vectors, run the LSH → exact-cosine → union-find kernel as one
-      numpy pass, broadcast the label map back. This is the same
-      in-memory shape as the reference's own cluster_entities
-      (rdf_graph.py:86-111) minus the O(n²) pdist, and it collapses
-      ~10 tiny Spark jobs into one collect + one broadcast — the jobs
-      were pure scheduling overhead at any cluster size, because the
-      dictionary does not grow with the corpus.
+    * **driver fast path** (when the mention dictionary has ≤ 200k
+      entries — the default build's does, top_n_ent=50000 by reference
+      design, rdf_graph.py:25; ``top_n_ent=None`` does not bound it):
+      collect mentions + the needed token vectors, run the LSH →
+      exact-cosine → union-find kernel as one numpy pass, broadcast
+      the label map back. This is the same in-memory shape as the
+      reference's own cluster_entities (rdf_graph.py:86-111) minus the
+      O(n²) pdist, and it collapses ~10 tiny Spark jobs into one
+      collect + one broadcast — the jobs were pure scheduling overhead
+      at any cluster size, because the dictionary does not grow with
+      the corpus.
     * **distributed path** otherwise: checkpointed mention embeddings,
       banded-LSH similarity join, distributed/driver CC
       (``driver_fastpath_edges`` is passed through, so ``=0`` on both
@@ -497,9 +473,7 @@ def refine_components(labels: DataFrame, vecs: DataFrame,
 
 
 def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
-                             threshold: float, char_limit: int,
-                             n_planes: int = 64, bands: int = 8,
-                             max_bucket: int = 1000) -> DataFrame:
+                             threshold: float, char_limit: int) -> DataFrame:
     """Driver-side kernel: identical semantics to the distributed path."""
     from collections import defaultdict
 
@@ -556,9 +530,9 @@ def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
             acc += E[idx2d[:, j]]
         X[np.asarray(mention_pos)] = acc / k
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    planes = _seeded_planes(n_planes, X.shape[1])
+    planes = _seeded_planes(N_PLANES, X.shape[1])
     bits = (Xn @ planes.T > 0)
-    rows_per_band = n_planes // bands
+    rows_per_band = N_PLANES // BANDS
 
     # union-find (rank-free, path-halving). Root choice is irrelevant to
     # the output: roots are only dict keys for the block partition — the
@@ -578,7 +552,7 @@ def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
     # Python scan per band
     pow2 = (1 << np.arange(rows_per_band - 1, -1, -1)).astype(np.uint64)
     buckets: dict[tuple, np.ndarray] = {}
-    for b in range(bands):
+    for b in range(BANDS):
         seg = bits[:, b * rows_per_band:(b + 1) * rows_per_band]
         keys = seg.astype(np.uint64) @ pow2
         order = np.argsort(keys, kind="stable")
@@ -589,7 +563,7 @@ def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
             if e - s > 1:
                 buckets[(b, int(sk[s]))] = order[s:e]
 
-    # per bucket: ONE cosine matmul (≤ max_bucket² × dim flops), then
+    # per bucket: ONE cosine matmul (≤ MAX_BUCKET² × dim flops), then
     # union every pair within the distance threshold. The distributed
     # path's Hamming prefilter (`cut`) is deliberately NOT applied here:
     # on the driver the exact matmul is BLAS-cheap, and skipping the
@@ -602,7 +576,7 @@ def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
     ea: list[np.ndarray] = []
     eb: list[np.ndarray] = []
     for idx in buckets.values():
-        if len(idx) > max_bucket:
+        if len(idx) > MAX_BUCKET:
             continue
         sub = Xn[idx]
         sims = sub @ sub.T

@@ -32,22 +32,33 @@ TOP_N_REL = 50      # rdf_graph.py:24
 SALT_BUCKETS = 16
 
 
-def top_entities(triples: DataFrame, n: int | None = TOP_N_ENT) -> DataFrame:
-    """Flatten subj+obj, count, keep top-n. Ties broken lexicographically
-    (documented divergence from Counter insertion order)."""
-    ents = triples.select(
-        F.explode(F.array("subj", "obj")).alias("mention"))
-    counted = ents.groupBy("mention").agg(F.count("*").alias("cnt"))
+def entity_counts(triples: DataFrame) -> DataFrame:
+    """(mention, cnt): subj and obj each count once per row (per-row
+    occurrences, not distinct triples)."""
+    return (triples.select(F.explode(F.array("subj", "obj")).alias("mention"))
+            .groupBy("mention").agg(F.count("*").alias("cnt")))
+
+
+def relation_counts(triples: DataFrame) -> DataFrame:
+    """(pred, cnt): one per row."""
+    return triples.groupBy("pred").agg(F.count("*").alias("cnt"))
+
+
+def top_n(counted: DataFrame, key: str, n: int | None) -> DataFrame:
+    """Keep the n most frequent keys of a (key, cnt) table; ``None``
+    keeps all. Ties broken lexicographically (documented divergence
+    from Counter insertion order)."""
     if n is not None:
-        counted = counted.orderBy(F.desc("cnt"), F.asc("mention")).limit(n)
-    return counted.select("mention", "cnt")
+        counted = counted.orderBy(F.desc("cnt"), F.asc(key)).limit(n)
+    return counted.select(key, "cnt")
+
+
+def top_entities(triples: DataFrame, n: int | None = TOP_N_ENT) -> DataFrame:
+    return top_n(entity_counts(triples), "mention", n)
 
 
 def top_relations(triples: DataFrame, n: int | None = TOP_N_REL) -> DataFrame:
-    counted = triples.groupBy(F.col("pred")).agg(F.count("*").alias("cnt"))
-    if n is not None:
-        counted = counted.orderBy(F.desc("cnt"), F.asc("pred")).limit(n)
-    return counted.select("pred", "cnt")
+    return top_n(relation_counts(triples), "pred", n)
 
 
 def assign_ids(names: DataFrame, col: str, id_col: str) -> DataFrame:

@@ -4,8 +4,9 @@ A manifest is a small JSON file next to the data it describes. A
 commit writes the data first and then swaps the manifest with
 ``os.replace``, so a reader sees either the old manifest or the new
 one, never a torn file. Used by ``plans.lineage`` (``_LINEAGE.json``),
-``plans.snapshots`` (``_SNAPSHOTS.json``), ``streaming.kg_update``
-(``_VERSION.json``) and ``streaming.ingest`` (``_INGEST_STATE.json``).
+``plans.snapshots`` (``_SNAPSHOTS.json``, also the counts table of
+``streaming.kg_update``) and ``streaming.ingest``
+(``_INGEST_STATE.json``).
 Single writer per manifest; readers never lock.
 """
 

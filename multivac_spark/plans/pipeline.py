@@ -83,7 +83,7 @@ class LazyTables(Mapping):
         return len(self._thunks)
 
 
-def _tables(documents: DataFrame, embeddings: DataFrame,
+def _tables(documents: DataFrame | None, embeddings: DataFrame,
             cfg: PipelineConfig,
             commit: Callable[[str, Callable[[], DataFrame]], DataFrame],
             ) -> dict[str, Callable[[], DataFrame]]:
@@ -92,7 +92,9 @@ def _tables(documents: DataFrame, embeddings: DataFrame,
     and downstream tables read what ``commit`` returns — ``build()``
     itself for the lazy pipeline, the committed parquet for a
     materialized build (so a resumed stage's output is what its
-    consumers read, FIXTURES.md invariant #4)."""
+    consumers read, FIXTURES.md invariant #4). The upstream thunks of a
+    table that ``commit`` supplies never run, so ``documents`` may be
+    None when every table that reads it is supplied."""
     lex, lemmas = default_lexicons()
     thunks: dict[str, Callable[[], DataFrame]] = {}
 

@@ -17,7 +17,8 @@ only ONE implicit version and no history):
   one, never a torn state. A crash between data-write and swap leaves
   an uncommitted directory named for the attempted version; the retry
   overwrites it in place and then swaps — no orphan survives a
-  completed retry (same discipline as ``kg_update.merge_count_deltas``).
+  completed retry. ``streaming.kg_update`` commits its counts table
+  through ``commit`` too, with the micro-batch id.
 * **time travel** — ``read(..., version=v)`` serves any retained
   snapshot; ``history`` lists the log (Iceberg: ``table.snapshots``).
 * **rollback** — move the ``current`` pointer to an older snapshot
@@ -90,7 +91,8 @@ def commit(spark: SparkSession, base: str, df: DataFrame,
     ``batch_id`` (optional) makes the commit idempotent per batch:
     a re-commit with an already-applied batch_id is a no-op returning
     the current version — the upgrade from foreachBatch's
-    at-least-once to exactly-once, identical to the counts merge.
+    at-least-once to exactly-once (the counts merge of
+    ``streaming.kg_update`` relies on it).
     """
     os.makedirs(base, exist_ok=True)
     m = _read_manifest(base)

@@ -91,7 +91,8 @@ def warc_ingest_available_now(spark: SparkSession, warc_dir: str,
     container format. Returns documents appended this drain.
 
     Structured Streaming has no ``binaryFile`` source, so exactly-once
-    is the manifest protocol of ``kg_update``: the processed-file set
+    is a write-then-swap manifest protocol (the discipline of
+    ``plans.snapshots.commit``): the processed-file set
     and last batch id live in a JSON state committed through
     ``plans.manifest``; each drain reads ONLY unseen files, writes
     their parsed documents to a batch-named directory

@@ -1,12 +1,16 @@
 """Incremental KG maintenance (streaming/kg_update.py): exactly-once
-count merging across drains, idempotent batch re-application, and
-equivalence of the incremental counts + canonical refresh with the
-batch pipeline over the same corpus."""
+count merging across drains, idempotent batch re-application, the
+counts as one plans.snapshots table, and equivalence of the
+incremental counts + canonical refresh with the batch pipeline over
+the same corpus."""
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
 
+from multivac_spark.operators import materialize
+from multivac_spark.plans import snapshots
 from multivac_spark.plans.pipeline import (PipelineConfig,
                                            default_lexicons, run_pipeline)
 from multivac_spark.sources import corpus, vocab
@@ -14,14 +18,29 @@ from multivac_spark.streaming.ingest import ingest_available_now
 from multivac_spark.streaming.kg_update import (counts_update_available_now,
                                                 merge_count_deltas,
                                                 read_counts,
-                                                refresh_canonical_graph,
-                                                top_from_counts)
+                                                refresh_canonical_graph)
 
 
 def _ingest(spark, docs_dir, d, lex, lemmas, vl):
     return ingest_available_now(spark, docs_dir, f"{d}/triples",
                                 f"{d}/ckpt_ingest", lex, lemmas,
                                 normalize=True, verb_lemmas=vl)
+
+
+def _assert_counts_are_batch_recount(spark, d, counts_dir):
+    """read_counts == a recount over ALL ingested triples, computed
+    here independently of materialize's count functions."""
+    triples = spark.read.parquet(f"{d}/triples")
+    recounts = {
+        "entities": triples.select(F.explode(F.array("subj", "obj"))
+                                   .alias("mention"))
+        .groupBy("mention").count(),
+        "relations": triples.groupBy("pred").count()}
+    for table, key in (("entities", "mention"), ("relations", "pred")):
+        got = {(r[key], r["cnt"])
+               for r in read_counts(spark, counts_dir, table).collect()}
+        exp = {(r[key], r["count"]) for r in recounts[table].collect()}
+        assert got == exp and len(got) > 0, table
 
 
 def test_incremental_counts_match_batch_recount(spark):
@@ -46,25 +65,36 @@ def test_incremental_counts_match_batch_recount(spark):
             spark, f"{d}/triples", counts_dir, f"{d}/ckpt_counts") >= 1
 
         # incremental counts == batch recount over ALL ingested triples
-        triples = spark.read.parquet(f"{d}/triples")
-        batch_ent = (triples
-                     .select(F.explode(F.array("subj", "obj"))
-                             .alias("mention"))
-                     .groupBy("mention").count())
-        inc_ent = read_counts(spark, counts_dir, "entities")
-        got = {(r["mention"], r["cnt"]) for r in inc_ent.collect()}
-        exp = {(r["mention"], r["count"]) for r in batch_ent.collect()}
-        assert got == exp and len(got) > 0
-
-        batch_rel = triples.groupBy("pred").count()
-        inc_rel = read_counts(spark, counts_dir, "relations")
-        assert ({(r["pred"], r["cnt"]) for r in inc_rel.collect()}
-                == {(r["pred"], r["count"]) for r in batch_rel.collect()})
+        _assert_counts_are_batch_recount(spark, d, counts_dir)
 
         # third drain with nothing new: no new version
         v_before = counts_update_available_now(
             spark, f"{d}/triples", counts_dir, f"{d}/ckpt_counts")
         assert v_before == 0
+
+
+def test_counts_are_a_snapshot_table(spark):
+    """The counts are one plans.snapshots table: every merged
+    micro-batch commits one snapshot carrying its batch id, and the
+    current snapshot reads back as the batch recount."""
+    lex, lemmas = default_lexicons()
+    vl = vocab.verb_lemma_table()
+    first = corpus.documents_df(spark, 20, partitions=2)
+    rest = corpus.documents_df(spark, 40, partitions=2).subtract(first)
+    with tempfile.TemporaryDirectory() as d:
+        docs_dir, counts_dir = f"{d}/docs", f"{d}/counts"
+        merged = 0
+        for docs in (first, rest):
+            docs.write.mode("append").parquet(docs_dir)
+            assert _ingest(spark, docs_dir, d, lex, lemmas, vl) > 0
+            merged += counts_update_available_now(
+                spark, f"{d}/triples", counts_dir, f"{d}/ckpt_counts")
+        assert merged >= 2
+        hist = snapshots.history(counts_dir)
+        assert [h["version"] for h in hist] == list(range(merged))
+        assert [h["batch_id"] for h in hist] == list(range(merged))
+        assert snapshots.current_version(counts_dir) == merged - 1
+        _assert_counts_are_batch_recount(spark, d, counts_dir)
 
 
 def test_merge_is_idempotent_per_batch_id(spark):
@@ -87,51 +117,47 @@ def test_merge_is_idempotent_per_batch_id(spark):
 
 def test_merge_crash_between_write_and_swap_leaves_no_ambiguity(spark,
                                                                monkeypatch):
-    """Kill the merge AFTER the data write but BEFORE the manifest swap
-    (the round-3 'orphan v-dir' nit): the manifest must be unchanged,
-    readers must still see the previous version, and the retry of the
-    same batch must overwrite the SAME batch-named directory and commit
-    — exactly one surviving data dir per batch, pointed to by the
+    """Kill the merge AFTER the data write but BEFORE the snapshot
+    manifest swap: the manifest must be unchanged, readers must still
+    see the previous counts, and the retry of the same batch must
+    overwrite the SAME version directory and commit — exactly one
+    surviving data dir per committed batch, pointed to by the
     manifest."""
-    import os
-
-    from multivac_spark.streaming import kg_update
-
     with tempfile.TemporaryDirectory() as d:
         delta_e = spark.createDataFrame([("a", 2)], "mention string, cnt long")
         delta_r = spark.createDataFrame([("r", 3)], "pred string, cnt long")
         assert merge_count_deltas(spark, d, 0, delta_e, delta_r)
-
-        real_write = kg_update._write_manifest
+        committed = snapshots._read_manifest(d)
 
         def crash(*a, **k):
             raise RuntimeError("injected crash before manifest swap")
 
-        monkeypatch.setattr(kg_update, "_write_manifest", crash)
+        monkeypatch.setattr(snapshots, "_write_manifest", crash)
         try:
             merge_count_deltas(spark, d, 1, delta_e, delta_r)
         except RuntimeError:
             pass
         # manifest still points at batch 0; readers unaffected
-        m = kg_update._read_manifest(d)
-        assert m["last_batch_id"] == 0
+        assert snapshots._read_manifest(d) == committed
         got = {(r["mention"], r["cnt"])
                for r in read_counts(spark, d, "entities").collect()}
         assert got == {("a", 2)}
-        # the orphan is batch-named — the retry will reuse it
-        assert os.path.isdir(os.path.join(d, "b000000001"))
+        # the orphan is named for the attempted version — the retry
+        # will reuse it
+        assert os.path.isdir(os.path.join(d, "v000000001"))
 
-        monkeypatch.setattr(kg_update, "_write_manifest", real_write)
+        monkeypatch.undo()
         assert merge_count_deltas(spark, d, 1, delta_e, delta_r)
-        m = kg_update._read_manifest(d)
-        assert m["last_batch_id"] == 1 and m["dir"] == "b000000001"
+        m = snapshots._read_manifest(d)
+        assert m["last_batch_id"] == 1 and m["current"] == 1
+        assert m["snapshots"][-1]["dir"] == "v000000001"
         got = {(r["mention"], r["cnt"])
                for r in read_counts(spark, d, "entities").collect()}
         assert got == {("a", 4)}
         # exactly one data dir per committed batch, no stray versions
         dirs = sorted(x for x in os.listdir(d)
                       if os.path.isdir(os.path.join(d, x)))
-        assert dirs == ["b000000000", "b000000001"]
+        assert dirs == ["v000000000", "v000000001"]
 
 
 def test_refresh_matches_batch_pipeline(spark):
@@ -155,11 +181,10 @@ def test_refresh_matches_batch_pipeline(spark):
         assert got == exp and len(got) > 0
 
         # and the dictionaries themselves agree with the batch top-N
-        from multivac_spark.operators import materialize
         triples = spark.read.parquet(f"{d}/triples")
         batch_top = {(r["mention"], r["cnt"]) for r in
                      materialize.top_entities(triples, 100).collect()}
-        inc_top = {(r["mention"], r["cnt"]) for r in top_from_counts(
+        inc_top = {(r["mention"], r["cnt"]) for r in materialize.top_n(
             read_counts(spark, counts_dir, "entities"),
             "mention", 100).collect()}
         assert inc_top == batch_top

@@ -1,4 +1,4 @@
-"""Masked-graph reconstruction harness + broadcast-dict embedding parity."""
+"""Masked-graph reconstruction harness + mention-embedding averaging."""
 
 from pyspark.sql import functions as F
 
@@ -79,21 +79,32 @@ def test_ndcg_matches_reference_formula(spark):
         assert abs(got - want) < 1e-9, (k, got, want)
 
 
-def test_broadcast_dict_embeddings_match_relational(spark):
+def test_mention_embeddings_match_numpy_mean(spark):
+    """canon.mention_embeddings == the per-mention np.mean of its
+    in-vocabulary token vectors; an all-OOV mention drops out."""
+    import numpy as np
+
     emb = corpus.embeddings_df(spark)
     mentions = []
     for c in vocab.effective_concepts()[:15]:
         variants = vocab.effective_noun_variants()[c]
         mentions.append(variants[0])
         mentions.append(f"viral {variants[0]}")
-    mentions.append("zzz_oov_token")  # OOV mention must drop in both
+    mentions.append("zzz_oov_token")  # OOV mention must drop
     mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
+    tok_vec = {r["token"]: np.asarray(r["vector"], dtype=np.float64)
+               for r in emb.collect()}
+    want = {}
+    for m in mentions:
+        vecs = [tok_vec[t] for t in m.split() if t in tok_vec]
+        if vecs:
+            # mention_embeddings returns array<float>
+            mean = np.mean(vecs, axis=0).astype(np.float32)
+            want[m] = [round(float(x), 5) for x in mean]
 
-    a = {r["mention"]: [round(x, 5) for x in r["vector"]]
-         for r in canon.mention_embeddings(mdf, emb).collect()}
-    b = {r["mention"]: [round(x, 5) for x in r["vector"]]
-         for r in canon.mention_embeddings_broadcast(mdf, emb).collect()}
-    assert set(a) == set(b)
-    assert "zzz_oov_token" not in a
-    for m in a:
-        assert a[m] == b[m], m
+    got = {r["mention"]: [round(x, 5) for x in r["vector"]]
+           for r in canon.mention_embeddings(mdf, emb).collect()}
+    assert "zzz_oov_token" not in got
+    assert set(got) == set(want) and len(got) > 1
+    for m in got:
+        assert got[m] == want[m], m
