@@ -426,9 +426,14 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
       knobs forces the fully distributed route end-to-end, pinned
       equal to the driver path in tests/test_canon_and_materialize.py).
     """
-    n_mentions = mentions.count()
-    if n_mentions <= driver_fastpath_mentions:
-        return _cluster_entities_driver(mentions, embeddings, threshold,
+    # one collect both sizes the dictionary and feeds the driver kernel;
+    # the limit sits on top of the ordered top-N, so the names keep its
+    # order (average-linkage tie-breaks depend on it)
+    names = (mentions.select(mentions.columns[0])
+             .limit(driver_fastpath_mentions + 1).toPandas()
+             .iloc[:, 0].tolist())
+    if len(names) <= driver_fastpath_mentions:
+        return _cluster_entities_driver(names, embeddings, threshold,
                                         char_limit)
     vecs = mention_embeddings(mentions, embeddings).localCheckpoint()
     edges = similarity_edges(vecs, threshold=threshold)
@@ -472,19 +477,18 @@ def refine_components(labels: DataFrame, vecs: DataFrame,
         kernel, schema="mention string, label string")
 
 
-def _cluster_entities_driver(mentions: DataFrame, embeddings: DataFrame,
+def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
                              threshold: float, char_limit: int) -> DataFrame:
-    """Driver-side kernel: identical semantics to the distributed path."""
+    """Driver-side kernel over the collected mention ``names``:
+    identical semantics to the distributed path."""
     from collections import defaultdict
 
     import pandas as pd
 
-    spark = mentions.sparkSession
-    # Arrow-path collects (toPandas): the row-pickle path spent ~0.9s
-    # deserializing 50k mention rows + the embedding slice (guide §6
-    # "Arrow for driver transfers").
-    names = mentions.select(mentions.columns[0]).toPandas() \
-        .iloc[:, 0].tolist()
+    spark = embeddings.sparkSession
+    # Arrow-path collects (toPandas, here and for ``names``): the
+    # row-pickle path spent ~0.9s deserializing 50k mention rows + the
+    # embedding slice (guide §6 "Arrow for driver transfers").
     needed = set()
     splits = [m.split() for m in names]
     for toks in splits:

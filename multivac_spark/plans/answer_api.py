@@ -20,7 +20,8 @@ mention-vector tables (one NL answer was 17 jobs and about 6 s on a
 reference's single-process Flask app. For production-scale QPS the
 service is a thin layer: the heavy state (canonical triples,
 ``query.kg_vectors``) is materialized once at construction. A bad
-``threshold-input`` / ``num-top-input`` gets a 400 with a JSON ``error``.
+``threshold-input`` / ``num-top-input`` / ``model-type-input`` /
+``run-input`` gets a 400 with a JSON ``error`` naming the parameter.
 """
 from __future__ import annotations
 
@@ -91,6 +92,15 @@ def _number(qs: dict, name: str, default: str, kind, lo, hi):
     return value
 
 
+def _choice(qs: dict, name: str, default: str, allowed: tuple[str, ...]):
+    """``qs[name]``, which must be one of ``allowed``; ValueError names
+    the parameter."""
+    raw = qs.get(name, default)
+    if raw not in allowed:
+        raise ValueError(f"{name} must be one of {list(allowed)}: {raw!r}")
+    return raw
+
+
 def _make_handler(service: AnswerService):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):   # quiet test runs
@@ -122,12 +132,14 @@ def _make_handler(service: AnswerService):
             try:
                 args = {
                     "search": search,
-                    "model": qs.get("model-type-input", "blend"),
+                    "model": _choice(qs, "model-type-input", "blend",
+                                     ("blend", "transe")),
                     "threshold": _number(qs, "threshold-input", "0.75",
                                          float, -1.0, 1.0),
                     "num_top_rel": _number(qs, "num-top-input", "10",
                                            int, 1, float("inf")),
-                    "run": qs.get("run-input", "query"),
+                    "run": _choice(qs, "run-input", "query",
+                                   ("query", "predict")),
                     "verbose": qs.get("verbosity-input", "false"),
                 }
             except ValueError as exc:

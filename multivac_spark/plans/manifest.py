@@ -3,10 +3,10 @@
 A manifest is a small JSON file next to the data it describes. A
 commit writes the data first and then swaps the manifest with
 ``os.replace``, so a reader sees either the old manifest or the new
-one, never a torn file. Used by ``plans.lineage`` (``_LINEAGE.json``),
-``plans.snapshots`` (``_SNAPSHOTS.json``, also the counts table of
-``streaming.kg_update``) and ``streaming.ingest``
-(``_INGEST_STATE.json``).
+one, never a torn file. Used by ``plans.lineage`` (``_LINEAGE.json``)
+and ``plans.snapshots`` (``_SNAPSHOTS.json``, also the counts table of
+``streaming.kg_update``). Append-only incremental tables are stream
+file sinks instead (``streaming.ingest.append_available_now``).
 Single writer per manifest; readers never lock.
 """
 

@@ -296,11 +296,20 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     binaryFile source carries (path, content) and Spark parallelizes
     over the file list, so 100k archive files = 100k narrow tasks with
     no shuffle anywhere."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.warc*")
-             .load(path)
-             .select("content"))
+    return parse_warc_files(spark.read.format("binaryFile")
+                            .option("pathGlobFilter", "*.warc*")
+                            .load(path))
 
+
+# the binaryFile source's columns; a binaryFile stream must be given them
+BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
+                      "length long, content binary")
+
+
+def parse_warc_files(files: DataFrame) -> DataFrame:
+    """binaryFile rows (batch or stream) → documents DataFrame (url,
+    warc_ts, html, text=NULL, lang): one ``parse_warc_bytes`` per file
+    in a ``mapInPandas``. A corrupt archive fails its task."""
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
@@ -309,4 +318,5 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows)
 
-    return files.mapInPandas(parse, schema=WARC_DOCS_SCHEMA)
+    return files.select("content").mapInPandas(parse,
+                                               schema=WARC_DOCS_SCHEMA)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import textops
 from ..sources.corpus import DOCUMENTS_SCHEMA
+from .ingest import append_available_now, read_stream
 
 
 def curate_stage(df: DataFrame,
@@ -64,26 +65,9 @@ def curate_available_now(spark: SparkSession, docs_dir: str,
                          blocked_domains: list[str] | None = None,
                          key=None) -> int:
     """Drain all unprocessed document files through ``curate_stage``
-    into the curated table; returns rows appended this invocation
-    (observe() metric — scan-free, the ingest.py posture). File-level
-    exactly-once via the stream checkpoint."""
-    stream = (spark.readStream
-              .schema(DOCUMENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 64)
-              .parquet(docs_dir))
-    curated = curate_stage(stream, blocked_domains, key=key) \
-        .observe("curate_metrics", F.count(F.lit(1)).alias("rows"))
-    query = (curated.writeStream
-             .format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
-    rows = 0
-    for p in query.recentProgress:
-        om = p.observedMetrics.get("curate_metrics")
-        if om is not None:
-            rows += om["rows"]
-    return rows
+    into the curated table; returns rows appended this invocation.
+    File-level exactly-once via ``ingest.append_available_now``."""
+    docs = read_stream(spark, DOCUMENTS_SCHEMA, docs_dir)
+    return append_available_now(
+        curate_stage(docs, blocked_domains, key=key), out_dir,
+        checkpoint_dir)

@@ -46,6 +46,7 @@ from ..functions.svo import TRIPLES_SCHEMA as TRIPLES_DDL
 from ..operators.materialize import entity_counts, relation_counts, top_n
 from ..plans import snapshots
 from ..plans.pipeline import PipelineConfig, _tables
+from .ingest import read_stream
 
 # counts table → the key column of its kind in the (kind, key, cnt) table
 _KEYS = {"entities": "mention", "relations": "pred"}
@@ -104,11 +105,7 @@ def counts_update_available_now(spark: SparkSession, triples_dir: str,
                               relation_counts(batch_df)):
             applied += 1
 
-    stream = (spark.readStream
-              .schema(TRIPLES_DDL)
-              .option("maxFilesPerTrigger", 64)
-              .parquet(triples_dir))
-    q = (stream.writeStream
+    q = (read_stream(spark, TRIPLES_DDL, triples_dir).writeStream
          .foreachBatch(merge)
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)

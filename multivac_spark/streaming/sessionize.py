@@ -158,25 +158,20 @@ def sessionize_batch(events, key_col: str, ts_col: str,
 def run_sessionize_available_now(spark, docs_dir: str, out_dir: str,
                                  checkpoint_dir: str,
                                  gap_seconds: int = 1800,
-                                 watermark: str = "10 minutes") -> None:
+                                 watermark: str = "10 minutes") -> int:
     """Drain new document files through the sessionizer (host = the
-    url's authority component), appending closed sessions to parquet.
-    Open sessions persist in the state store across invocations —
-    exactly the checkpoint-resume semantics of the batch lineage."""
+    url's authority component), appending closed sessions to parquet;
+    returns the sessions appended this invocation. Open sessions
+    persist in the state store across invocations — exactly the
+    checkpoint-resume semantics of the batch lineage."""
     from pyspark.sql import functions as F
 
     from ..sources.corpus import DOCUMENTS_SCHEMA
+    from .ingest import append_available_now, read_stream
 
-    stream = (spark.readStream.schema(DOCUMENTS_SCHEMA)
-              .option("maxFilesPerTrigger", 64).parquet(docs_dir))
-    withhost = stream.withColumn(
+    docs = read_stream(spark, DOCUMENTS_SCHEMA, docs_dir)
+    withhost = docs.withColumn(
         "host", F.regexp_extract(F.col("url"), r"^https?://([^/]+)/", 1))
     sessions = sessionize_stream(withhost, gap_seconds,
                                  watermark=watermark)
-    q = (sessions.writeStream.format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .outputMode("append")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    return append_available_now(sessions, out_dir, checkpoint_dir)

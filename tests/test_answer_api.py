@@ -102,6 +102,8 @@ def test_vectors_built_once_per_service(spark, service, monkeypatch):
     {"num-top-input": "ten"},
     {"num-top-input": "2.5"},
     {"num-top-input": "0"},
+    {"model-type-input": "bogus"},
+    {"run-input": "delete"},
 ])
 def test_bad_numeric_input_is_400(service, params):
     _, port = service

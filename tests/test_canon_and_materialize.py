@@ -98,6 +98,23 @@ def test_distributed_path_matches_driver_path(spark, emb_df):
     assert a == b
 
 
+def test_driver_path_computes_mentions_once(spark, emb_df):
+    """The driver path sizes the mention dictionary and collects it in
+    one pass: each mention row is computed once, not once for a count
+    and again for the collect."""
+    mentions = vocab.effective_noun_variants()["virus"] + ["lone mention"]
+    computed = spark.sparkContext.accumulator(0)
+
+    def keep(_):
+        computed.add(1)
+        return True
+
+    mdf = (spark.createDataFrame([(m,) for m in mentions], "mention string")
+           .filter(F.udf(keep, "boolean")("mention")))
+    canon.cluster_entities(mdf, emb_df, driver_fastpath_mentions=10**9)
+    assert computed.value == len(mentions)
+
+
 def test_variant_groups_cluster_together(spark, emb_df):
     """Surface variants of the same concept must land in one cluster."""
     variants = vocab.effective_noun_variants()["virus"]

@@ -31,9 +31,9 @@ def test_sessions_close_on_watermark(spark):
                       ("https://host-a/y", at(5)),
                       ("https://host-b/z", at(3))]) \
             .write.mode("append").parquet(docs_dir)
-        run_sessionize_available_now(spark, docs_dir, out_dir, ckpt,
-                                     gap_seconds=1800,
-                                     watermark="1 minutes")
+        assert run_sessionize_available_now(spark, docs_dir, out_dir, ckpt,
+                                            gap_seconds=1800,
+                                            watermark="1 minutes") == 0
         try:
             n_closed = spark.read.parquet(out_dir).count()
         except Exception:
@@ -45,9 +45,9 @@ def test_sessions_close_on_watermark(spark):
         # itself starts a fresh open session.
         _docs(spark, [("https://host-a/w", at(600))]) \
             .write.mode("append").parquet(docs_dir)
-        run_sessionize_available_now(spark, docs_dir, out_dir, ckpt,
-                                     gap_seconds=1800,
-                                     watermark="1 minutes")
+        assert run_sessionize_available_now(spark, docs_dir, out_dir, ckpt,
+                                            gap_seconds=1800,
+                                            watermark="1 minutes") == 2
         closed = {r["host"]: r for r in spark.read.parquet(out_dir).collect()}
         assert set(closed) == {"host-a", "host-b"}
         a = closed["host-a"]

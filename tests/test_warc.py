@@ -128,52 +128,65 @@ def test_warc_feeds_extract_stage_identically(docs120, spark, tmp_path):
 # incremental WARC drain (streaming/ingest.py)
 # ---------------------------------------------------------------------------
 
-def test_warc_incremental_drain_crash_resume(spark, tmp_path, monkeypatch):
-    """3 drains over arriving archives, a crash injected between the
-    batch write and the state commit, and a no-new-files drain: the
-    committed view must always equal the union of fully-drained
-    archives, the crashed batch must be invisible until its retry
-    commits, and the retry must not duplicate rows."""
+def test_warc_incremental_drain_crash_resume(spark, tmp_path):
+    """Drains over arriving archives, one of them truncated: the
+    failed drain must raise and leave the committed view at the fully
+    drained archives, the retry after the repair must append the
+    archive's rows once, and a no-new-files drain appends nothing.
+    Files that are not ``*.warc*`` and dotfiles are ignored; an
+    archive whose mtime is 30 days older than those already drained
+    is still drained."""
+    import os
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
     from multivac_spark.streaming import ingest
 
     wdir = tmp_path / "warcs"
     wdir.mkdir()
     out, state = str(tmp_path / "docs"), str(tmp_path / "state")
 
-    def arrive(name, lo, n):
+    def archive(name, lo, n):
         rows = [corpus.gen_document(i) for i in range(lo, lo + n)]
-        (wdir / name).write_bytes(warc.make_warc_file(rows, name))
+        return warc.make_warc_file(rows, name)
 
-    arrive("crawl-000.warc.gz", 0, 30)
-    n1 = ingest.warc_ingest_available_now(spark, str(wdir), out, state)
-    assert n1 == 30
-    arrive("crawl-001.warc.gz", 30, 20)
+    def drain():
+        return ingest.warc_ingest_available_now(spark, str(wdir), out,
+                                                state)
 
-    # crash AFTER the batch-1 parquet write, BEFORE the state commit
-    real = ingest.write_json
-    monkeypatch.setattr(ingest, "write_json",
-                        lambda *a: (_ for _ in ()).throw(
-                            RuntimeError("injected")))
-    with pytest.raises(RuntimeError):
-        ingest.warc_ingest_available_now(spark, str(wdir), out, state)
-    # committed view still shows only batch 0
-    got = ingest.read_ingested_documents(spark, out, state)
-    assert got.count() == 30
-    monkeypatch.setattr(ingest, "write_json", real)
+    (wdir / "crawl-000.warc.gz").write_bytes(archive("crawl-000", 0, 30))
+    assert drain() == 30
 
-    # retry of the same batch commits, no duplicates
-    assert ingest.warc_ingest_available_now(spark, str(wdir), out,
-                                            state) == 20
-    arrive("crawl-002.warc.gz", 50, 10)
-    assert ingest.warc_ingest_available_now(spark, str(wdir), out,
-                                            state) == 10
+    # crash: the arriving archive is truncated mid-stream
+    whole = archive("crawl-001", 30, 20)
+    (wdir / "crawl-001.warc.gz").write_bytes(whole[:len(whole) // 2])
+    with pytest.raises(StreamingQueryException):
+        drain()
+    # committed view still shows only the first archive
+    assert spark.read.parquet(out).count() == 30
+
+    # retry of the same batch once the archive is whole, no duplicates
+    (wdir / "crawl-001.warc.gz").write_bytes(whole)
+    assert drain() == 20
+    (wdir / "crawl-002.warc.gz").write_bytes(archive("crawl-002", 50, 10))
+    (wdir / "notes.txt").write_bytes(archive("notes", 60, 5))
+    (wdir / ".crawl-003.warc.gz").write_bytes(archive("hidden", 60, 5))
+    assert drain() == 10
     # idempotent empty drain
-    assert ingest.warc_ingest_available_now(spark, str(wdir), out,
-                                            state) == 0
+    assert drain() == 0
 
-    got = ingest.read_ingested_documents(spark, out, state)
+    got = spark.read.parquet(out)
     want = corpus.documents_df(spark, 60, partitions=2)
     assert _canon(got) == _canon(want)
+
+    # a late archive with an old mtime is not skipped for its age
+    late = wdir / "crawl-old.warc.gz"
+    late.write_bytes(archive("crawl-old", 60, 3))
+    month_ago = time.time() - 30 * 86400
+    os.utime(late, (month_ago, month_ago))
+    assert drain() == 3
+    assert spark.read.parquet(out).count() == 63
 
 
 def test_warc11_fractional_dates_and_folded_headers():
