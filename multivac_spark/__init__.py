@@ -15,7 +15,8 @@ Layout
 - ``functions`` : the Arrow-batched UDF families (html→text, clean,
                   parse, svo, normalize, textops)
 - ``operators`` : canonicalization, dedup, ann, analytics, materialize
-- ``plans``     : end-to-end pipeline orchestration, lineage/resume
+- ``plans``     : end-to-end pipeline orchestration, versioned tables
+                  (``snapshots``) and stage resume (``lineage``)
 - ``streaming`` : incremental (Trigger.AvailableNow) ingest
 
 Everything here is public-knowledge PySpark; no code is copied from the

@@ -20,12 +20,17 @@ Spark-first replacement:
    (driver union-find when the edge set is small enough to collect);
    the distributed loop converges in O(log diameter) rounds —
    GraphFrames-free;
-5. representative aggregation + broadcast-join substitution.
+5. per-block refinement: each connected component (a block) runs the
+   reference's average linkage cut at the threshold
+   (``average_linkage_labels``; ``refine_components`` on the
+   distributed path), which splits single-linkage chains back apart;
+6. representative aggregation + broadcast-join substitution.
 
-Documented divergence (SURVEY.md §2.6): single-linkage-over-threshold
-(transitive closure) vs the reference's average linkage; and "first
-member" = lexicographic min vs insertion order. The exact-clustering
-oracle test pins the difference (Jaccard ≥ 0.9 at test scale).
+Documented divergences (SURVEY.md §2.6): average linkage runs within
+each LSH-connected block, not over all mention pairs; a block above
+``LINKAGE_CAP`` mentions stays one cluster; and "first member" =
+lexicographic min vs insertion order. The exact average-linkage oracle
+test pins the difference (Jaccard ≥ 0.9 at test scale).
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """Materialized pipeline runner with stage-level resume.
 
 ``spark-submit --py-files multivac_spark.zip`` shape: the DAG of
-``plans.pipeline`` with each checkpoint stage written as parquet plus a
-lineage manifest entry; a rerun with the same (out_dir, run_id) skips
+``plans.pipeline`` with each checkpoint stage committed by
+``plans.lineage`` as a version of the ``plans.snapshots`` table
+``<out_dir>/<stage>``; a rerun with the same (out_dir, run_id) skips
 completed stages and feeds their materialized output to downstream
 stages (FIXTURES.md invariant #4) — no silent recomputation of upstream
 work.

@@ -17,8 +17,11 @@ only ONE implicit version and no history):
   one, never a torn state. A crash between data-write and swap leaves
   an uncommitted directory named for the attempted version; the retry
   overwrites it in place and then swaps — no orphan survives a
-  completed retry. ``streaming.kg_update`` commits its counts table
-  through ``commit`` too, with the micro-batch id.
+  completed retry. The entry records each data file's footer row
+  count, their total, the read schema and ``wall_ms``, so ``read``
+  runs no Spark job and ``intact`` checks a version from the driver.
+  The counts of ``streaming.kg_update`` and the build stages of
+  ``plans.lineage`` are snapshots tables too.
 * **time travel** — ``read(..., version=v)`` serves any retained
   snapshot; ``history`` lists the log (Iceberg: ``table.snapshots``).
 * **rollback** — move the ``current`` pointer to an older snapshot
@@ -41,37 +44,99 @@ unlimited and never locked.
 At 100 TB each snapshot directory holds the table's parquet files;
 commit cost is the write of the NEW version only, and ``diff`` is one
 hash-aggregate shuffle keyed on full rows — no driver materialization
-anywhere in this module.
+anywhere in this module. On an object store the footer counts would
+come from the commit's file list (an Iceberg snapshot summary).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import tempfile
+import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from .manifest import read_json, write_json
+from pyspark.sql.types import StructType
 
 _MANIFEST = "_SNAPSHOTS.json"
 
 
-def _manifest_path(base: str) -> str:
-    return os.path.join(base, _MANIFEST)
-
-
 def _read_manifest(base: str) -> dict:
-    return read_json(_manifest_path(base),
-                     {"current": -1, "last_batch_id": -1, "snapshots": []})
+    path = os.path.join(base, _MANIFEST)
+    if not os.path.exists(path):
+        return {"current": -1, "last_batch_id": -1, "snapshots": []}
+    with open(path) as f:
+        return json.load(f)
 
 
 def _write_manifest(base: str, manifest: dict) -> None:
     # atomic pointer swap — readers see the old manifest or the new one
-    write_json(_manifest_path(base), manifest)
+    fd, tmp = tempfile.mkstemp(dir=base, suffix=".manifest")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(base, _MANIFEST))
 
 
 def _snapshot_dirname(version: int) -> str:
     return f"v{version:09d}"
+
+
+def _data_dir(base: str, entry: dict) -> str:
+    return os.path.join(base, entry["dir"], "data")
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(("_", "."))  # _SUCCESS, _temporary/, .crc
+
+
+def footer_rows(out: str) -> dict[str, int]:
+    """Row count of every data file under a parquet directory, keyed by
+    its path relative to ``out``, read from the parquet footers — no
+    Spark job. Walks ``col=value/`` partition directories."""
+    rows = {}
+    for d, dirs, files in os.walk(out):
+        dirs[:] = [x for x in dirs if not _hidden(x)]
+        for f in files:
+            if not _hidden(f):
+                p = os.path.join(d, f)
+                rows[os.path.relpath(p, out)] = pq.read_metadata(p).num_rows
+    return rows
+
+
+def _nullable(t):
+    """A schema's JSON value with every field, array element and map
+    value nullable — how Spark writes parquet columns."""
+    if not isinstance(t, dict):
+        return t
+    kind = t["type"]
+    if kind == "struct":
+        return {**t, "fields": [{**f, "nullable": True,
+                                 "type": _nullable(f["type"])}
+                                for f in t["fields"]]}
+    if kind == "array":
+        return {**t, "containsNull": True,
+                "elementType": _nullable(t["elementType"])}
+    if kind == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"])}
+    return t
+
+
+def _read_schema(schema: StructType,
+                 partition_by: str | None = None) -> StructType:
+    """The schema ``spark.read.parquet`` infers for output written from
+    ``schema``: all nullable, the partition column last. The partition
+    column keeps its written type, where inference would guess one
+    from the directory names (``int`` for a ``long`` column of small
+    values)."""
+    s = StructType.fromJson(_nullable(schema.jsonValue()))
+    if partition_by:
+        s = StructType([f for f in s.fields if f.name != partition_by]
+                       + [s[partition_by]])
+    return s
 
 
 def _entry(manifest: dict, version: int) -> dict:
@@ -84,7 +149,8 @@ def _entry(manifest: dict, version: int) -> dict:
 
 def commit(spark: SparkSession, base: str, df: DataFrame,
            batch_id: int | None = None,
-           meta: dict | None = None) -> int:
+           meta: dict | None = None,
+           partition_by: str | None = None) -> int:
     """Write ``df`` as the next snapshot of the table at ``base`` and
     make it current. Returns the new version number.
 
@@ -93,21 +159,32 @@ def commit(spark: SparkSession, base: str, df: DataFrame,
     the current version — the upgrade from foreachBatch's
     at-least-once to exactly-once (the counts merge of
     ``streaming.kg_update`` relies on it).
+
+    ``partition_by`` writes a directory-partitioned layout (e.g. the
+    edges table's ``rel_bucket`` — see plans/tables.py for the
+    Iceberg-transform equivalent). The write is the only Spark job.
     """
+    t0 = time.time()
     os.makedirs(base, exist_ok=True)
     m = _read_manifest(base)
     if batch_id is not None and batch_id <= m["last_batch_id"]:
         return m["current"]
     version = 1 + max((s["version"] for s in m["snapshots"]), default=-1)
-    vdir = os.path.join(base, _snapshot_dirname(version))
-    # data first (mode=overwrite: a crashed attempt at this same
-    # version is replaced wholesale), manifest swap second
-    df.write.mode("overwrite").parquet(os.path.join(vdir, "data"))
     entry = {"version": version,
              "dir": _snapshot_dirname(version),
              "parent": m["current"],
              "batch_id": batch_id,
              "meta": meta or {}}
+    # data first (mode=overwrite: a crashed attempt at this same
+    # version is replaced wholesale), manifest swap second
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(_data_dir(base, entry))
+    files = footer_rows(_data_dir(base, entry))
+    entry.update(files=files, rows=sum(files.values()),
+                 schema=_read_schema(df.schema, partition_by).json(),
+                 wall_ms=int((time.time() - t0) * 1000))
     m["snapshots"].append(entry)
     m["current"] = version
     if batch_id is not None:
@@ -130,13 +207,31 @@ def history(base: str) -> list[dict]:
 def read(spark: SparkSession, base: str,
          version: int | None = None) -> DataFrame:
     """Read a snapshot — current by default, any retained version for
-    time travel (Iceberg: ``VERSION AS OF``)."""
+    time travel (Iceberg: ``VERSION AS OF``) — with the schema its
+    commit recorded, so no Spark job infers it."""
     m = _read_manifest(base)
     if m["current"] < 0:
         raise ValueError(f"no snapshots committed at {base}")
     v = m["current"] if version is None else version
     e = _entry(m, v)
-    return spark.read.parquet(os.path.join(base, e["dir"], "data"))
+    schema = StructType.fromJson(json.loads(e["schema"]))
+    return spark.read.schema(schema).parquet(_data_dir(base, e))
+
+
+def intact(base: str, entry: dict) -> bool:
+    """Whether version ``entry`` of the table at ``base`` still holds
+    what its commit recorded: the per-file rows sum to the total, the
+    write finished (``_SUCCESS``), and the data files on disk with
+    their footer row counts are the recorded ones. No Spark job."""
+    if sum(entry["files"].values()) != entry["rows"]:
+        return False
+    out = _data_dir(base, entry)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        return False
+    try:
+        return footer_rows(out) == entry["files"]
+    except (OSError, ValueError):
+        return False
 
 
 def rollback(base: str, version: int) -> None:

@@ -8,8 +8,8 @@ writes that layout through either engine:
 * **Iceberg path** (`spark.sql.catalog.*` configured, iceberg-spark
   runtime jar on the cluster): ``df.writeTo(ident).partitionedBy(
   bucket(N, rel_id))`` — a hidden-partition bucket transform, the
-  canonical Iceberg answer to Zipfian predicate skew; snapshot commits
-  give the transactional manifest the lineage layer assumes.
+  canonical Iceberg answer to Zipfian predicate skew; its snapshot
+  commits are what ``plans.snapshots`` reproduces on plain parquet.
 * **Parquet fallback** (no Iceberg jar on the classpath): ``edges_layout``
   — an explicit ``rel_bucket = pmod(hash(rel_id), N)`` partition
   column + a ``(rel_id, salt)`` repartition + ``sortWithinPartitions(

@@ -9,12 +9,17 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from multivac_spark.plans import lineage
-from multivac_spark.plans.manifest import write_json
+from multivac_spark.plans import lineage, snapshots
 
 # plain and directory-partitioned; the partition column sits mid-schema
 # so the re-read must move it last as inference does
 LAYOUTS = {"plain": None, "partitioned": "rel_bucket"}
+
+
+def _data(d, stage):
+    """The data directory of the stage's current version."""
+    [entry] = snapshots.history(os.path.join(d, stage))
+    return os.path.join(d, stage, entry["dir"], "data")
 
 
 @pytest.fixture(scope="module")
@@ -36,22 +41,22 @@ def committed(spark):
 @pytest.mark.parametrize("stage", LAYOUTS)
 def test_footer_rows_match_spark_count(spark, committed, stage):
     d, _ = committed
-    rows = lineage.footer_rows(os.path.join(d, stage))
+    rows = snapshots.footer_rows(_data(d, stage))
     assert len(rows) > 1
-    assert sum(rows.values()) == spark.read.parquet(f"{d}/{stage}").count()
+    assert sum(rows.values()) == spark.read.parquet(_data(d, stage)).count()
 
 
 @pytest.mark.parametrize("stage", LAYOUTS)
 def test_pinned_schema_matches_inference(spark, committed, stage):
     d, back = committed
-    inferred = spark.read.parquet(f"{d}/{stage}").schema
+    inferred = spark.read.parquet(_data(d, stage)).schema
     assert back[stage].schema == inferred
     resumed = lineage.run_or_resume(spark, d, "r", stage,
                                     lambda: pytest.fail("recomputed"),
                                     partition_by=LAYOUTS[stage])
     assert resumed.schema == inferred
     assert (sorted(resumed.collect())
-            == sorted(spark.read.parquet(f"{d}/{stage}").collect()))
+            == sorted(spark.read.parquet(_data(d, stage)).collect()))
 
 
 @pytest.mark.parametrize("stage", LAYOUTS)
@@ -74,19 +79,23 @@ def test_inconsistent_entry_is_not_complete(spark):
     df = spark.range(10).withColumnRenamed("id", "k")
     with tempfile.TemporaryDirectory() as d:
         lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
-        path = os.path.join(d, "_LINEAGE.json")
+        path = os.path.join(d, "stg", "_SNAPSHOTS.json")
         with open(path) as f:
             good = json.load(f)
         assert lineage.stage_complete(spark, d, "r", "stg")
         assert not lineage.stage_complete(spark, d, "other_run", "stg")
 
+        def put(manifest):
+            with open(path, "w") as f:
+                json.dump(manifest, f)
+
         # part rows that do not sum to the marker total
         bad = json.loads(json.dumps(good))
-        bad["attempts"][0]["rows"] += 1
-        write_json(path, bad)
+        bad["snapshots"][0]["rows"] += 1
+        put(bad)
         assert not lineage.stage_complete(spark, d, "r", "stg")
 
         # no _SUCCESS: the write never finished
-        write_json(path, good)
-        os.remove(os.path.join(d, "stg", "_SUCCESS"))
+        put(good)
+        os.remove(os.path.join(_data(d, "stg"), "_SUCCESS"))
         assert not lineage.stage_complete(spark, d, "r", "stg")

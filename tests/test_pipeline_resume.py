@@ -1,15 +1,14 @@
 """End-to-end pipeline + resume invariant (FIXTURES.md #4): a rerun with
 the same run_id reproduces identical tables without recomputing, and no
-duplicate lineage entries appear for completed stages."""
+duplicate stage versions appear for completed stages."""
 
-import json
 import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from multivac_spark.plans import lineage
+from multivac_spark.plans import lineage, snapshots
 from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
 from multivac_spark.plans.run import run_materialized
 from multivac_spark.sources import corpus
@@ -37,8 +36,9 @@ def _rows(df):
 
 
 def _attempts(base):
-    with open(os.path.join(base, "_LINEAGE.json")) as f:
-        return json.load(f)["attempts"]
+    """(stage, history entry) for every version of every stage table."""
+    return [(stage, e) for stage in sorted(os.listdir(base))
+            for e in snapshots.history(os.path.join(base, stage))]
 
 
 def test_pipeline_end_to_end(spark, first_run):
@@ -77,7 +77,7 @@ def test_resume_reproduces_identical_tables(spark, out_dir, first_run):
 
 def test_no_duplicate_lineage_markers(spark, out_dir, first_run):
     # one entry per committed stage, also after the resume above
-    stages = [(a["run_id"], a["stage"]) for a in _attempts(out_dir)]
+    stages = [(e["meta"]["run_id"], s) for s, e in _attempts(out_dir)]
     assert len(stages) == len(set(stages))
     assert {s for _, s in stages} == STAGES
 
@@ -85,20 +85,20 @@ def test_no_duplicate_lineage_markers(spark, out_dir, first_run):
 def test_committed_stages_match_spark_oracle(spark, out_dir, first_run):
     """Every committed stage of a real build: the footer row counts sum
     to Spark's count, and the recorded schema is the one Spark infers."""
-    for a in _attempts(out_dir):
-        out = os.path.join(out_dir, a["stage"])
-        inferred = spark.read.parquet(out)
-        assert a["rows"] == inferred.count(), a["stage"]
-        pinned = lineage.run_or_resume(spark, out_dir, "runA", a["stage"],
+    for stage, e in _attempts(out_dir):
+        inferred = spark.read.parquet(
+            os.path.join(out_dir, stage, e["dir"], "data"))
+        assert e["rows"] == inferred.count(), stage
+        pinned = lineage.run_or_resume(spark, out_dir, "runA", stage,
                                        lambda: pytest.fail("recomputed"))
-        assert pinned.schema == inferred.schema, a["stage"]
+        assert pinned.schema == inferred.schema, stage
 
 
 def _crash_before_swap(monkeypatch):
     def crash(*a, **k):
         raise RuntimeError("injected crash before manifest swap")
 
-    monkeypatch.setattr(lineage, "write_json", crash)
+    monkeypatch.setattr(snapshots, "_write_manifest", crash)
 
 
 def _counting(df, calls):
@@ -115,7 +115,7 @@ def test_crash_after_write_before_swap_recomputes(spark, monkeypatch):
             _crash_before_swap(mp)
             with pytest.raises(RuntimeError):
                 lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
-        assert os.path.exists(f"{d}/stg/_SUCCESS")
+        assert os.path.exists(f"{d}/stg/v000000000/data/_SUCCESS")
         assert not lineage.stage_complete(spark, d, "r", "stg")
 
         calls = []
@@ -131,8 +131,11 @@ def test_overwritten_output_of_older_entry_recomputes(spark):
     with tempfile.TemporaryDirectory() as d:
         lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
         assert lineage.stage_complete(spark, d, "r", "stg")
-        df.coalesce(1).write.mode("overwrite").parquet(f"{d}/stg")
-        assert os.path.exists(f"{d}/stg/_SUCCESS")
+        data = f"{d}/stg/v000000000/data"
+        assert len(snapshots.footer_rows(data)) > 1
+        df.coalesce(1).write.mode("overwrite").parquet(data)
+        assert os.path.exists(f"{data}/_SUCCESS")
+        assert snapshots.current_version(f"{d}/stg") == 0
         assert not lineage.stage_complete(spark, d, "r", "stg")
 
         calls = []
@@ -142,34 +145,45 @@ def test_overwritten_output_of_older_entry_recomputes(spark):
 
 
 def test_crash_retry_converges(spark, monkeypatch):
-    """A newer attempt overwrites a committed stage and crashes before
-    its manifest swap; the retry's entry must validate on its own
-    (latest attempt), not against the older entry — resume must report
-    complete and stop recomputing (VERDICT r1 'what's wrong' — lineage
-    self-defeat)."""
+    """A newer attempt writes over a committed stage and crashes before
+    its manifest swap. It writes its own version directory, so the
+    committed version stays complete and a resume does not recompute;
+    a later run's commit reuses the crashed directory and validates on
+    its own (latest attempt), not against the older entry (VERDICT r1
+    'what's wrong' — lineage self-defeat)."""
     df = spark.range(100).withColumnRenamed("id", "k")
     with tempfile.TemporaryDirectory() as d:
         lineage.run_or_resume(spark, d, "r", "stg", lambda: df)
-        # attempt 2: overwrite, then crash before the swap
+        # attempt 2: a new version, then crash before the swap
         with monkeypatch.context() as mp:
             _crash_before_swap(mp)
             with pytest.raises(RuntimeError):
-                lineage.write_stage(spark, df.repartition(3), d, "r", "stg")
-        assert not lineage.stage_complete(spark, d, "r", "stg")
-
-        # attempt 3: full retry through the real API
-        calls = []
-        lineage.run_or_resume(spark, d, "r", "stg", _counting(df, calls))
-        assert calls == [1]
-        # the manifest now holds both committed attempts' entries;
-        # completeness must hold (latest attempt validates alone)...
-        assert len(_attempts(d)) == 2
+                snapshots.commit(spark, f"{d}/stg", df.repartition(3),
+                                 meta={"run_id": "r"})
+        assert os.path.isdir(f"{d}/stg/v000000001/data")
         assert lineage.stage_complete(spark, d, "r", "stg")
-        # ...so a further run resumes without recomputing
-        calls2 = []
+
+        # attempt 3: the real API resumes without recomputing
+        calls = []
         got = lineage.run_or_resume(spark, d, "r", "stg",
-                                    _counting(df, calls2))
-        assert calls2 == []
+                                    _counting(df, calls))
+        assert calls == []
+        assert got.count() == 100
+
+        # a later run commits over the crashed directory; its entry
+        # alone is complete, and a further run resumes from it
+        calls2 = []
+        lineage.run_or_resume(spark, d, "r2", "stg", _counting(df, calls2))
+        assert calls2 == [1]
+        assert [e["version"] for _, e in _attempts(d)] == [1]
+        assert sorted(os.listdir(f"{d}/stg")) == ["_SNAPSHOTS.json",
+                                                   "v000000001"]
+        assert lineage.stage_complete(spark, d, "r2", "stg")
+        assert not lineage.stage_complete(spark, d, "r", "stg")
+        calls3 = []
+        got = lineage.run_or_resume(spark, d, "r2", "stg",
+                                    _counting(df, calls3))
+        assert calls3 == []
         assert got.count() == 100
 
 

@@ -7,6 +7,7 @@ import os
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from multivac_spark.plans import snapshots
 
@@ -53,6 +54,63 @@ def test_commit_idempotent_per_batch_id(spark):
         assert _rows(snapshots.read(spark, d)) == [("a", "r", "b")]
         assert snapshots.commit(spark, d, _df(spark, [("c", "r", "d")]),
                                 batch_id=1) == 1
+
+
+def test_read_runs_no_spark_job(spark):
+    """A read follows the manifest and the recorded schema: building the
+    frame (before any action) submits no Spark job."""
+    with tempfile.TemporaryDirectory() as d:
+        snapshots.commit(spark, d, _df(spark, [("a", "r", "b")]))
+        sc = spark.sparkContext
+        sc.setJobGroup("snapshots-read", "snapshots.read")
+        try:
+            df = snapshots.read(spark, d)
+            snapshots.read(spark, d, version=0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "snapshots-read")) == []
+        assert _rows(df) == [("a", "r", "b")]
+
+
+def _layouts(spark):
+    """A plain table, a nested ``array<struct>`` one and a partitioned
+    one whose ``int`` partition column (as the edges' ``rel_bucket``)
+    sits mid-schema. A ``long`` partition column reads back as
+    ``long``, where inference guesses ``int`` from the directory
+    names."""
+    plain = _df(spark, [("a", "r", "b"), ("c", "s", None)])
+    nested = spark.createDataFrame(
+        [(1, [("x", 1.5), ("y", None)]), (2, None), (3, [])],
+        "id long, toks array<struct<w: string, v: double>>")
+    parted = (spark.range(40)
+              .withColumn("b", (F.col("id") % 4).cast("int"))
+              .withColumn("s", F.col("id").cast("string")))
+    return {"plain": (plain, None), "nested": (nested, None),
+            "partitioned": (parted, "b")}
+
+
+@pytest.mark.parametrize("layout", ["plain", "nested", "partitioned"])
+def test_read_schema_matches_inference(spark, layout):
+    df, partition_by = _layouts(spark)[layout]
+    with tempfile.TemporaryDirectory() as d:
+        snapshots.commit(spark, d, df, partition_by=partition_by)
+        [e] = snapshots.history(d)
+        inferred = spark.read.parquet(os.path.join(d, e["dir"], "data"))
+        got = snapshots.read(spark, d)
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_history_rows_match_count(spark):
+    with tempfile.TemporaryDirectory() as d:
+        for n in (0, 7, 300):
+            snapshots.commit(spark, d, spark.range(n).repartition(3))
+        h = snapshots.history(d)
+        assert [e["rows"] for e in h] == [0, 7, 300]
+        for e in h:
+            assert e["rows"] == snapshots.read(spark, d, e["version"]).count()
+            assert snapshots.intact(d, e)
 
 
 def test_diff_bag_semantics(spark):

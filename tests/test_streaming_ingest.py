@@ -1,10 +1,16 @@
 """Incremental ingest: Trigger.AvailableNow drains only new files."""
 
+import os
 import tempfile
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from multivac_spark.plans.pipeline import default_lexicons
 from multivac_spark.sources import corpus
-from multivac_spark.streaming.ingest import ingest_available_now
+from multivac_spark.streaming.ingest import (append_available_now,
+                                             ingest_available_now,
+                                             read_stream)
 
 
 def test_available_now_exactly_once(spark):
@@ -33,3 +39,22 @@ def test_available_now_exactly_once(spark):
                                   lex, lemmas)
         total = spark.read.parquet(out_dir).count()
         assert total == count1 + n3
+
+
+def test_rows_appended_counts_every_batch(spark):
+    """The returned count covers every micro-batch of the drain, not
+    only the ones ``recentProgress`` still keeps: with that history cut
+    to 2, 200 one-row files drain in 4 batches of at most 64 files."""
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    spark.conf.set(key, "2")
+    try:
+        with tempfile.TemporaryDirectory() as d:
+            src = f"{d}/src"
+            os.makedirs(src)
+            for i in range(200):
+                pq.write_table(pa.table({"k": [i]}), f"{src}/{i:03d}.parquet")
+            n = append_available_now(read_stream(spark, "k long", src),
+                                     f"{d}/out", f"{d}/ck")
+            assert n == 200 == spark.read.parquet(f"{d}/out").count()
+    finally:
+        spark.conf.unset(key)
