@@ -32,9 +32,6 @@ shape. Representative = earliest non-pronoun mention in the cluster
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from .parse import parse_tokens, split_sentences, tokenize
 
@@ -297,22 +294,3 @@ def resolve_pronouns(text: str, lexicon: dict[str, str],
     """Back-compat name: full multi-sieve resolution."""
     return resolve_document(text, lexicon, lemmas)
 
-
-def resolve_coref_stage(df, lexicon: dict[str, str],
-                        lemmas: dict[str, str],
-                        text_col: str = "clean_text"):
-    """Arrow-batched coref stage over cleaned documents (optional,
-    mirrors the reference's coref_opt flag)."""
-    cols = df.columns
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[text_col] = [
-                None if t is None else resolve_document(t, lexicon, lemmas)
-                for t in pdf[text_col]]
-            yield pdf[cols]
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    return df.mapInPandas(run, schema=schema)

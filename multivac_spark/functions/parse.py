@@ -274,9 +274,10 @@ def fused_sentences_stage(documents, lexicon: dict[str, str],
                           lemmas: dict[str, str],
                           lang_filter: str | None = "en"):
     """documents(url, warc_ts, html, text, lang) → sentences in ONE
-    Arrow pass (html→text → clean → parse fused). The batch build
-    (``plans.pipeline``) parses each document here, once, and extracts
-    its triples from this table. The staged ``parse_stage`` pays three
+    Arrow pass (html→text → clean → parse fused), for consumers of the
+    token table itself (sentence ranking, USP). The triples of a build
+    or a drain never go through this table: ``functions.fused`` parses
+    and extracts in one pass. The staged ``parse_stage`` pays three
     Python round-trips — html bytes and full document text each cross
     Arrow twice more; fusing removes both extra crossings. Output is
     identical to the staged path (parity-pinned in

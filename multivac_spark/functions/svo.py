@@ -214,43 +214,60 @@ def expand_rdf_groups(groups: dict[int, dict[str, list[int]]],
     return out
 
 
-def extract_triples_stage(sentences_df, mention_source: str | None = None,
-                          gazetteer: dict[str, str] | None = None):
-    """sentences(url, sent_id, text, tokens) → raw_triples(url, sent_id,
-    rdf_idx, subj, pred, obj).
-
-    ``mention_source``: None (reference default — ``expand_rdfs`` is
-    declared but never called, rdf_parse.py:214), ``"ner"`` (rule-NER
-    entitymentions twin, functions/ner.py), or ``"chunks"`` (NP-chunk
-    inventory). When set, each sentence's RDF nodes are widened over
-    overlapping mention spans before stringification."""
+def sentence_extractor(extractor: str = "rdf_parse",
+                       mention_source: str | None = None,
+                       gazetteer: dict[str, str] | None = None):
+    """Parsed sentence tokens → [(rdf_idx, subj, pred, obj)] for the
+    ``PipelineConfig`` extractor fields: ``extractor="textacy"`` is the
+    Phase-II twin (``svo_textacy``); otherwise the ``substitute_rdfs``
+    twin, its RDF nodes widened over ``mention_source`` spans when set:
+    None (reference default — ``expand_rdfs`` is declared but never
+    called, rdf_parse.py:214), ``"ner"`` (rule-NER entitymentions twin,
+    functions/ner.py, with an optional RegexNER-style ``gazetteer``) or
+    ``"chunks"`` (NP-chunk inventory)."""
     if mention_source not in (None, "ner", "chunks"):
         raise ValueError(f"unknown mention_source: {mention_source!r}")
+    if extractor == "textacy":
+        from .svo_textacy import extract_svo_textacy
+        return extract_svo_textacy
+    if mention_source is None:
+        return extract_svo
+    from .ner import chunk_mentions, entity_mentions
+    mentions = (chunk_mentions if mention_source == "chunks"
+                else lambda toks: entity_mentions(toks, gazetteer))
+    return lambda toks: extract_svo(
+        toks, mentions=[(b, e) for b, e, _ in mentions(toks)])
+
+
+def triples_frame(rows: list[tuple]) -> pd.DataFrame:
+    """(url, sent_id, rdf_idx, subj, pred, obj) tuples → one Arrow batch
+    of ``TRIPLES_SCHEMA``."""
+    return pd.DataFrame.from_records(
+        rows, columns=["url", "sent_id", "rdf_idx", "subj", "pred", "obj"])
+
+
+def triples_from_sentences(sentences_df, extract):
+    """sentences(url, sent_id, text, tokens) → raw_triples(url, sent_id,
+    rdf_idx, subj, pred, obj), running ``extract`` (one of
+    ``sentence_extractor``'s) per sentence."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if mention_source:
-            from .ner import chunk_mentions, entity_mentions
-            if mention_source == "ner":
-                mention_fn = lambda tl: entity_mentions(tl, gazetteer)
-            else:
-                mention_fn = chunk_mentions
         for pdf in batches:
-            rows = {"url": [], "sent_id": [], "rdf_idx": [],
-                    "subj": [], "pred": [], "obj": []}
-            for url, sid, toks in zip(pdf["url"], pdf["sent_id"],
-                                      pdf["tokens"]):
-                tl = [dict(t) for t in toks]
-                spans = None
-                if mention_source:
-                    spans = [(b, e) for b, e, _ in mention_fn(tl)]
-                for idx, s, p, o in extract_svo(tl, mentions=spans):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(int(sid))
-                    rows["rdf_idx"].append(idx)
-                    rows["subj"].append(s)
-                    rows["pred"].append(p)
-                    rows["obj"].append(o)
-            yield pd.DataFrame(rows)
+            yield triples_frame([
+                (url, int(sid), *t)
+                for url, sid, toks in zip(pdf["url"], pdf["sent_id"],
+                                          pdf["tokens"])
+                for t in extract([dict(t) for t in toks])])
 
     return (sentences_df.select("url", "sent_id", "tokens")
             .mapInPandas(run, schema=TRIPLES_SCHEMA))
+
+
+def extract_triples_stage(sentences_df, mention_source: str | None = None,
+                          gazetteer: dict[str, str] | None = None):
+    """sentences → raw_triples through the ``substitute_rdfs`` twin; with
+    a ``mention_source`` each sentence's RDF nodes are widened over
+    overlapping mention spans before stringification (see
+    ``sentence_extractor``)."""
+    return triples_from_sentences(sentences_df, sentence_extractor(
+        mention_source=mention_source, gazetteer=gazetteer))

@@ -32,11 +32,8 @@ Semantics reproduced:
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
-
-from .svo import TRIPLES_SCHEMA
+from .svo import triples_from_sentences
 
 OBJECTS_TO_REPLACE = {"that", "which"}            # rdf_extract.py:23
 NORM_REGEX_CHARS1 = re.compile(                   # rdf_extract.py:25
@@ -196,22 +193,4 @@ def extract_svo_textacy(tokens: list[dict],
 
 def extract_triples_textacy_stage(sentences_df):
     """sentences(url, sent_id, tokens) → textacy-path triples."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"url": [], "sent_id": [], "rdf_idx": [],
-                    "subj": [], "pred": [], "obj": []}
-            for url, sid, toks in zip(pdf["url"], pdf["sent_id"],
-                                      pdf["tokens"]):
-                tl = [dict(t) for t in toks]
-                for idx, s, p, o in extract_svo_textacy(tl):
-                    rows["url"].append(url)
-                    rows["sent_id"].append(int(sid))
-                    rows["rdf_idx"].append(idx)
-                    rows["subj"].append(s)
-                    rows["pred"].append(p)
-                    rows["obj"].append(o)
-            yield pd.DataFrame(rows)
-
-    return (sentences_df.select("url", "sent_id", "tokens")
-            .mapInPandas(run, schema=TRIPLES_SCHEMA))
+    return triples_from_sentences(sentences_df, extract_svo_textacy)

@@ -70,28 +70,40 @@ def assign_ids(names: DataFrame, col: str, id_col: str) -> DataFrame:
         id_col, (F.row_number().over(w) - 1).cast("long"))
 
 
-def build_graph_tables(final_triples: DataFrame) -> dict[str, DataFrame]:
-    """final_triples(subj, pred, obj) → entities / relations / edges.
-
-    edges columns follow the OpenKE text order (head_id, tail_id, rel_id)
-    (rdf_graph.py:320-321)."""
-    entities = assign_ids(
+def entity_ids(final_triples: DataFrame) -> DataFrame:
+    """(entity, entity_id) over every subject and object."""
+    return assign_ids(
         final_triples.select(F.col("subj").alias("entity"))
         .union(final_triples.select(F.col("obj").alias("entity"))),
         "entity", "entity_id")
-    relations = assign_ids(
-        final_triples.select(F.col("pred").alias("rel")), "rel", "rel_id")
 
+
+def relation_ids(final_triples: DataFrame) -> DataFrame:
+    """(rel, rel_id) over every predicate."""
+    return assign_ids(final_triples.select(F.col("pred").alias("rel")),
+                      "rel", "rel_id")
+
+
+def graph_edges(final_triples: DataFrame, entities: DataFrame,
+                relations: DataFrame) -> DataFrame:
+    """final_triples joined to the id dictionaries → edges in the OpenKE
+    text order (head_id, tail_id, rel_id) (rdf_graph.py:320-321)."""
     e_head = F.broadcast(entities).withColumnRenamed("entity", "subj") \
         .withColumnRenamed("entity_id", "head_id")
     e_tail = F.broadcast(entities).withColumnRenamed("entity", "obj") \
         .withColumnRenamed("entity_id", "tail_id")
     r = F.broadcast(relations).withColumnRenamed("rel", "pred")
+    return (final_triples
+            .join(e_head, "subj").join(e_tail, "obj").join(r, "pred")
+            .select("head_id", "tail_id", "rel_id"))
 
-    edges = (final_triples
-             .join(e_head, "subj").join(e_tail, "obj").join(r, "pred")
-             .select("head_id", "tail_id", "rel_id"))
-    return {"entities": entities, "relations": relations, "edges": edges}
+
+def build_graph_tables(final_triples: DataFrame) -> dict[str, DataFrame]:
+    """final_triples(subj, pred, obj) → entities / relations / edges."""
+    entities = entity_ids(final_triples)
+    relations = relation_ids(final_triples)
+    return {"entities": entities, "relations": relations,
+            "edges": graph_edges(final_triples, entities, relations)}
 
 
 def type_constraints(edges: DataFrame) -> DataFrame:

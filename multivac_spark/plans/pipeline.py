@@ -2,11 +2,15 @@
 
 The Spark analog of the reference's ``build_graph.py:10-38`` run:
 extract_raw_tuples → preprocess_raw_tuples → cluster_entities →
-output_to_openke (SURVEY.md §3.1). ``_tables`` declares that DAG once;
-``run_pipeline`` keeps it one lazy DataFrame DAG so Catalyst sees the
-whole plan (filter pushdown through the UDF stages' column pruning,
-broadcast joins for every dictionary-sized side), and
-``plans.run.run_materialized`` commits its stages with resume.
+output_to_openke (SURVEY.md §3.1). ``_tables`` declares that DAG once,
+nine tables for every ``PipelineConfig``. Like the reference's one
+step per document, ``triples`` is one call of the extraction kernel
+``functions.fused.fused_extract_stage`` (html→text → clean → coref →
+parse → extractor → normalize, one Arrow pass), the same kernel the
+streaming ingest runs. ``run_pipeline`` keeps the DAG one lazy
+DataFrame DAG so Catalyst sees the whole plan (broadcast joins for
+every dictionary-sized side), and ``plans.run.run_materialized``
+commits its stages with resume.
 """
 
 from __future__ import annotations
@@ -18,10 +22,7 @@ from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import parse, svo
-from ..functions.clean import clean_text_stage
-from ..functions.html_text import extract_text_stage
-from ..functions.normalize import normalize_triples
+from ..functions import fused
 from ..operators import canon, materialize
 from ..sources import vocab
 
@@ -39,7 +40,7 @@ class PipelineConfig:
     # optional relation clustering, off by default like the reference
     # (cluster_relations flag, rdf_extract.py:102-104,119-122)
     cluster_relations: bool = False
-    # which extractor reads the sentences table: 'rdf_parse' = the
+    # which extractor the kernel runs per sentence: 'rdf_parse' = the
     # Phase-I substitute_rdfs twin (default, functions/svo.py);
     # 'textacy' = the Phase-II RDFExtractor twin (rdf_extract.py:767-833,
     # functions/svo_textacy.py)
@@ -102,46 +103,13 @@ def _tables(documents: DataFrame | None, embeddings: DataFrame,
         thunks[name] = cache(lambda: commit(name, build))
         return thunks[name]
 
-    def build_extracted() -> DataFrame:
-        df = extract_text_stage(documents)
-        if cfg.lang_filter:
-            df = df.filter(F.col("lang") == cfg.lang_filter)
-        return df
-
-    extracted = table("extracted", build_extracted)
-
-    def build_cleaned() -> DataFrame:
-        df = clean_text_stage(extracted(), frozenset(lex))
-        if cfg.coref:
-            from ..functions.coref import resolve_coref_stage
-            df = resolve_coref_stage(df, lex, lemmas)
-        return df
-
-    cleaned = table("cleaned", build_cleaned)
-
-    def build_sentences() -> DataFrame:
-        # the coref resolver rewrites the cleaned text, so it is parsed
-        # staged; otherwise html→text → clean → parse is one Arrow pass
-        if cfg.coref:
-            return parse.parse_stage(cleaned(), lex, lemmas)
-        return parse.fused_sentences_stage(documents, lex, lemmas,
-                                           cfg.lang_filter)
-
-    sentences = table("sentences", build_sentences)
-
-    def build_raw_triples() -> DataFrame:
-        # every extractor reads the sentences table: one parse per
-        # document per build
-        if cfg.extractor == "textacy":
-            from ..functions.svo_textacy import extract_triples_textacy_stage
-            return extract_triples_textacy_stage(sentences())
-        return svo.extract_triples_stage(
-            sentences(), mention_source=cfg.expand_mentions,
-            gazetteer=cfg.gazetteer)
-
-    raw_triples = table("raw_triples", build_raw_triples)
-    triples = table("triples", lambda: normalize_triples(
-        raw_triples(), vocab.verb_lemma_table(), lex))
+    # one Arrow pass per document: html→text → clean → (coref) → parse
+    # → extractor → normalize. Called through its module attribute, so
+    # a wrapper installed on ``fused.fused_extract_stage`` sees it.
+    triples = table("triples", lambda: fused.fused_extract_stage(
+        documents, lex, lemmas, cfg.lang_filter, normalize=True,
+        coref=cfg.coref, extractor=cfg.extractor,
+        expand_mentions=cfg.expand_mentions, gazetteer=cfg.gazetteer))
     uniq_ents = table("unique_entities", lambda: materialize.top_entities(
         triples(), cfg.top_n_ent))
     uniq_rels = table("unique_relations", lambda: materialize.top_relations(
@@ -179,10 +147,14 @@ def _tables(documents: DataFrame | None, embeddings: DataFrame,
             uniq_rels_final)
 
     final_triples = table("final_triples", build_final_triples)
-    graph = cache(lambda: materialize.build_graph_tables(final_triples()))
-    table("entities", lambda: graph()["entities"])
-    table("relations", lambda: graph()["relations"])
-    edges = table("edges", lambda: graph()["edges"])
+    entities = table("entities", lambda: materialize.entity_ids(
+        final_triples()))
+    relations = table("relations", lambda: materialize.relation_ids(
+        final_triples()))
+    # edges join the committed dictionaries, so a materialized build
+    # does not recompute their single-partition id windows
+    edges = table("edges", lambda: materialize.graph_edges(
+        final_triples(), entities(), relations()))
     table("type_constraints", lambda: materialize.type_constraints(edges()))
     return thunks
 
@@ -197,17 +169,5 @@ def run_pipeline(spark: SparkSession,
     DataFrames; canonicalization-side tables materialize on first
     access (their clustering kernel is a deliberate bounded-dictionary
     driver pass, canon.cluster_entities)."""
-
-    def commit(name: str, build: Callable[[], DataFrame]) -> DataFrame:
-        df = build()
-        if name == "sentences":
-            # a stage boundary between the parse and the SVO pass, as the
-            # materialized build gets from its sentences commit: chained
-            # Arrow passes in one task each hold a Python worker, which
-            # doubles the workers alive at once. An explicit partition
-            # count, so AQE does not coalesce the extraction onto one core.
-            df = df.repartition(spark.sparkContext.defaultParallelism, "url")
-        return df
-
     return LazyTables(_tables(documents, embeddings, cfg or PipelineConfig(),
-                              commit))
+                              lambda name, build: build()))

@@ -1,12 +1,14 @@
 """Materialized pipeline runner with stage-level resume.
 
 ``spark-submit --py-files multivac_spark.zip`` shape: the DAG of
-``plans.pipeline`` with each checkpoint stage committed by
-``plans.lineage`` as a version of the ``plans.snapshots`` table
-``<out_dir>/<stage>``; a rerun with the same (out_dir, run_id) skips
-completed stages and feeds their materialized output to downstream
-stages (FIXTURES.md invariant #4) — no silent recomputation of upstream
-work.
+``plans.pipeline`` with each of its seven checkpoint stages committed
+by ``plans.lineage`` as a version of the ``plans.snapshots`` table
+``<out_dir>/<stage>``. The first stage, ``triples``, is the one
+extraction pass from documents to normalized triples; ``edges`` joins
+the committed ``entities`` and ``relations``. A rerun with the same
+(out_dir, run_id) skips completed stages and feeds their materialized
+output to downstream stages (FIXTURES.md invariant #4) — no silent
+recomputation of upstream work.
 """
 
 from __future__ import annotations
@@ -15,13 +17,14 @@ from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-# not called here: kgbench/layers.py wraps this name for its trace
+# not called by the build, which normalizes inside the extraction pass;
+# kept importable here for tools that wrap this name
 from ..functions.normalize import normalize_triples  # noqa: F401
 from . import lineage, tables
 from .pipeline import LazyTables, PipelineConfig, _tables
 
-STAGES = ("sentences", "triples", "entity_clusters", "final_triples",
-          "entities", "relations", "edges", "type_constraints")
+STAGES = ("triples", "entity_clusters", "final_triples", "entities",
+          "relations", "edges", "type_constraints")
 
 
 def run_materialized(spark: SparkSession,

@@ -124,8 +124,10 @@ def ingest_available_now(spark: SparkSession,
                          normalize: bool = False,
                          verb_lemmas: dict[str, str] | None = None) -> int:
     """Drain all unprocessed document parquet files from ``docs_dir``
-    through the fused doc→triples extraction into a raw-triples table
-    at ``out_dir``. Returns rows appended in this invocation."""
+    through the doc→triples extraction kernel (``normalize=True``:
+    with the batch build's predicate lemmas unless ``verb_lemmas`` is
+    given) into a triples table at ``out_dir``. Returns rows appended
+    in this invocation."""
     docs = read_stream(spark, DOCUMENTS_SCHEMA, docs_dir)
     triples = fused_extract_stage(docs, lexicon, lemmas, lang_filter,
                                   normalize=normalize,

@@ -19,8 +19,9 @@ so a refresh pays O(new data + vocabulary), never O(corpus):
   ``(kind, key, cnt)`` (kind ``mention`` or ``pred``), so a batch's
   entity and relation counts commit atomically together. Each merge
   unions the current snapshot (vocabulary-bounded, much smaller than
-  the corpus) with the batch's deltas, sums by ``(kind, key)`` and
-  commits the next snapshot with the batch id. ``foreachBatch`` is
+  the corpus) with the batch's deltas, sums by ``(kind, key)``,
+  commits the next snapshot with the batch id and expires the one it
+  supersedes. ``foreachBatch`` is
   at-least-once under retries; ``snapshots.commit`` skips an
   already-applied batch id, so the merge is exactly-once end to end.
 
@@ -74,7 +75,9 @@ def merge_count_deltas(spark: SparkSession, counts_dir: str,
     exactly-once under retries. Crash safety is ``snapshots.commit``'s:
     a crash between the data write and the manifest swap leaves an
     uncommitted version directory that the retry of the same batch
-    overwrites in place; readers follow the manifest and never see it."""
+    overwrites in place; readers follow the manifest and never see it.
+    After each commit the superseded version is expired, so the table
+    keeps one data copy however many batches merge."""
     before = snapshots.current_version(counts_dir)
     merged = (ent_delta.select(F.lit("mention").alias("kind"),
                                F.col("mention").alias("key"), "cnt")
@@ -85,8 +88,13 @@ def merge_count_deltas(spark: SparkSession, counts_dir: str,
         merged = snapshots.read(spark, counts_dir).unionByName(merged)
     # vocabulary-bounded table: the merge is O(vocab), not O(corpus)
     merged = merged.groupBy("kind", "key").agg(F.sum("cnt").alias("cnt"))
-    return snapshots.commit(spark, counts_dir, merged,
-                            batch_id=batch_id) != before
+    if snapshots.commit(spark, counts_dir, merged,
+                        batch_id=batch_id) == before:
+        return False
+    # the superseded copies are expired, as a build stage's are; the
+    # manifest's last_batch_id still keeps the merge exactly-once
+    snapshots.expire(counts_dir, keep_last=1)
+    return True
 
 
 def counts_update_available_now(spark: SparkSession, triples_dir: str,

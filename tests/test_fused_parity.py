@@ -1,5 +1,9 @@
 """The fused doc→triples stage must produce exactly the staged path's
-triples (extract → clean → parse → svo)."""
+triples (extract → clean → parse → svo), and the build's ``triples``
+— one call of that kernel for every ``PipelineConfig`` — must equal
+the staged composition of every route."""
+
+import pytest
 
 from multivac_spark.functions.clean import clean_text_stage
 from multivac_spark.functions.fused import fused_extract_stage
@@ -109,3 +113,62 @@ def test_pred_token_cap_applies_before_be_removal(spark):
         assert (py is not None) == (idx in (2, 3))
         if py is not None:
             assert py[1] == {2: "seen to chase", 3: "be"}[idx]
+
+
+def _staged_triples(docs, cfg, lex, lemmas):
+    """The staged composition the build's ``triples`` used to be:
+    extract → clean → (coref) → parse → extractor → Column normalize."""
+    from multivac_spark.functions.coref import resolve_document
+    from multivac_spark.functions.normalize import normalize_triples
+    from multivac_spark.functions.svo_textacy import (
+        extract_triples_textacy_stage)
+    from multivac_spark.sources import vocab
+
+    cleaned = clean_text_stage(
+        extract_text_stage(docs).filter(f"lang = '{cfg.lang_filter}'"),
+        frozenset(lex)).select("url", "clean_text")
+    if cfg.coref:
+        def resolve(batches):
+            for pdf in batches:
+                pdf["clean_text"] = [
+                    None if t is None else resolve_document(t, lex, lemmas)
+                    for t in pdf["clean_text"]]
+                yield pdf
+
+        cleaned = cleaned.mapInPandas(resolve, cleaned.schema)
+    sents = parse_stage(cleaned, lex, lemmas)
+    if cfg.extractor == "textacy":
+        raw = extract_triples_textacy_stage(sents)
+    else:
+        raw = extract_triples_stage(sents, mention_source=cfg.expand_mentions,
+                                    gazetteer=cfg.gazetteer)
+    return normalize_triples(raw, vocab.verb_lemma_table(), lex)
+
+
+@pytest.mark.parametrize("options", [
+    {},
+    {"coref": True},
+    {"extractor": "textacy"},
+    {"expand_mentions": "ner"},
+    {"expand_mentions": "ner", "gazetteer": {"the virus": "MISC",
+                                             "the membrane": "MISC"}},
+    {"expand_mentions": "chunks"},
+], ids=["default", "coref", "extractor-textacy", "expand_mentions-ner",
+        "expand_mentions-ner-gazetteer", "expand_mentions-chunks"])
+def test_pipeline_triples_equal_staged_composition(spark, options):
+    """One kernel call makes a build's ``triples`` for every config; it
+    equals the staged operators it replaced, row for row."""
+    from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+    lex, lemmas = default_lexicons()
+    docs = corpus.documents_df(spark, 40, partitions=2)
+    cfg = PipelineConfig(**options)
+    got = sorted(tuple(r) for r in run_pipeline(
+        spark, docs, corpus.embeddings_df(spark), cfg)["triples"].collect())
+    want = sorted(tuple(r) for r in
+                  _staged_triples(docs, cfg, lex, lemmas).collect())
+    assert got == want and len(got) > 50
+    if not options:
+        # a drain's default arguments lemmatize with the build's table
+        drain = fused_extract_stage(docs, lex, lemmas, normalize=True)
+        assert sorted(tuple(r) for r in drain.collect()) == got

@@ -75,8 +75,9 @@ def test_incremental_counts_match_batch_recount(spark):
 
 def test_counts_are_a_snapshot_table(spark):
     """The counts are one plans.snapshots table: every merged
-    micro-batch commits one snapshot carrying its batch id, and the
-    current snapshot reads back as the batch recount."""
+    micro-batch commits one snapshot carrying its batch id and expires
+    the one it supersedes, so after N merges one version remains, with
+    batch id N-1, and it reads back as the batch recount."""
     lex, lemmas = default_lexicons()
     vl = vocab.verb_lemma_table()
     first = corpus.documents_df(spark, 20, partitions=2)
@@ -91,9 +92,12 @@ def test_counts_are_a_snapshot_table(spark):
                 spark, f"{d}/triples", counts_dir, f"{d}/ckpt_counts")
         assert merged >= 2
         hist = snapshots.history(counts_dir)
-        assert [h["version"] for h in hist] == list(range(merged))
-        assert [h["batch_id"] for h in hist] == list(range(merged))
+        assert [h["version"] for h in hist] == [merged - 1]
+        assert [h["batch_id"] for h in hist] == [merged - 1]
         assert snapshots.current_version(counts_dir) == merged - 1
+        assert sorted(x for x in os.listdir(counts_dir)
+                      if os.path.isdir(os.path.join(counts_dir, x))) == [
+            f"v{merged - 1:09d}"]
         _assert_counts_are_batch_recount(spark, d, counts_dir)
 
 
@@ -120,9 +124,8 @@ def test_merge_crash_between_write_and_swap_leaves_no_ambiguity(spark,
     """Kill the merge AFTER the data write but BEFORE the snapshot
     manifest swap: the manifest must be unchanged, readers must still
     see the previous counts, and the retry of the same batch must
-    overwrite the SAME version directory and commit — exactly one
-    surviving data dir per committed batch, pointed to by the
-    manifest."""
+    overwrite the SAME version directory and commit — then the one
+    surviving data dir, pointed to by the manifest."""
     with tempfile.TemporaryDirectory() as d:
         delta_e = spark.createDataFrame([("a", 2)], "mention string, cnt long")
         delta_r = spark.createDataFrame([("r", 3)], "pred string, cnt long")
@@ -154,10 +157,11 @@ def test_merge_crash_between_write_and_swap_leaves_no_ambiguity(spark,
         got = {(r["mention"], r["cnt"])
                for r in read_counts(spark, d, "entities").collect()}
         assert got == {("a", 4)}
-        # exactly one data dir per committed batch, no stray versions
+        # the committed batch's one data dir: the superseded version is
+        # expired, and no stray attempt survives
         dirs = sorted(x for x in os.listdir(d)
                       if os.path.isdir(os.path.join(d, x)))
-        assert dirs == ["v000000000", "v000000001"]
+        assert dirs == ["v000000001"]
 
 
 def test_refresh_matches_batch_pipeline(spark):

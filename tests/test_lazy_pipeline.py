@@ -23,8 +23,7 @@ def test_run_pipeline_builds_no_jobs(spark):
                               PipelineConfig(top_n_ent=500, top_n_rel=20))
         assert _jobs_in_group(spark, "lazy-build") == []
         # touching extraction-side tables still schedules nothing
-        for k in ("extracted", "cleaned", "sentences", "raw_triples",
-                  "triples", "unique_entities", "unique_relations"):
+        for k in ("triples", "unique_entities", "unique_relations"):
             _ = tables[k]
         assert _jobs_in_group(spark, "lazy-build") == []
     finally:
@@ -42,7 +41,7 @@ def test_same_table_object_on_repeat_access(spark):
                           PipelineConfig(top_n_ent=200, top_n_rel=20))
     assert tables["entity_clusters"] is tables["entity_clusters"]
     assert set(tables) >= {"triples", "final_triples", "edges"}
-    assert len(tables) == 13
+    assert len(tables) == 9
 
 
 def test_driver_cluster_path_50k_mentions_no_plan_blowup(spark):

@@ -149,10 +149,10 @@ def test_pipeline_expand_mentions_route(spark):
 
     docs = corpus.documents_df(spark, 30, partitions=4)
     emb = corpus.embeddings_df(spark)
-    base = run_pipeline(spark, docs, emb)["raw_triples"]
+    base = run_pipeline(spark, docs, emb)["triples"]
     ner = run_pipeline(
         spark, docs, emb,
-        PipelineConfig(expand_mentions="ner", gazetteer=_GAZ))["raw_triples"]
+        PipelineConfig(expand_mentions="ner", gazetteer=_GAZ))["triples"]
     rb = sorted(tuple(r) for r in base.collect())
     rn = sorted(tuple(r) for r in ner.collect())
     # widening only grows non-empty parts: same triple count and keys,

@@ -13,8 +13,8 @@ from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
 from multivac_spark.plans.run import run_materialized
 from multivac_spark.sources import corpus
 
-STAGES = {"sentences", "triples", "entity_clusters", "final_triples",
-          "entities", "relations", "edges", "type_constraints"}
+STAGES = {"triples", "entity_clusters", "final_triples", "entities",
+          "relations", "edges", "type_constraints"}
 
 
 @pytest.fixture(scope="module")
@@ -187,29 +187,29 @@ def test_crash_retry_converges(spark, monkeypatch):
         assert got.count() == 100
 
 
-def test_triples_come_from_committed_sentences(spark, monkeypatch,
-                                               tmp_path, first_run):
-    """One parse per document per build: a build that crashes right
-    after its ``sentences`` commit resumes with a poisoned (empty)
-    documents frame and still equals a full build, so its triples
-    stage reads the committed sentences, not the documents."""
+def test_resume_after_triples_commit_equals_full_build(spark, monkeypatch,
+                                                       tmp_path, first_run):
+    """Extraction is one stage: a build that crashes right after its
+    ``triples`` commit resumes with a poisoned (empty) documents frame
+    and still equals a full build, so every later stage reads the
+    committed triples, not the documents."""
     tables, cfg = first_run
     docs = corpus.documents_df(spark, 120, partitions=4)
     emb = corpus.embeddings_df(spark)
     base = str(tmp_path)
     real = lineage.run_or_resume
 
-    def crash_at_triples(spark_, base_dir, run_id, stage, *a, **k):
-        if stage == "triples":
-            raise RuntimeError("injected crash after the sentences commit")
+    def crash_after_triples(spark_, base_dir, run_id, stage, *a, **k):
+        if stage == "entity_clusters":
+            raise RuntimeError("injected crash after the triples commit")
         return real(spark_, base_dir, run_id, stage, *a, **k)
 
     with monkeypatch.context() as mp:
-        mp.setattr(lineage, "run_or_resume", crash_at_triples)
+        mp.setattr(lineage, "run_or_resume", crash_after_triples)
         with pytest.raises(RuntimeError):
             run_materialized(spark, docs, emb, base, "runB", cfg)
-    assert lineage.stage_complete(spark, base, "runB", "sentences")
-    assert not lineage.stage_complete(spark, base, "runB", "triples")
+    assert lineage.stage_complete(spark, base, "runB", "triples")
+    assert not lineage.stage_complete(spark, base, "runB", "entity_clusters")
 
     poison = spark.createDataFrame([], corpus.DOCUMENTS_SCHEMA)
     resumed = run_materialized(spark, poison, emb, base, "runB", cfg)
