@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from multivac_spark.operators import analytics, ann, dedup, textops
 from multivac_spark.operators.textops import tokens
+from multivac_spark.session import stage
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -582,7 +583,7 @@ def q_ngram_jaccard(spark, sf_dir):
     # lazy plan would each recompute the shingling (the query is
     # shingle-compute-bound: 9.2s → 5.0s at sf0.1). At cluster scale
     # this materialization is a staged/persisted table, same shape.
-    sh_df = docs.select("doc_id", sh.alias("s")).localCheckpoint()
+    sh_df = stage(docs.select("doc_id", sh.alias("s")))
     a = sh_df.select(F.col("doc_id").alias("a"), F.col("s").alias("sa"))
     b = sh_df.select((F.col("doc_id") - 1).alias("a"),
                      F.col("doc_id").alias("b"), F.col("s").alias("sb"))
@@ -729,20 +730,19 @@ def q_curation_pipeline(spark, sf_dir):
 
     Scale shape: broadcast anti-join → keyed window → two bounded aggs
     + one (w1,w2) equi-join → pure Column expr → band-bucket
-    equi-join; survivors staged once (localCheckpoint) so the dedup
+    equi-join; survivors staged once (``stage``) so the dedup
     branch and the output branch don't recompute the LM pipeline."""
     from multivac_spark.operators import dedup
 
     docs = _t(spark, sf_dir, "documents")
     kept = textops.filter_blocklist(docs, ["src1", "src3"],
                                     key=F.col("source"))
-    # staged once (localCheckpoint): capped feeds THREE branches — the
+    # staged once: capped feeds THREE branches — the
     # LM training slice, the scoring pass, and the quality join — and
     # each lazily re-ran the blocklist anti-join + per-source window
     # (guide §2.4: one exchange, reused; at cluster scale this is the
     # staged post-cap table every curation stage reads)
-    capped = textops.cap_per_domain(kept, 10,
-                                    key=F.col("source")).localCheckpoint()
+    capped = stage(textops.cap_per_domain(kept, 10, key=F.col("source")))
     lm = textops.train_bigram_lm(capped.filter(F.col("doc_id") % 2 == 0))
     # scored is NOT checkpointed (r7): with `capped` staged and
     # `survivors` checkpointed right below, the scoring pass runs
@@ -755,9 +755,9 @@ def q_curation_pipeline(spark, sf_dir):
     quality = (capped.join(scored, "doc_id")
                .withColumn("dup3_e4",
                            textops.dup_ngram_fraction(F.col("text"), 3)))
-    survivors = quality.filter(
+    survivors = stage(quality.filter(
         (F.col("lm_score_e4") >= -34500)
-        & (F.col("dup3_e4") < 500)).localCheckpoint()
+        & (F.col("dup3_e4") < 500)))
     pairs = dedup.minhash_dup_pairs(survivors, bands=4, rows=2)
     out = survivors.join(
         pairs.select(F.col("b").alias("doc_id")).distinct(),
@@ -1366,7 +1366,7 @@ def q_usp_clusters(spark, sf_dir):
             lemmas.setdefault(v, c)
     cleaned = clean_text_stage(extract_text_stage(docs), frozenset(lex))
     sents = parse_stage(cleaned.filter("lang = 'en'"), lex, lemmas)
-    sents = sents.localCheckpoint()   # parse once, reuse for labeling
+    sents = stage(sents)   # parse once, reuse for labeling
     model, assignments = usp.induce_usp(
         sents, usp.UspParams(min_mc_cnt=4, min_abs_cnt=12))
     labeled = usp.assign_clusters(sents, assignments)
@@ -1550,9 +1550,9 @@ def q_kg_incremental_counts(spark, sf_dir):
             counts_update_available_now(spark, f"{d}/triples",
                                         counts_dir, f"{d}/ckpt_c")
         top = top_n(read_counts(spark, counts_dir, "entities"), "mention", 10)
-        # localCheckpoint: the tmp dir dies with the `with` block, so
+        # staged: the tmp dir dies with the `with` block, so
         # materialize before leaving it
-        return top.localCheckpoint()
+        return stage(top)
 
 
 SQL_INC_COUNTS = ("SELECT * FROM (VALUES "
@@ -1954,7 +1954,7 @@ def q_subword_tokens(spark, sf_dir, n_merges: int = 12):
     from multivac_spark.operators import subword
 
     docs = _t(spark, sf_dir, "documents")
-    wc = subword.word_histogram(docs).localCheckpoint()
+    wc = stage(subword.word_histogram(docs))
     merges = subword.train_bpe_local(
         [(r["word"], r["cnt"]) for r in wc.collect()], n_merges)
     return subword.subword_token_counts(docs, merges, wc)
@@ -2432,7 +2432,7 @@ def q_sparql_forms(spark, sf_dir):
     (form, k, v) schema."""
     from multivac_spark.operators.sparql import sparql
 
-    tr = _sparql_forms_triples(spark, sf_dir).localCheckpoint()
+    tr = stage(_sparql_forms_triples(spark, sf_dir))
     parts = []
     for form, (q, kcols) in _SPARQL_FORMS.items():
         out = sparql(tr, q)
@@ -2536,7 +2536,7 @@ def q_warc_nt_roundtrip(spark, sf_dir):
         F.col("lang"))
     warc.write_warc(pages.repartition(8), f"{tmp}/w",
                     full_records=True)
-    back = warc.read_warc(spark, f"{tmp}/w").localCheckpoint()
+    back = stage(warc.read_warc(spark, f"{tmp}/w"))
 
     secs = F.timestamp_diff(
         "SECOND", F.to_timestamp_ntz(F.lit("2020-01-01 00:00:00")),

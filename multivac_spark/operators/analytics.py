@@ -6,7 +6,7 @@ Reference behaviors:
 * eigenvector centrality — nx.eigenvector_centrality with tolerance
   escalation ×10 on convergence failure (calculate_network_change.py:22-31);
   rebuilt as power iteration over the edge DataFrame (join + groupBy per
-  step, localCheckpoint to cut lineage);
+  step, a stats_barrier every few steps to cut lineage);
 * centrality delta — (after-before)/(before+1) per node over a full
   outer join (calculate_network_change.py:17-54);
 * key-triple scoring — score(edge) = gain(head)+gain(tail), top-k
@@ -20,6 +20,8 @@ reference building nx.Graph from the first two edge columns
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import stage
 
 
 def _sym(edges: DataFrame, src: str = "head_id",
@@ -37,14 +39,13 @@ def degree_centrality(edges: DataFrame, src: str = "head_id",
     micro-units for cross-engine comparison.
 
     One pass over the edge table: the degree aggregate is materialized
-    once (localCheckpoint — node-count sized) and the node count V is
+    once (staged — node-count sized) and the node count V is
     its row count, instead of a second distinct-count action that
     recomputed the symmetrized edge set from scratch (guide §2.4:
     the two actions shared no work; this halves the edge scans)."""
     sym = _sym(edges, src, dst)
-    deg = (sym.groupBy(F.col("u").alias("node"))
-           .agg(F.count("*").alias("degree"))
-           .localCheckpoint())
+    deg = stage(sym.groupBy(F.col("u").alias("node"))
+                .agg(F.count("*").alias("degree")))
     n_nodes = deg.count()  # == count(distinct u): deg has one row per node
     return deg.withColumn(
         "centrality_micro",
@@ -83,10 +84,6 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
     from 3/iter."""
     from ..session import stats_barrier
 
-    # stats_barrier, not bare localCheckpoint: the iteration joins the
-    # score frame against sym and itself, so carried origin statistics
-    # (potentially already huge if `edges` came out of the CC stage)
-    # would compound every round — see stats_barrier docstring.
     sym = stats_barrier(_sym(edges, src, dst))
     nodes = stats_barrier(sym.select(F.col("u").alias("node")).distinct())
     n = nodes.count()

@@ -40,6 +40,8 @@ import hashlib
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import stage
+
 EMBED_DIM = 50
 DEFAULT_THRESHOLD = 0.2  # cosine distance (rdf_graph.py:52)
 CHAR_LIMIT = 80          # rdf_graph.py:206
@@ -214,7 +216,7 @@ def similarity_edges(vectors: DataFrame,
         signatures,
         schema=(f"{key} string, uvec array<double>, sigbits long, "
                 "bkeys array<string>"))
-    sig = sig.localCheckpoint()
+    sig = stage(sig)
 
     # Hamming cut: E[hamming] = N_PLANES * acos(1-threshold)/π at the
     # threshold, plus ~2.5σ headroom so true pairs survive.
@@ -306,9 +308,6 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                         F.coalesce("_cc_label", F.col(key)).alias("label")))
     from ..session import stats_barrier
 
-    # stats_barrier, not bare localCheckpoint: the loop joins the label
-    # frame against itself, so carried origin statistics would square
-    # every round (BigInt blow-up — see stats_barrier docstring).
     sym = stats_barrier(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"),
@@ -425,7 +424,7 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
       collect + one broadcast — the jobs were pure scheduling overhead
       at any cluster size, because the dictionary does not grow with
       the corpus.
-    * **distributed path** otherwise: checkpointed mention embeddings,
+    * **distributed path** otherwise: staged mention embeddings,
       banded-LSH similarity join, distributed/driver CC
       (``driver_fastpath_edges`` is passed through, so ``=0`` on both
       knobs forces the fully distributed route end-to-end, pinned
@@ -440,7 +439,7 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
     if len(names) <= driver_fastpath_mentions:
         return _cluster_entities_driver(names, embeddings, threshold,
                                         char_limit)
-    vecs = mention_embeddings(mentions, embeddings).localCheckpoint()
+    vecs = stage(mention_embeddings(mentions, embeddings))
     edges = similarity_edges(vecs, threshold=threshold)
     labels = connected_components(vecs.select("mention"), edges,
                                   driver_fastpath_edges=driver_fastpath_edges)

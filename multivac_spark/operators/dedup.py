@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import stage
 from .textops import tokens
 
 _ODD_HEX = list("13579bdf")
@@ -39,7 +40,7 @@ def bound(expr: Column, fn) -> Column:
     ``expensive_expr`` for EVERY element (measured 4× on the shingle
     family at sf0.1) — and projection collapse re-inlines any
     intermediate select, so this binding is the no-materialization fix
-    (the alternative is a localCheckpoint barrier)."""
+    (the alternative is a ``stage`` barrier)."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
 
 
@@ -114,11 +115,10 @@ def minhash_dup_pairs(df: DataFrame, text_col: str = "text",
     # self-join would otherwise each recompute the whole signature
     # pipeline (shingle + k·md5 + min-agg). At cluster scale this is
     # the staged signature table.
-    banded = (sigs.select(id_col,
-                          F.posexplode(minhash_band_keys(F.col("sig"),
-                                                         bands, rows))
-                          .alias("band", "bkey"))
-              .localCheckpoint())
+    banded = stage(sigs.select(id_col,
+                               F.posexplode(minhash_band_keys(
+                                   F.col("sig"), bands, rows))
+                               .alias("band", "bkey")))
     a = banded.select(F.col(id_col).alias("a"), "band", "bkey")
     b = banded.select(F.col(id_col).alias("b"), "band", "bkey")
     return (a.join(b, ["band", "bkey"])
@@ -200,13 +200,11 @@ def simhash_dup_pairs(df: DataFrame, text_col: str = "text",
         raise ValueError(f"n_bits={n_bits} must divide into "
                          f"max_hamming+1={bands} equal bands")
     width = n_bits // bands
-    sigs = (simhash_signatures_agg(df, text_col, id_col, n_bits)
-            .localCheckpoint())  # staged signature table: every
-    #                              branch below reads it instead of
-    #                              recomputing the signatures (the agg
-    #                              shape replaces the interpreted
-    #                              n_bits-way fold of simhash_bits —
-    #                              output-identical, pytest-pinned)
+    # staged signature table: every branch below reads it instead of
+    # recomputing the signatures (the agg shape replaces the
+    # interpreted n_bits-way fold of simhash_bits — output-identical,
+    # pytest-pinned)
+    sigs = stage(simhash_signatures_agg(df, text_col, id_col, n_bits))
     # Band + verify over DISTINCT signatures, then expand to document
     # pairs by signature-group join. Output-identical to banding the
     # document table directly, but the quadratic candidate work runs
@@ -224,7 +222,7 @@ def simhash_dup_pairs(df: DataFrame, text_col: str = "text",
     # cross-band duplicate removal runs on survivors (≈ output size),
     # not on the raw candidate volume.
     sl = sigs.withColumn("_sl", F.conv("_sig", 2, 10).cast("long"))
-    usig = sl.select("_sl").distinct().localCheckpoint()
+    usig = stage(sl.select("_sl").distinct())
     banded = usig.select(
         "_sl",
         F.posexplode(F.array(*[
@@ -350,43 +348,39 @@ def remove_repeated_spans(docs: DataFrame, span: int = 50,
     Never a pairwise document comparison; the heavy join keys are
     content hashes, uniformly distributed — no skew."""
     toks = tokens(F.col(text_col))
-    base = (docs.select(F.col(id_col), toks.alias("_ts"))
-            .withColumn("_n", F.size("_ts"))
-            .localCheckpoint())
+    base = stage(docs.select(F.col(id_col), toks.alias("_ts"))
+                 .withColumn("_n", F.size("_ts")))
     def _gram_key(i):
         toks = [F.element_at("_ts", i + j) for j in range(span)]
         return F.struct(F.xxhash64(*toks).alias("h1"),
                         F.xxhash64(F.lit(7), *toks).alias("h2"))
 
-    grams = (base.filter(F.col("_n") >= span)
-             .select(
-                 id_col,
-                 F.posexplode(F.transform(
-                     F.sequence(F.lit(1), F.col("_n") - (span - 1)),
-                     _gram_key))
-                 .alias("_off", "_g"))
-             .select(id_col, (F.col("_off") + 1).alias("_pos"), "_g")
-             # staged once: the dup aggregate AND the probe side of the
-             # canonical-occurrence join both read this table — lazily,
-             # each branch re-evaluated the O(n·span) gram-key transform
-             # (the single most expensive expression of the pass, and it
-             # ran twice). 24 bytes/row — at 100 TB this is the staged
-             # gram table of the Lee-et-al. pipeline, same shape.
-             .localCheckpoint())
+    # staged once: the dup aggregate AND the probe side of the
+    # canonical-occurrence join both read this table — lazily, each
+    # branch re-evaluated the O(n·span) gram-key transform (the single
+    # most expensive expression of the pass, and it ran twice). 24
+    # bytes/row — at 100 TB this is the staged gram table of the
+    # Lee-et-al. pipeline, same shape.
+    grams = stage(base.filter(F.col("_n") >= span)
+                  .select(
+                      id_col,
+                      F.posexplode(F.transform(
+                          F.sequence(F.lit(1), F.col("_n") - (span - 1)),
+                          _gram_key))
+                      .alias("_off", "_g"))
+                  .select(id_col, (F.col("_off") + 1).alias("_pos"), "_g"))
     dup = (grams.groupBy("_g")
            .agg(F.count("*").alias("_c"),
                 F.min(F.struct(F.col(id_col).alias("d"),
                                F.col("_pos").alias("p"))).alias("_k"))
            .filter(F.col("_c") > 1)
            .select("_g", "_k"))
-    removed = (grams.join(dup, "_g")
-               .filter(~((F.col(id_col) == F.col("_k.d"))
-                         & (F.col("_pos") == F.col("_k.p"))))
-               .select(id_col, "_pos")
-               .localCheckpoint())  # small (non-canonical occurrences
-    #                                only); feeds both touched_ids and
-    #                                covered without recomputing the
-    #                                gram agg twice
+    # small (non-canonical occurrences only); feeds both touched_ids
+    # and covered without recomputing the gram agg twice
+    removed = stage(grams.join(dup, "_g")
+                    .filter(~((F.col(id_col) == F.col("_k.d"))
+                              & (F.col("_pos") == F.col("_k.p"))))
+                    .select(id_col, "_pos"))
     covered = (removed
                .select(id_col,
                        F.explode(F.sequence(

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import stage
+
 
 def ndcg_at_k(actual: DataFrame, predicted: DataFrame, k: int = 100,
               key: str = "node", val: str = "score") -> float:
@@ -128,7 +130,7 @@ def reconstruction_eval(edges: DataFrame, fraction: float = 0.25,
     # the centrality iterations below re-evaluate their input many
     # times — cut the completion lineage once instead of paying the
     # sampler joins/windows per power-iteration round
-    scored = scored.localCheckpoint()
+    scored = stage(scored)
     full_deg = analytics.degree_centrality(edges) \
         .select("node", F.col("centrality_micro").cast("double")
                 .alias("score"))

@@ -55,6 +55,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import stage
 from .transe import splitmix64, _U64
 
 GRAD_SCALE = float(1 << 20)    # fixed-point quantum for gradient cells
@@ -200,7 +201,7 @@ def train_glove(cooc: DataFrame, n_vocab: int, dim: int = DEFAULT_DIM,
     W, Wt, b, bt = init_params(n_vocab, dim, seed)
     hists = [np.zeros_like(W), np.zeros_like(Wt),
              np.zeros_like(b), np.zeros_like(bt)]
-    cooc = cooc.select("wi", "wj", "xq").localCheckpoint()
+    cooc = stage(cooc.select("wi", "wj", "xq"))
 
     for _epoch in range(epochs):
         Wc, Wtc, bc, btc = W.copy(), Wt.copy(), b.copy(), bt.copy()

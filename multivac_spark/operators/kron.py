@@ -41,6 +41,8 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import stage
+
 
 # --------------------------------------------------------------------------
 # distributed graph moments
@@ -58,7 +60,7 @@ def _canonical(edges: DataFrame, src: str = "head_id",
 def graph_moments(edges: DataFrame, src: str = "head_id",
                   dst: str = "tail_id") -> dict[str, int]:
     """{n, m, wedges, triangles} of the undirected simple graph."""
-    canon = _canonical(edges, src, dst).cache()
+    canon = stage(_canonical(edges, src, dst))
     m = canon.count()
     deg = (canon.select(F.col("u").alias("x"))
            .union(canon.select(F.col("v").alias("x")))
@@ -75,7 +77,6 @@ def graph_moments(edges: DataFrame, src: str = "head_id",
     open_w = e1.join(e2, "a").filter(F.col("b") < F.col("c"))
     tri = (open_w.join(canon, (open_w.b == canon.u) & (open_w.c == canon.v))
            .count())
-    canon.unpersist()
     return {"n": n, "m": m, "wedges": wedges, "triangles": int(tri)}
 
 

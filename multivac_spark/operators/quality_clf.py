@@ -31,6 +31,8 @@ import hashlib
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import stage
+
 FIXED_POINT = 1_000_000_000  # gradient quantization (transe.py posture)
 
 
@@ -60,10 +62,9 @@ def train_quality_clf(docs: DataFrame, label_col: str,
     import pandas as pd
 
     sc = docs.sparkSession.sparkContext
-    feats = (docs.select(F.col(label_col).cast("double").alias("_y"),
-                         _doc_buckets(F.col(text_col), dim).alias("_b"))
-             .filter(F.size("_b") > 0)
-             .localCheckpoint())
+    feats = stage(docs.select(F.col(label_col).cast("double").alias("_y"),
+                              _doc_buckets(F.col(text_col), dim).alias("_b"))
+                  .filter(F.size("_b") > 0))
     n_docs = feats.count()
     w = np.zeros(dim + 1, dtype=np.float64)
 

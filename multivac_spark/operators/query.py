@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.parse import parse_tokens, tokenize
 from ..functions.svo import extract_svo
+from ..session import stage
 from .canon import mention_embeddings
 from .dedup import cosine
 
@@ -151,16 +152,16 @@ def match_parts(parts: DataFrame, embeddings: DataFrame,
 
 def kg_vectors(final_triples: DataFrame,
                embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """→ (entity_vecs, rel_vecs), checkpointed: the vectors of every
+    """→ (entity_vecs, rel_vecs), staged: the vectors of every
     subj/obj and every pred. They depend only on the KG, so a service
     builds them once and passes them to each ``answer_queries``."""
-    entity_vecs = mention_embeddings(
+    entity_vecs = stage(mention_embeddings(
         final_triples.select(F.col("subj").alias("mention"))
         .union(final_triples.select(F.col("obj").alias("mention")))
-        .distinct(), embeddings).localCheckpoint()
-    rel_vecs = mention_embeddings(
+        .distinct(), embeddings))
+    rel_vecs = stage(mention_embeddings(
         final_triples.select(F.col("pred").alias("mention")).distinct(),
-        embeddings).localCheckpoint()
+        embeddings))
     return entity_vecs, rel_vecs
 
 

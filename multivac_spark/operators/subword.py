@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import stage
 from .dedup import bound
 from .textops import BPE_SPLIT_PATTERN
 
@@ -118,9 +119,8 @@ def train_bpe_distributed(word_counts: DataFrame,
     merge step over the word-type table (map-side combinable; only
     the single best pair ever reaches the driver). The scale path
     when even the type histogram is too wide to collect."""
-    seg = (word_counts
-           .select("word", "cnt", _seg_init(F.col("word")).alias("s"))
-           .localCheckpoint())
+    seg = stage(word_counts
+                .select("word", "cnt", _seg_init(F.col("word")).alias("s")))
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pairs = (seg
@@ -141,9 +141,8 @@ def train_bpe_distributed(word_counts: DataFrame,
         a, b = best[0]["a"], best[0]["b"]
         merges.append((a, b))
         pat, rep = _merge_pat(a, b)
-        seg = (seg.withColumn("s", F.replace(F.col("s"), F.lit(pat),
-                                             F.lit(rep)))
-               .localCheckpoint())
+        seg = stage(seg.withColumn("s", F.replace(F.col("s"), F.lit(pat),
+                                                  F.lit(rep))))
     return merges
 
 

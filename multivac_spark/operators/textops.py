@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from ..session import stage
+
 STOPWORDS = ["the", "a", "an", "of", "in", "and", "to", "is", "with",
              "this", "each", "every"]
 
@@ -181,11 +183,16 @@ def train_bigram_lm(docs: DataFrame, text_col: str = "text"
     # CONCURRENT jobs (guide §2.6: actions are only sequential because
     # driver code calls them sequentially; the second job's tasks
     # back-fill executors freed by the first job's tail).
+    # Each pool thread inherits the caller's local properties and tags
+    # (job group, scheduler pool), so the two jobs count as the caller's.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    staged = inheritable_thread_target(docs.sparkSession)(stage)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bi = pool.submit(bigrams_lazy.localCheckpoint)
-        f_un = pool.submit(unigrams_lazy.localCheckpoint)
+        f_bi = pool.submit(staged, bigrams_lazy)
+        f_un = pool.submit(staged, unigrams_lazy)
         bigrams, unigrams = f_bi.result(), f_un.result()
     # model tables are vocabulary-bounded: checkpoint them once so the
     # vocab count here and every downstream scoring pass reuse the

@@ -42,6 +42,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import stage
+
 GRAD_SCALE = float(1 << 20)   # fixed-point quantum for gradient cells
 DEFAULT_DIM = 50
 DEFAULT_MARGIN = 1.0
@@ -175,10 +177,9 @@ def train_transe(edges: DataFrame, n_ent: int, n_rel: int,
     spark = edges.sparkSession
     sc = spark.sparkContext
     E, R = init_embeddings(n_ent, n_rel, dim, seed)
-    src = (edges.select(F.col("head_id").cast("long").alias("h"),
-                        F.col("rel_id").cast("long").alias("r"),
-                        F.col("tail_id").cast("long").alias("t"))
-           .localCheckpoint())
+    src = stage(edges.select(F.col("head_id").cast("long").alias("h"),
+                             F.col("rel_id").cast("long").alias("r"),
+                             F.col("tail_id").cast("long").alias("t")))
 
     for epoch in range(epochs):
         bc = sc.broadcast((E, R))
@@ -383,9 +384,9 @@ def predict_completions_transe(final_triples: DataFrame,
     from .materialize import build_graph_tables
 
     g = build_graph_tables(final_triples)
-    entities = g["entities"].localCheckpoint()
-    relations = g["relations"].localCheckpoint()
-    edges = g["edges"].localCheckpoint()
+    entities = stage(g["entities"])
+    relations = stage(g["relations"])
+    edges = stage(g["edges"])
     n_ent = entities.count()
     n_rel = relations.count()
     E, R = train_transe(edges, n_ent, n_rel, dim=dim, epochs=epochs,
@@ -551,7 +552,7 @@ def predicted_objects(final_triples: DataFrame, E: np.ndarray,
     from .materialize import build_graph_tables
 
     g = build_graph_tables(final_triples)
-    entities = g["entities"].localCheckpoint()
+    entities = stage(g["entities"])
     ent_b = F.broadcast(entities)
     heads = (entities
              .filter(F.col("entity").contains(query.lower()))

@@ -14,7 +14,7 @@ echo-the-args-dict debug response.
 
 Serving model: ``http.server.ThreadingHTTPServer`` (stdlib — Flask is
 not a dependency of this repo) wrapping ONE long-lived SparkSession;
-each request runs Spark jobs over the pre-checkpointed triple and
+each request runs Spark jobs over the pre-staged triple and
 mention-vector tables (one NL answer was 17 jobs and about 6 s on a
 4-core local session, 300-page KG), the same deployment shape as the
 reference's single-process Flask app. For production-scale QPS the
@@ -33,6 +33,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import functions as F
 
 from ..operators import query as Q
+from ..session import stage
 
 _FORM_HTML = b"""<!doctype html><html><body>
 <form action="/results" method="get">
@@ -53,7 +54,7 @@ class AnswerService:
     def __init__(self, spark, final_triples, embeddings,
                  lexicon, lemmas):
         self.spark = spark
-        self.triples = final_triples.localCheckpoint()
+        self.triples = stage(final_triples)
         self.embeddings = embeddings
         self.vectors = Q.kg_vectors(self.triples, embeddings)
         self.lexicon = lexicon

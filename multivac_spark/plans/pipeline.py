@@ -7,10 +7,11 @@ nine tables for every ``PipelineConfig``. Like the reference's one
 step per document, ``triples`` is one call of the extraction kernel
 ``functions.fused.fused_extract_stage`` (html→text → clean → coref →
 parse → extractor → normalize, one Arrow pass), the same kernel the
-streaming ingest runs. ``run_pipeline`` keeps the DAG one lazy
-DataFrame DAG so Catalyst sees the whole plan (broadcast joins for
-every dictionary-sized side), and ``plans.run.run_materialized``
-commits its stages with resume.
+streaming ingest runs. The seven ``STAGES`` are the tables other
+tables read more than once: ``run_pipeline`` stages each of them
+lazily (``session.stage``), so any set of table reads computes each
+of them once, and ``plans.run.run_materialized`` commits the same
+seven with resume.
 """
 
 from __future__ import annotations
@@ -24,7 +25,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import fused
 from ..operators import canon, materialize
+from ..session import stage
 from ..sources import vocab
+
+#: the tables ``run_pipeline`` stages and ``run_materialized`` commits,
+#: in dependency order
+STAGES = ("triples", "entity_clusters", "final_triples", "entities",
+          "relations", "edges", "type_constraints")
 
 
 @dataclass
@@ -65,11 +72,12 @@ def default_lexicons() -> tuple[dict[str, str], dict[str, str]]:
 
 class LazyTables(Mapping):
     """Mapping of table name → DataFrame where each value is built on
-    FIRST ACCESS by a memoized thunk of ``_tables``. Constructing the
-    mapping schedules zero Spark jobs — the clustering stages (which are
-    eager by design: bounded dictionary collect + union-find, canon.py)
-    only run when a caller touches a clustering-dependent table.
-    Job-count-listener pinned in tests/test_query_mapping.py."""
+    FIRST ACCESS by a memoized thunk of ``_tables``, so repeated access
+    returns the same object. Constructing the mapping schedules zero
+    Spark jobs — the clustering stages (which are eager by design:
+    bounded dictionary collect + union-find, canon.py) only run when a
+    caller touches a clustering-dependent table. Job-count pinned in
+    tests/test_lazy_pipeline.py."""
 
     def __init__(self, thunks: dict[str, Callable[[], DataFrame]]):
         self._thunks = thunks
@@ -165,9 +173,17 @@ def run_pipeline(spark: SparkSession,
                  cfg: PipelineConfig | None = None) -> Mapping[str, DataFrame]:
     """documents(url, warc_ts, html, text, lang) + embeddings(token,
     vector) → all intermediate and final tables, lazily: building the
-    mapping runs no job; extraction-side tables are plain lazy
-    DataFrames; canonicalization-side tables materialize on first
-    access (their clustering kernel is a deliberate bounded-dictionary
-    driver pass, canon.cluster_entities)."""
+    mapping runs no job, nor does touching ``triples`` or the
+    ``unique_*`` tables. Each ``STAGES`` table is
+    ``stage(build(), eager=False)``: the first action that reads it
+    computes its rows (a shuffled plan runs its AQE stage jobs at
+    first access) and every later read reuses them, so any set of
+    reads passes each document through the extraction kernel once.
+    The clustering kernel behind ``entity_clusters`` is a deliberate
+    bounded-dictionary driver pass (canon.cluster_entities)."""
+
+    def commit(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        return stage(build(), eager=False) if name in STAGES else build()
+
     return LazyTables(_tables(documents, embeddings, cfg or PipelineConfig(),
-                              lambda name, build: build()))
+                              commit))

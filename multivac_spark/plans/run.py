@@ -21,10 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 # kept importable here for tools that wrap this name
 from ..functions.normalize import normalize_triples  # noqa: F401
 from . import lineage, tables
-from .pipeline import LazyTables, PipelineConfig, _tables
-
-STAGES = ("triples", "entity_clusters", "final_triples", "entities",
-          "relations", "edges", "type_constraints")
+from .pipeline import STAGES, LazyTables, PipelineConfig, _tables
 
 
 def run_materialized(spark: SparkSession,

@@ -1,8 +1,15 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the one
+staging rule.
 
 The knobs below are the ones that matter at 100 TB (AQE, skew-join
 handling, shuffle partition sizing, Arrow batch size for the pandas-UDF
 boundary); locally they are simply harmless.
+
+``stage`` is the one way the package materializes an intermediate
+that several consumers (or loop rounds) read: a local checkpoint by
+default, a reliable one when the deployment has set a checkpoint
+directory. ``stats_barrier`` is ``stage`` plus a fresh-scan rebuild,
+for frames an iterative loop joins against themselves.
 """
 
 from __future__ import annotations
@@ -58,12 +65,34 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def stats_barrier(df):
-    """Materialize ``df`` (localCheckpoint) and rebuild it as a fresh
-    scan with default statistics — the lineage cut for iterative
-    self-join loops.
+def stage(df, eager: bool = True):
+    """Materialize ``df`` once so every consumer reads the stored rows
+    instead of re-running its plan; the one staging rule of the
+    package.
 
-    Why plain ``localCheckpoint`` is not enough: Catalyst's
+    The checkpoint is ``df.localCheckpoint(eager)`` — executor-local
+    blocks, lost with their executor — unless the deployment has set a
+    checkpoint directory (``SparkContext.setCheckpointDir``), in which
+    case it is the reliable ``df.checkpoint(eager)`` written under that
+    directory, which survives executor loss. Either way the lineage is
+    cut, and the origin plan's statistics ride along (SPARK-39748).
+
+    ``eager=False`` defers the materialization to the first action
+    that reads the frame; a plan with no shuffle then runs no job here
+    (AQE still runs a shuffle plan's stage jobs at staging time). A
+    lazy reliable checkpoint computes the plan twice: once for that
+    action and once more for the checkpoint write.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
+def stats_barrier(df):
+    """``stage`` ``df`` and rebuild it as a fresh scan with default
+    statistics — the lineage cut for iterative self-join loops.
+
+    Why ``stage`` alone is not enough: Catalyst's
     size-only estimator (``SizeInBytesOnlyStatsPlanVisitor.visitJoin``)
     sets a join's ``sizeInBytes`` to the PRODUCT of its children's
     sizes, and since SPARK-39748 a checkpointed ``LogicalRDD`` carries
@@ -71,7 +100,7 @@ def stats_barrier(df):
     is joined against itself (pointer-doubling connected components,
     power iteration), the carried BigInt therefore at least squares
     every round — measured: 54 → 10,249 bits in 8 rounds WITH a
-    per-round localCheckpoint — until the driver serializes every
+    per-round checkpoint — until the driver serializes every
     stats lookup on one core inside ``BigInteger.multiplyToomCook3``
     over numbers with millions of digits (the 40-minute "idle
     executors, one pegged JVM core" failure mode).
@@ -88,7 +117,7 @@ def stats_barrier(df):
     from pyspark.sql import DataFrame
 
     spark = df.sparkSession
-    ck = df.localCheckpoint()
+    ck = stage(df)
     jspark = spark._jsparkSession
     try:
         jdf = jspark.internalCreateDataFrame(

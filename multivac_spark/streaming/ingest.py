@@ -121,13 +121,17 @@ def ingest_available_now(spark: SparkSession,
                          lexicon: dict[str, str],
                          lemmas: dict[str, str],
                          lang_filter: str | None = "en",
-                         normalize: bool = False,
+                         normalize: bool = True,
                          verb_lemmas: dict[str, str] | None = None) -> int:
     """Drain all unprocessed document parquet files from ``docs_dir``
-    through the doc→triples extraction kernel (``normalize=True``:
-    with the batch build's predicate lemmas unless ``verb_lemmas`` is
-    given) into a triples table at ``out_dir``. Returns rows appended
-    in this invocation."""
+    through the doc→triples extraction kernel into a triples table at
+    ``out_dir``. Returns rows appended in this invocation.
+
+    By default the drain writes the batch build's ``triples``
+    (normalized, predicates lemmatized with the build's table unless
+    ``verb_lemmas`` is given), the table ``counts_update_available_now``
+    and ``kg_update.refresh_canonical_graph`` read; ``normalize=False``
+    writes the raw extractor output."""
     docs = read_stream(spark, DOCUMENTS_SCHEMA, docs_dir)
     triples = fused_extract_stage(docs, lexicon, lemmas, lang_filter,
                                   normalize=normalize,

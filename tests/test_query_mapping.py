@@ -38,7 +38,7 @@ def kg(spark):
     emb = corpus.embeddings_df(spark)
     tables = run_pipeline(spark, docs, emb,
                           PipelineConfig(top_n_ent=3000, top_n_rel=50))
-    return tables["final_triples"].localCheckpoint(), emb
+    return tables["final_triples"], emb
 
 
 def test_answer_queries_end_to_end(spark, kg):

@@ -843,7 +843,7 @@ def test_duckdb_twin_on_pipeline_triples(spark):
     tables = run_pipeline(spark, corpus.documents_df(spark, 60),
                           corpus.embeddings_df(spark),
                           PipelineConfig(top_n_ent=5000, top_n_rel=50))
-    df = tables["final_triples"].select("subj", "pred", "obj").cache()
+    df = tables["final_triples"].select("subj", "pred", "obj")
     rows = sorted(map(tuple, df.collect()))
     assert len(rows) > 100
     queries = [

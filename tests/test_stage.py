@@ -1,0 +1,125 @@
+"""session.stage, the one staging rule: a local checkpoint by default,
+a reliable one under the deployment's checkpoint directory. Plus its
+two users with a contract of their own: the lazy ``run_pipeline``
+stages its seven ``STAGES`` tables (one extraction pass per document
+for any set of reads), and ``textops.train_bigram_lm`` stages its two
+aggregations from pool threads under the caller's job group."""
+
+import os
+import tempfile
+
+import pytest
+
+from multivac_spark.functions import fused
+from multivac_spark.operators import textops
+from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
+from multivac_spark.session import stage, stats_barrier
+from multivac_spark.sources import corpus
+
+
+def _checkpoint_file(df):
+    """The reliable checkpoint path of a staged frame's RDD, or None."""
+    opt = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    return opt.get() if opt.isDefined() else None
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _jobs(spark, group):
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def checkpoint_dir(spark):
+    """A checkpoint directory set on the shared context for one test,
+    unset again afterwards."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    with tempfile.TemporaryDirectory() as d:
+        sc.setCheckpointDir(d)
+        try:
+            yield d
+        finally:
+            sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None
+
+
+def test_stage_is_reliable_under_a_checkpoint_dir(spark, checkpoint_dir):
+    df = spark.range(200).selectExpr("id", "id % 7 AS k")
+    staged = stage(df.groupBy("k").count())
+    path = _checkpoint_file(staged)
+    assert path is not None and checkpoint_dir in path
+    parts = [f for _, _, fs in os.walk(checkpoint_dir) for f in fs
+             if f.startswith("part-")]
+    assert parts
+    assert _rows(staged) == _rows(df.groupBy("k").count())
+    # the barrier's rebuild reads the reliable checkpoint just the same
+    assert _rows(stats_barrier(df)) == _rows(df)
+
+
+def test_stage_is_local_without_a_checkpoint_dir(spark):
+    assert spark.sparkContext.getCheckpointDir() is None
+    df = spark.range(50).selectExpr("id", "id * 2 AS v")
+    staged = stage(df)
+    assert _checkpoint_file(staged) is None
+    assert _rows(staged) == _rows(df)
+
+
+def test_lazy_stage_of_a_plan_without_shuffle_runs_no_job(spark):
+    sc = spark.sparkContext
+    df = spark.range(50).selectExpr("id", "id * 2 AS v").filter("v > 10")
+    sc.setJobGroup("lazy-stage", "stage(eager=False) schedules nothing")
+    try:
+        staged = stage(df, eager=False)
+        assert _jobs(spark, "lazy-stage") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert staged.count() == 44
+
+
+def test_lazy_build_extracts_each_document_once(spark, monkeypatch):
+    """Reading any set of tables passes every English document through
+    the extraction kernel once: the accumulator taps the kernel's input
+    after its language filter."""
+    docs = corpus.documents_df(spark, 40, partitions=2)
+    n_en = docs.filter("lang = 'en'").count()
+    passes = spark.sparkContext.accumulator(0)
+    real = fused.fused_extract_stage
+
+    def tapped(documents, lexicon, lemmas, lang_filter="en", **kw):
+        def tap(batches):
+            for b in batches:
+                passes.add(b.num_rows)
+                yield b
+
+        src = (documents.filter(documents.lang == lang_filter)
+               if lang_filter else documents)
+        return real(src.mapInArrow(tap, src.schema), lexicon, lemmas,
+                    lang_filter, **kw)
+
+    monkeypatch.setattr(fused, "fused_extract_stage", tapped)
+    tables = run_pipeline(spark, docs, corpus.embeddings_df(spark),
+                          PipelineConfig(top_n_ent=500, top_n_rel=20))
+    for name in ("triples", "final_triples", "edges", "type_constraints"):
+        assert tables[name].count() > 0
+    assert passes.value == n_en > 0
+
+
+def test_train_bigram_lm_stages_in_the_callers_job_group(spark):
+    """Both aggregations run from pool threads; their jobs belong to
+    the caller's job group, so no job of the call is left ungrouped."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [(0, "a b a b"), (1, "a b c"), (2, "c a b")],
+        "doc_id long, text string")
+    ungrouped = set(_jobs(spark, None))
+    sc.setJobGroup("lm-train", "train_bigram_lm")
+    try:
+        lm = textops.train_bigram_lm(docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert lm["vocab_n"] == 3
+    assert set(_jobs(spark, None)) == ungrouped
+    assert len(_jobs(spark, "lm-train")) >= 3

@@ -6,7 +6,7 @@ import tempfile
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from multivac_spark.plans.pipeline import default_lexicons
+from multivac_spark.plans.pipeline import default_lexicons, run_pipeline
 from multivac_spark.sources import corpus
 from multivac_spark.streaming.ingest import (append_available_now,
                                              ingest_available_now,
@@ -39,6 +39,23 @@ def test_available_now_exactly_once(spark):
                                   lex, lemmas)
         total = spark.read.parquet(out_dir).count()
         assert total == count1 + n3
+
+
+def test_default_drain_writes_the_build_triples(spark):
+    """A drain with default arguments writes the rows of the batch
+    build's ``triples``: the table the counts merge and the canonical
+    refresh read as the build's normalized triples."""
+    lex, lemmas = default_lexicons()
+    docs = corpus.documents_df(spark, 30, partitions=2)
+    with tempfile.TemporaryDirectory() as d:
+        docs.write.parquet(f"{d}/docs")
+        n = ingest_available_now(spark, f"{d}/docs", f"{d}/triples",
+                                 f"{d}/ckpt", lex, lemmas)
+        got = sorted(map(tuple, spark.read.parquet(f"{d}/triples").collect()))
+    want = sorted(map(tuple, run_pipeline(
+        spark, docs, corpus.embeddings_df(spark))["triples"].collect()))
+    assert n == len(got) > 0
+    assert got == want
 
 
 def test_rows_appended_counts_every_batch(spark):
