@@ -5,8 +5,10 @@ Reference behaviors:
   (get_kg_query_params.py:16-25): degree / (V-1);
 * eigenvector centrality — nx.eigenvector_centrality with tolerance
   escalation ×10 on convergence failure (calculate_network_change.py:22-31);
-  rebuilt as power iteration over the edge DataFrame (join + groupBy per
-  step, a stats_barrier every few steps to cut lineage);
+  rebuilt as power iteration: a numpy loop over the collected edge list
+  when it fits ``session.driver_frame``, else over the edge DataFrame
+  (join + groupBy per step, a stats_barrier every few steps to cut
+  lineage);
 * centrality delta — (after-before)/(before+1) per node over a full
   outer join (calculate_network_change.py:17-54);
 * key-triple scoring — score(edge) = gain(head)+gain(tail), top-k
@@ -19,6 +21,8 @@ reference building nx.Graph from the first two edge columns
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import stage
@@ -57,23 +61,20 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
                            tol: float = 1e-6,
                            src: str = "head_id",
                            dst: str = "tail_id",
-                           checkpoint_every: int = 5,
-                           driver_fastpath_edges: int = 1_000_000
-                           ) -> DataFrame:
+                           checkpoint_every: int = 5) -> DataFrame:
     """Power iteration; mirrors the reference's tolerance-escalation loop
     (calculate_network_change.py:22-31) by relaxing tol ×10 if the
     iteration fails to converge within max_iter.
 
-    **Driver fast path** (graphs whose symmetric edge list is ≤
-    ``driver_fastpath_edges``): collect the edge list once and iterate
-    in numpy — the same formula, norm, convergence bound, and
-    escalation schedule, without paying one scheduled Spark job per
-    iteration (~0.3s × up to 90 iterations of pure latency on a small
-    graph). Same design precedent as canon.cluster_entities: work that
-    does not grow with the corpus runs where latency is lowest. Pass
-    ``driver_fastpath_edges=0`` to force the distributed path.
+    **Driver route** (the symmetric edge list fits
+    ``session.driver_frame``, at most ``DRIVER_ROWS`` rows): that one
+    collect feeds a numpy loop with the same formula, norm, convergence
+    bound, and escalation schedule, without paying one scheduled Spark
+    job per iteration (~0.3s × up to 90 iterations of pure latency on a
+    small graph). Same design precedent as canon.cluster_entities: work
+    that does not grow with the corpus runs where latency is lowest.
 
-    **Distributed path**: ONE driver action per iteration (VERDICT r1
+    **Distributed route**: ONE driver action per iteration (VERDICT r1
     #7) — the norm and the convergence delta come from a single fused
     aggregate — s2 = Σ raw², dot = Σ raw·prev — because prev is
     unit-norm, so ‖x_new − x_prev‖₂ = √(2 − 2·dot/√s2). Convergence
@@ -82,20 +83,16 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
     Lineage (and carried join statistics) is cut by a stats_barrier
     every ``checkpoint_every`` rounds — 1 job/iter + 1 every k, down
     from 3/iter."""
-    from ..session import stats_barrier
+    from ..session import driver_frame, stats_barrier
 
-    sym = stats_barrier(_sym(edges, src, dst))
+    sym = _sym(edges, src, dst)
+    pdf = driver_frame(sym)
+    if pdf is not None:
+        return _driver_scores(sym, pdf, _eigenvector_driver, max_iter, tol)
+
+    sym = stats_barrier(sym)
     nodes = stats_barrier(sym.select(F.col("u").alias("node")).distinct())
     n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("score", F.lit(0.0))
-
-    if driver_fastpath_edges:
-        n_sym = sym.count()
-        if n_sym <= driver_fastpath_edges:
-            return _eigenvector_driver(edges.sparkSession, sym, n,
-                                       max_iter, tol)
-
     x = nodes.withColumn("score", F.lit(1.0 / n ** 0.5))
     current_tol = tol
     it_total = 0
@@ -126,23 +123,29 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
     return x
 
 
-def _eigenvector_driver(spark, sym: DataFrame, n: int,
-                        max_iter: int, tol: float) -> DataFrame:
+def _driver_scores(e: DataFrame, pdf, kernel, *args) -> DataFrame:
+    """The driver routes' one preamble and epilogue: index the collected
+    (u, v) edge frame ``pdf`` of ``e`` (sorted node ids, each edge's
+    endpoint indices), run the numpy ``kernel(u, v, n, *args)`` → one
+    score per node, and return (node, score). A graph without nodes
+    returns no rows, typed from ``e``'s (u, v) columns."""
+    if pdf.empty:
+        return (e.select(F.col("u").alias("node"))
+                .union(e.select(F.col("v").alias("node")))
+                .select("node", F.lit(0.0).alias("score")))
+    ends = (pdf["u"].to_numpy(), pdf["v"].to_numpy())
+    node_ids = np.unique(np.concatenate(ends))
+    u, v = (np.searchsorted(node_ids, a) for a in ends)
+    x = kernel(u, v, len(node_ids), *args)
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"node": node_ids.tolist(), "score": x}))
+
+
+def _eigenvector_driver(u, v, n: int, max_iter: int, tol: float):
     """numpy twin of the distributed loop: identical update, norm,
     L2 convergence bound, and ×10 tolerance escalation. Validated
     against the pinned integer oracle (entry `eigenvector_centrality`)
     and the two-component pytest."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sym.collect()
-    node_ids = sorted({r["u"] for r in rows})
-    idx = {v: i for i, v in enumerate(node_ids)}
-    u = np.fromiter((idx[r["u"]] for r in rows), dtype=np.int64,
-                    count=len(rows))
-    v = np.fromiter((idx[r["v"]] for r in rows), dtype=np.int64,
-                    count=len(rows))
-
     x = np.full(n, 1.0 / n ** 0.5)
     current_tol = tol
     for _attempt in range(3):
@@ -150,20 +153,15 @@ def _eigenvector_driver(spark, sym: DataFrame, n: int,
             raw = np.bincount(u, weights=x[v], minlength=n)
             s2 = float(raw @ raw)
             if s2 == 0.0:
-                break
+                return x
             norm = s2 ** 0.5
             cos = min(1.0, max(-1.0, float(raw @ x) / norm))
             x = raw / norm
             delta_l2 = max(0.0, 2.0 - 2.0 * cos) ** 0.5
             if delta_l2 * n ** 0.5 < n * current_tol:
-                return spark.createDataFrame(
-                    pd.DataFrame({"node": node_ids, "score": x}))
-        else:
-            current_tol *= 10
-            continue
-        break
-    return spark.createDataFrame(pd.DataFrame({"node": node_ids,
-                                               "score": x}))
+                return x
+        current_tol *= 10
+    return x
 
 
 def centrality_delta(before: DataFrame, after: DataFrame,
@@ -197,8 +195,7 @@ def top_triples_by_gain(edges: DataFrame, gains: DataFrame,
 def pagerank(edges: DataFrame, damping: float = 0.85,
              max_iter: int = 50, tol: float = 1e-8,
              src: str = "head_id", dst: str = "tail_id",
-             checkpoint_every: int = 5,
-             driver_fastpath_edges: int = 1_000_000) -> DataFrame:
+             checkpoint_every: int = 5) -> DataFrame:
     """Directed PageRank over the KG edge table → (node, score).
 
     Beyond the reference's centrality pair (degree/eigenvector,
@@ -209,19 +206,26 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     weights, dangling-node mass redistributed uniformly, L1
     convergence ``Σ|Δ| < n·tol``; scores sum to 1.
 
-    **Driver fast path** (bounded graphs — the canonical KG's node set
-    is dictionary-bounded): one collect of the distinct edge list,
-    numpy iteration. **Distributed path** (``driver_fastpath_edges=0``
-    to force): ONE action per iteration — the L1 delta and the NEXT
-    iteration's dangling mass come from a single fused aggregate; the
-    only shuffle per round is the keyed groupBy(dst) of contributions;
-    ``stats_barrier`` every ``checkpoint_every`` rounds cuts the
-    self-join lineage exactly like eigenvector_centrality above.
+    **Driver route** (bounded graphs — the canonical KG's node set is
+    dictionary-bounded): the distinct edge list, when it fits
+    ``session.driver_frame``, feeds a numpy loop. **Distributed
+    route** otherwise: ONE action per iteration — the L1 delta and the
+    NEXT iteration's dangling mass come from a single fused aggregate;
+    the only shuffle per round is the keyed groupBy(dst) of
+    contributions; ``stats_barrier`` every ``checkpoint_every`` rounds
+    cuts the self-join lineage exactly like eigenvector_centrality
+    above.
     """
-    from ..session import stats_barrier
+    from ..session import driver_frame, stats_barrier
 
-    e = stats_barrier(edges.select(F.col(src).alias("u"),
-                                   F.col(dst).alias("v")).distinct())
+    distinct = edges.select(F.col(src).alias("u"),
+                            F.col(dst).alias("v")).distinct()
+    pdf = driver_frame(distinct)
+    if pdf is not None:
+        return _driver_scores(distinct, pdf, _pagerank_driver,
+                              damping, max_iter, tol)
+
+    e = stats_barrier(distinct)
     nodes = (e.select(F.col("u").alias("node"))
              .union(e.select(F.col("v").alias("node"))).distinct())
     outdeg = e.groupBy(F.col("u").alias("node")) \
@@ -229,13 +233,6 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     # (node, outdeg|null) — null marks a dangling node
     base = stats_barrier(nodes.join(outdeg, "node", "left"))
     n = base.count()
-    if n == 0:
-        return base.select("node", F.lit(0.0).alias("score"))
-
-    if driver_fastpath_edges and e.count() <= driver_fastpath_edges:
-        return _pagerank_driver(edges.sparkSession, e, n,
-                                damping, max_iter, tol)
-
     x = base.withColumn("score", F.lit(1.0 / n))
     dangling = (x.filter(F.col("outdeg").isNull())
                 .agg(F.sum("score")).collect()[0][0]) or 0.0
@@ -264,20 +261,10 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     return x.select("node", "score")
 
 
-def _pagerank_driver(spark, e: DataFrame, n: int, damping: float,
-                     max_iter: int, tol: float) -> DataFrame:
+def _pagerank_driver(u, v, n: int, damping: float, max_iter: int,
+                     tol: float):
     """numpy twin of the distributed loop: identical update order,
     dangling redistribution, and L1 stop rule."""
-    import numpy as np
-    import pandas as pd
-
-    rows = e.collect()
-    node_ids = sorted({r["u"] for r in rows} | {r["v"] for r in rows})
-    idx = {v: i for i, v in enumerate(node_ids)}
-    u = np.fromiter((idx[r["u"]] for r in rows), dtype=np.int64,
-                    count=len(rows))
-    v = np.fromiter((idx[r["v"]] for r in rows), dtype=np.int64,
-                    count=len(rows))
     outdeg = np.bincount(u, minlength=n).astype(np.float64)
     dangling_mask = outdeg == 0.0
 
@@ -292,8 +279,7 @@ def _pagerank_driver(spark, e: DataFrame, n: int, damping: float,
         x = nxt
         if l1 < n * tol:
             break
-    return spark.createDataFrame(pd.DataFrame({"node": node_ids,
-                                               "score": x}))
+    return x
 
 
 def frontier_reach(adj: DataFrame, start: DataFrame,

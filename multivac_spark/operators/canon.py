@@ -17,14 +17,18 @@ Spark-first replacement:
    hyperplanes, candidate pairs from equal band keys only (no O(n²));
 3. exact cosine on candidates, keep dist ≤ threshold → similarity edges;
 4. connected components by min-label propagation with pointer doubling
-   (driver union-find when the edge set is small enough to collect);
-   the distributed loop converges in O(log diameter) rounds —
-   GraphFrames-free;
+   (driver union-find when the edge list fits ``session.driver_frame``,
+   the package's one driver-route rule); the distributed loop converges
+   in O(log diameter) rounds — GraphFrames-free;
 5. per-block refinement: each connected component (a block) runs the
-   reference's average linkage cut at the threshold
-   (``average_linkage_labels``; ``refine_components`` on the
-   distributed path), which splits single-linkage chains back apart;
-6. representative aggregation + broadcast-join substitution.
+   reference's average linkage cut at the threshold (``_split_block``;
+   ``refine_components`` on the distributed route), which splits
+   single-linkage chains back apart;
+6. one representative rule for both routes (``representative_rows``)
+   + broadcast-join substitution.
+
+Steps 1-6 run as one numpy kernel on the driver when the mention
+dictionary fits ``session.driver_frame`` (``cluster_entities``).
 
 Documented divergences (SURVEY.md §2.6): average linkage runs within
 each LSH-connected block, not over all mention pairs; a block above
@@ -36,11 +40,13 @@ test pins the difference (Jaccard ≥ 0.9 at test scale).
 from __future__ import annotations
 
 import hashlib
+from collections import defaultdict
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import stage
+from ..session import driver_frame, stage
 
 EMBED_DIM = 50
 DEFAULT_THRESHOLD = 0.2  # cosine distance (rdf_graph.py:52)
@@ -184,8 +190,6 @@ def similarity_edges(vectors: DataFrame,
     only on Hamming survivors with vectors re-attached by broadcast
     (the mention dictionary is top-N-truncated → broadcastable by
     construction); dropDuplicates shuffles only final-edge-scale rows."""
-    import pandas as pd
-
     planes = _seeded_planes(N_PLANES, EMBED_DIM)
     rows_per_band = N_PLANES // BANDS
 
@@ -258,26 +262,26 @@ def similarity_edges(vectors: DataFrame,
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          key: str = "mention",
-                         max_iter: int = 20,
-                         driver_fastpath_edges: int = 5_000_000) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """vertices(key), edges(src, dst) → (key, cluster_label).
 
-    Two paths:
-    * **driver union-find fast path** when the edge set is small enough
-      to collect (default < 5M pairs). This is not a scale cheat: the
-      clustered dictionary is top-N-truncated (top_n_ent=50000,
+    Two routes, chosen by ``session.driver_frame`` on the edge list:
+    * **driver union-find** when the edges fit (at most
+      ``DRIVER_ROWS``). This is not a scale cheat: the clustered
+      dictionary is top-N-truncated (top_n_ent=50000,
       rdf_graph.py:25) *by the reference's own design*, so the
       similarity edges are bounded regardless of corpus size; union-find
-      on the driver replaces 5+ shuffle rounds with one collect +
-      one broadcast-joinable label map.
+      over the one Arrow collect replaces 5+ shuffle rounds, and the
+      label map goes back as one broadcast-joinable Arrow frame.
     * **distributed min-label propagation** otherwise: symmetrized
       edges, a one-hop neighbor-min step then a pointer-doubling jump
       (label := label(label)) per round, one ``stats_barrier`` per round
       to cut lineage and stats; rounds = O(log component diameter).
     """
-    n_edges = edges.count()
-    if n_edges < driver_fastpath_edges:
-        pairs = edges.select("src", "dst").collect()
+    from ..session import stats_barrier
+
+    pdf = driver_frame(edges.select("src", "dst"))
+    if pdf is not None:
         parent: dict[str, str] = {}
 
         def find(x: str) -> str:
@@ -288,25 +292,21 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 parent[x], x = root, parent[x]
             return root
 
-        for r in pairs:
-            ra, rb = find(r["src"]), find(r["dst"])
+        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+            ra, rb = find(a), find(b)
             if ra != rb:
                 # min-label union keeps the lexicographic-min
-                # representative semantics of the distributed path
+                # representative semantics of the distributed route
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        label_map = {x: find(x) for x in list(parent)}
-        spark = vertices.sparkSession
-        if label_map:
-            map_df = spark.createDataFrame(
-                list(label_map.items()), f"{key} string, _cc_label string")
-        else:
-            map_df = spark.createDataFrame([], f"{key} string, _cc_label string")
+        label_map = pd.DataFrame({key: list(parent),
+                                  "_cc_label": [find(x) for x in parent]})
+        map_df = vertices.sparkSession.createDataFrame(
+            label_map, f"{key} string, _cc_label string")
         return (vertices.select(key)
                 .join(F.broadcast(map_df), key, "left")
                 .select(F.col(key),
                         F.coalesce("_cc_label", F.col(key)).alias("label")))
-    from ..session import stats_barrier
 
     sym = stats_barrier(
         edges.select("src", "dst")
@@ -361,23 +361,44 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 # 5. representatives + substitution
 # --------------------------------------------------------------------------
 
-def cluster_representatives(labels: DataFrame,
-                            char_limit: int = CHAR_LIMIT) -> DataFrame:
-    """(mention, label) → (mention, rep).
+def _split_block(names: list[str], rows, unit_vecs: np.ndarray,
+                 threshold: float) -> list[list[str]]:
+    """One LSH-connected block of mentions → its clusters: the
+    reference's average linkage cut at the threshold (rdf_graph.py:93-98)
+    over ``unit_vecs[rows]``, so single-linkage chains split back apart
+    exactly as fcluster would. A single mention, or a block over
+    ``LINKAGE_CAP``, stays one cluster (documented fallback: single-
+    linkage semantics; unreachable for dictionary-sized mention sets in
+    practice)."""
+    if len(rows) == 1 or len(rows) > LINKAGE_CAP:
+        return [names]
+    groups: dict[int, list[str]] = defaultdict(list)
+    for name, root in zip(names, average_linkage_labels(unit_vecs[rows],
+                                                        threshold)):
+        groups[int(root)].append(name)
+    return list(groups.values())
+
+
+def representative_rows(clusters, char_limit: int = CHAR_LIMIT):
+    """Clusters (lists of member mentions) → pandas (mention, label,
+    rep); the one representative rule of both routes.
 
     Reference rule (rdf_graph.get_cluster_representatives, :205-217):
     if the concatenated member string exceeds char_limit → first member,
     else ' | '.join(members). Member order here is lexicographic
-    (documented deterministic divergence from dict insertion order)."""
-    grouped = (labels.groupBy("label")
-               .agg(F.sort_array(F.collect_list("mention")).alias("members")))
-    rep = F.when(
-        F.length(F.concat_ws("", "members")) > char_limit,
-        F.element_at("members", 1)
-    ).otherwise(F.concat_ws(" | ", "members"))
-    return (grouped.withColumn("rep", rep)
-            .select("label", F.explode("members").alias("mention"), "rep")
-            .select("mention", "label", "rep"))
+    (documented deterministic divergence from dict insertion order), and
+    the label is the first member."""
+    cols: dict[str, list[str]] = {"mention": [], "label": [], "rep": []}
+    for members in clusters:
+        members = sorted(members)
+        label = members[0]
+        joined = "".join(members)
+        rep = members[0] if len(joined) > char_limit else " | ".join(members)
+        for m in members:
+            cols["mention"].append(m)
+            cols["label"].append(label)
+            cols["rep"].append(rep)
+    return pd.DataFrame(cols)
 
 
 def canonicalize_triples(triples: DataFrame,
@@ -402,93 +423,69 @@ def canonicalize_triples(triples: DataFrame,
 
 def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
                      threshold: float = DEFAULT_THRESHOLD,
-                     char_limit: int = CHAR_LIMIT,
-                     driver_fastpath_mentions: int = 200_000,
-                     driver_fastpath_edges: int = 5_000_000) -> DataFrame:
+                     char_limit: int = CHAR_LIMIT) -> DataFrame:
     """End-to-end: mentions(mention) → (mention, label, rep).
 
-    Two paths with the same planes, the same banding (``N_PLANES``,
-    ``BANDS``, ``MAX_BUCKET``) and the same union-find semantics. Only
-    the distributed path applies the Hamming prefilter; the driver path
-    runs the exact cosine on every bucket pair, so its candidate set is
-    a superset (parity pinned by test):
+    Two routes with the same planes, the same banding (``N_PLANES``,
+    ``BANDS``, ``MAX_BUCKET``), the same union-find semantics, the same
+    block split (``_split_block``) and the same representative rule
+    (``representative_rows``). Only the distributed route applies the
+    Hamming prefilter; the driver route runs the exact cosine on every
+    bucket pair, so its candidate set is a superset (parity pinned by
+    test). ``session.driver_frame`` chooses:
 
-    * **driver fast path** (when the mention dictionary has ≤ 200k
-      entries — the default build's does, top_n_ent=50000 by reference
-      design, rdf_graph.py:25; ``top_n_ent=None`` does not bound it):
-      collect mentions + the needed token vectors, run the LSH →
-      exact-cosine → union-find kernel as one numpy pass, broadcast
-      the label map back. This is the same in-memory shape as the
-      reference's own cluster_entities (rdf_graph.py:86-111) minus the
-      O(n²) pdist, and it collapses ~10 tiny Spark jobs into one
-      collect + one broadcast — the jobs were pure scheduling overhead
-      at any cluster size, because the dictionary does not grow with
+    * **driver route** (at most ``DRIVER_ROWS`` mentions — the default
+      build's top_n_ent=50000, rdf_graph.py:25; ``top_n_ent=None`` does
+      not bound it): the sizing collect is the mention list; the needed
+      token vectors are collected, the LSH → exact-cosine → union-find →
+      linkage kernel runs as one numpy pass, and the labels go back as
+      one Arrow frame. This is the reference's own in-memory shape
+      (rdf_graph.py:86-111) minus the O(n²) pdist, in two collects
+      instead of ~10 tiny Spark jobs — the dictionary does not grow with
       the corpus.
-    * **distributed path** otherwise: staged mention embeddings,
-      banded-LSH similarity join, distributed/driver CC
-      (``driver_fastpath_edges`` is passed through, so ``=0`` on both
-      knobs forces the fully distributed route end-to-end, pinned
-      equal to the driver path in tests/test_canon_and_materialize.py).
+    * **distributed route** otherwise: staged mention embeddings,
+      banded-LSH similarity join, ``connected_components`` (its own
+      route choice over the similarity edges) and ``refine_components``.
+      Patching ``session.DRIVER_ROWS`` to 0 forces it end to end.
     """
-    # one collect both sizes the dictionary and feeds the driver kernel;
     # the limit sits on top of the ordered top-N, so the names keep its
     # order (average-linkage tie-breaks depend on it)
-    names = (mentions.select(mentions.columns[0])
-             .limit(driver_fastpath_mentions + 1).toPandas()
-             .iloc[:, 0].tolist())
-    if len(names) <= driver_fastpath_mentions:
-        return _cluster_entities_driver(names, embeddings, threshold,
-                                        char_limit)
+    pdf = driver_frame(mentions.select(mentions.columns[0]))
+    if pdf is not None:
+        return _cluster_entities_driver(pdf.iloc[:, 0].tolist(), embeddings,
+                                        threshold, char_limit)
     vecs = stage(mention_embeddings(mentions, embeddings))
     edges = similarity_edges(vecs, threshold=threshold)
-    labels = connected_components(vecs.select("mention"), edges,
-                                  driver_fastpath_edges=driver_fastpath_edges)
-    labels = refine_components(labels, vecs, threshold)
-    return cluster_representatives(labels, char_limit=char_limit)
+    labels = connected_components(vecs.select("mention"), edges)
+    return refine_components(labels, vecs, threshold, char_limit)
 
 
 def refine_components(labels: DataFrame, vecs: DataFrame,
-                      threshold: float) -> DataFrame:
-    """Distributed block refinement: each connected component is one
-    applyInPandas group running the average-linkage kernel — the same
-    semantics as the driver fast path, shuffled once on the component
-    label. Components are near-duplicate blocks (bounded); oversized
-    ones fall back to single-linkage (kept whole)."""
-    import pandas as pd
-
+                      threshold: float,
+                      char_limit: int = CHAR_LIMIT) -> DataFrame:
+    """Distributed block refinement: (mention, label) components →
+    (mention, label, rep). Each connected component is one
+    applyInPandas group running the driver route's block split and
+    representative rule, shuffled once on the component label."""
     joined = labels.join(vecs, "mention")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) <= 1 or len(pdf) > LINKAGE_CAP:
-            return pdf[["mention", "label"]]
         X = np.array([np.asarray(v, dtype=np.float64)
                       for v in pdf["vector"]])
         Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        roots = average_linkage_labels(Xn, threshold)
         names = pdf["mention"].tolist()
-        groups: dict[int, list[int]] = {}
-        for pos, r in enumerate(roots):
-            groups.setdefault(int(r), []).append(pos)
-        out_m, out_l = [], []
-        for members in groups.values():
-            lab = min(names[p] for p in members)
-            for p in members:
-                out_m.append(names[p])
-                out_l.append(lab)
-        return pd.DataFrame({"mention": out_m, "label": out_l})
+        return representative_rows(
+            _split_block(names, range(len(names)), Xn, threshold),
+            char_limit)
 
     return joined.groupBy("label").applyInPandas(
-        kernel, schema="mention string, label string")
+        kernel, schema="mention string, label string, rep string")
 
 
 def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
                              threshold: float, char_limit: int) -> DataFrame:
     """Driver-side kernel over the collected mention ``names``:
-    identical semantics to the distributed path."""
-    from collections import defaultdict
-
-    import pandas as pd
-
+    identical semantics to the distributed route."""
     spark = embeddings.sparkSession
     # Arrow-path collects (toPandas, here and for ``names``): the
     # row-pickle path spent ~0.9s deserializing 50k mention rows + the
@@ -527,10 +524,7 @@ def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
         by_k[len(rows)].append(len(kept))
         kept.append(m)
         rows_per_mention.append(rows)
-    if not kept:
-        return spark.createDataFrame(
-            [], "mention string, label string, rep string")
-    X = np.empty((len(kept), E.shape[1] if len(E) else EMBED_DIM))
+    X = np.empty((len(kept), E.shape[1]))
     for k, mention_pos in by_k.items():
         idx2d = np.asarray([rows_per_mention[p] for p in mention_pos])
         acc = E[idx2d[:, 0]].copy()
@@ -606,43 +600,11 @@ def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
     blocks: dict[int, list[int]] = defaultdict(list)
     for i in range(len(kept)):
         blocks[find(i)].append(i)
-
-    # Within each threshold-connected block, run the reference's actual
-    # clustering — average linkage cut at the distance threshold
-    # (rdf_graph.py:93-98). Blocking bounds the O(m²) kernel; transitive
-    # single-linkage chains (the mega-cluster failure mode) are split
-    # back apart exactly as fcluster would.
-    final_groups: list[list[str]] = []
-    for members in blocks.values():
-        if len(members) == 1:
-            final_groups.append([kept[members[0]]])
-            continue
-        if len(members) > LINKAGE_CAP:
-            # documented fallback: oversized block stays one cluster
-            # (single-linkage semantics); unreachable for dictionary-
-            # sized mention sets in practice
-            final_groups.append([kept[i] for i in members])
-            continue
-        idx = np.array(members)
-        labels = average_linkage_labels(Xn[idx], threshold)
-        sub: dict[int, list[str]] = defaultdict(list)
-        for pos, lab in enumerate(labels):
-            sub[int(lab)].append(kept[idx[pos]])
-        final_groups.extend(sub.values())
-
-    import pandas as pd
-
-    cols: dict[str, list[str]] = {"mention": [], "label": [], "rep": []}
-    for members in final_groups:
-        members = sorted(members)
-        label = members[0]
-        joined = "".join(members)
-        rep = members[0] if len(joined) > char_limit else " | ".join(members)
-        for m in members:
-            cols["mention"].append(m)
-            cols["label"].append(label)
-            cols["rep"].append(rep)
+    clusters = [c for members in blocks.values()
+                for c in _split_block([kept[i] for i in members], members,
+                                      Xn, threshold)]
     # pandas → Arrow-path createDataFrame: a plain list-of-tuples would
     # serialize row-by-row through py4j (seconds at 50k mentions)
     return spark.createDataFrame(
-        pd.DataFrame(cols), schema="mention string, label string, rep string")
+        representative_rows(clusters, char_limit),
+        schema="mention string, label string, rep string")

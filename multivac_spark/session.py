@@ -8,8 +8,14 @@ boundary); locally they are simply harmless.
 ``stage`` is the one way the package materializes an intermediate
 that several consumers (or loop rounds) read: a local checkpoint by
 default, a reliable one when the deployment has set a checkpoint
-directory. ``stats_barrier`` is ``stage`` plus a fresh-scan rebuild,
-for frames an iterative loop joins against themselves.
+directory and the stage is eager. ``stats_barrier`` is ``stage`` plus
+a fresh-scan rebuild, for frames an iterative loop joins against
+themselves.
+
+``driver_frame`` is the one driver-route rule: an operator with a
+driver kernel and a distributed loop hands it its input, and one
+bounded Arrow collect both sizes that input against ``DRIVER_ROWS``
+and, when it fits, is all the driver kernel reads.
 """
 
 from __future__ import annotations
@@ -19,6 +25,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+# the row cap of every driver route: an operator's input of at most this
+# many rows runs its driver kernel, a larger one its distributed loop
+DRIVER_ROWS = 1_000_000
 
 
 def get_spark(
@@ -70,22 +80,42 @@ def stage(df, eager: bool = True):
     instead of re-running its plan; the one staging rule of the
     package.
 
-    The checkpoint is ``df.localCheckpoint(eager)`` — executor-local
-    blocks, lost with their executor — unless the deployment has set a
+    An eager stage is ``df.localCheckpoint()`` — executor-local blocks,
+    lost with their executor — unless the deployment has set a
     checkpoint directory (``SparkContext.setCheckpointDir``), in which
-    case it is the reliable ``df.checkpoint(eager)`` written under that
+    case it is the reliable ``df.checkpoint()`` written under that
     directory, which survives executor loss. Either way the lineage is
     cut, and the origin plan's statistics ride along (SPARK-39748).
 
     ``eager=False`` defers the materialization to the first action
     that reads the frame; a plan with no shuffle then runs no job here
     (AQE still runs a shuffle plan's stage jobs at staging time). A
-    lazy reliable checkpoint computes the plan twice: once for that
-    action and once more for the checkpoint write.
+    lazy stage is always ``df.localCheckpoint(False)``, whatever the
+    directory: Spark writes a lazy reliable checkpoint in a job of its
+    own after that first action, which computes the plan a second time.
+    Durable outputs do not depend on it: a committed build's tables are
+    ``plans.snapshots`` versions.
     """
-    if df.sparkSession.sparkContext.getCheckpointDir():
-        return df.checkpoint(eager)
+    if eager and df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
     return df.localCheckpoint(eager)
+
+
+def driver_frame(df):
+    """``df``'s rows as a pandas frame when there are at most
+    ``DRIVER_ROWS`` of them, else None; the one driver-route rule of
+    the package.
+
+    One Arrow ``toPandas()`` of ``df.limit(DRIVER_ROWS + 1)`` sizes the
+    input, and when it fits, that frame is all the caller's driver
+    kernel reads: nothing is counted or staged before the choice. The
+    frame keeps ``df``'s row order, so an ordered top-N stays ordered.
+    Over the cap the probe has collected ``DRIVER_ROWS + 1`` rows, which
+    are discarded, and the caller's distributed route reads ``df`` from
+    its plan. Tests force a route by patching ``DRIVER_ROWS``.
+    """
+    pdf = df.limit(DRIVER_ROWS + 1).toPandas()
+    return pdf if len(pdf) <= DRIVER_ROWS else None
 
 
 def stats_barrier(df):

@@ -4,6 +4,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from multivac_spark import session
 from multivac_spark.operators import canon, materialize
 from multivac_spark.sources import corpus, vocab
 
@@ -29,11 +30,9 @@ def _pair_set(assign: dict[str, object]) -> set[tuple[str, str]]:
     return pairs
 
 
-def _jaccard_vs_oracle(spark, emb_df, mentions, fastpath=True):
+def _jaccard_vs_oracle(spark, emb_df, mentions):
     mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
-    limit = 10**9 if fastpath else 0
-    res = canon.cluster_entities(mdf, emb_df,
-                                 driver_fastpath_mentions=limit).collect()
+    res = canon.cluster_entities(mdf, emb_df).collect()
     mine = {r["mention"]: r["label"] for r in res}
 
     vec_rows = canon.mention_embeddings(mdf, emb_df).collect()
@@ -83,8 +82,10 @@ def test_multiword_clusters_match_exact_oracle(spark, emb_df):
     assert jacc >= 0.9, (jacc, nm, no)
 
 
-def test_distributed_path_matches_driver_path(spark, emb_df):
-    """Both clustering paths must agree (same kernel, different plumbing)."""
+def test_distributed_path_matches_driver_path(spark, emb_df, monkeypatch):
+    """Both clustering paths must agree (same kernel, different plumbing).
+    ``DRIVER_ROWS = 0`` sends the mentions and the similarity edges
+    down the distributed routes."""
     concepts = vocab.effective_concepts()[:20]
     mentions = []
     for c in concepts:
@@ -92,9 +93,10 @@ def test_distributed_path_matches_driver_path(spark, emb_df):
         mentions.append(f"viral {vocab.effective_noun_variants()[c][0]}")
     mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
     a = {(r["mention"], r["rep"]) for r in canon.cluster_entities(
-        mdf, emb_df, driver_fastpath_mentions=10**9).collect()}
+        mdf, emb_df).collect()}
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     b = {(r["mention"], r["rep"]) for r in canon.cluster_entities(
-        mdf, emb_df, driver_fastpath_mentions=0).collect()}
+        mdf, emb_df).collect()}
     assert a == b
 
 
@@ -111,7 +113,7 @@ def test_driver_path_computes_mentions_once(spark, emb_df):
 
     mdf = (spark.createDataFrame([(m,) for m in mentions], "mention string")
            .filter(F.udf(keep, "boolean")("mention")))
-    canon.cluster_entities(mdf, emb_df, driver_fastpath_mentions=10**9)
+    canon.cluster_entities(mdf, emb_df)
     assert computed.value == len(mentions)
 
 
@@ -124,38 +126,40 @@ def test_variant_groups_cluster_together(spark, emb_df):
     assert len(labels) == 1, res
 
 
-def test_representative_rule(spark):
-    labels = spark.createDataFrame(
-        [("aa", "x"), ("bb", "x"), ("c" * 100, "y"), ("dd", "y")],
-        "mention string, label string")
-    # group x: short concat → ' | ' join; group y: >80 chars → first member
-    reps = {r["mention"]: r["rep"]
-            for r in canon.cluster_representatives(labels).collect()}
+def test_representative_rule():
+    """The one rule both clustering routes apply to each cluster."""
+    rows = canon.representative_rows([["bb", "aa"], ["dd", "c" * 100]])
+    # first cluster: short concat → ' | ' join; second: >80 chars →
+    # first member
+    reps = dict(zip(rows["mention"], rows["rep"]))
     assert reps["aa"] == "aa | bb"
     assert reps["bb"] == "aa | bb"
     assert reps["dd"] == "c" * 100  # lexicographic min ('c...' < 'dd')
 
 
-@pytest.mark.parametrize("fastpath_limit", [5_000_000, 0])
-def test_connected_components_chain(spark, fastpath_limit):
+@pytest.mark.parametrize("driver_rows", [5_000_000, 0])
+def test_connected_components_chain(spark, monkeypatch, driver_rows):
     """Both CC paths (driver union-find and distributed min-label
-    propagation) must produce identical labels."""
+    propagation) must produce identical labels; ``DRIVER_ROWS = 0``
+    forces the distributed one."""
+    monkeypatch.setattr(session, "DRIVER_ROWS", driver_rows)
     v = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("e",),
                                ("z",)], "mention string")
     e = spark.createDataFrame([("a", "b"), ("b", "c"), ("d", "e")],
                               "src string, dst string")
     labels = {r["mention"]: r["label"]
-              for r in canon.connected_components(
-                  v, e, driver_fastpath_edges=fastpath_limit).collect()}
+              for r in canon.connected_components(v, e).collect()}
     assert labels["a"] == labels["b"] == labels["c"] == "a"
     assert labels["d"] == labels["e"] == "d"
     assert labels["z"] == "z"  # isolated vertex keeps its own label
 
 
-def test_distributed_cc_one_job_per_round(spark):
+def test_distributed_cc_one_job_per_round(spark, monkeypatch):
     """VERDICT r2 #3: the convergence probe rides the localCheckpoint
     pass via observe() — ONE job per propagation round (plus bounded
-    setup: edge count, sym/labels checkpoints), down from 3/round."""
+    setup: the sizing collect, sym/labels checkpoints), down from
+    3/round."""
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     # a 5-vertex path graph: diameter 4 → 5 propagation rounds (label
     # spreads 1 hop/round, +1 round to observe convergence)
     n = 5
@@ -172,14 +176,13 @@ def test_distributed_cc_one_job_per_round(spark):
     sc.setJobGroup("cc-jobs", "count jobs per round")
     try:
         labels = {r["mention"]: r["label"]
-                  for r in canon.connected_components(
-                      v, e, driver_fastpath_edges=0).collect()}
+                  for r in canon.connected_components(v, e).collect()}
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc-jobs"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert all(lab == "v00" for lab in labels.values())
-    # Budget: 5 rounds x 1 job + 3 setup (edge count, 2 checkpoints)
+    # Budget: 5 rounds x 1 job + 3 setup (sizing collect, 2 checkpoints)
     # + 1 final collect = 9. The old probe-as-extra-job shape needs 14+.
     assert n_jobs <= 11, n_jobs
     t = spark.createDataFrame(

@@ -56,7 +56,7 @@ def test_driver_cluster_path_50k_mentions_no_plan_blowup(spark):
     mentions = {" ".join(rng.choice(toks, size=rng.randint(1, 4)))
                 for _ in range(60_000)}
     mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
-    out = canon.cluster_entities(mdf, emb, driver_fastpath_mentions=200_000)
+    out = canon.cluster_entities(mdf, emb)
     n = out.count()
     assert n == len(mentions)  # every mention labeled (all tokens in-vocab)
     assert out.select("label").distinct().count() < n

@@ -107,19 +107,22 @@ def test_eigenvector_centrality_two_components(spark):
     assert res[0] > res[3]
 
 
-def test_eigenvector_driver_fastpath_matches_distributed(spark):
-    """The numpy fast path and the per-iteration Spark loop implement
+def test_eigenvector_driver_route_matches_distributed(spark, monkeypatch):
+    """The numpy driver route and the per-iteration Spark loop implement
     the same update/convergence/escalation — scores agree to float
     noise on the oracle's ring+chords graph."""
+    from multivac_spark import session
+
     rows = ([(i, (i + 1) % 50) for i in range(50)]
             + [(i, (3 * i + 7) % 50) for i in range(50)])
     e = _edges(spark, rows)
     fast = {r["node"]: r["score"]
             for r in analytics.eigenvector_centrality(
                 e, max_iter=15).collect()}
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     dist = {r["node"]: r["score"]
             for r in analytics.eigenvector_centrality(
-                e, max_iter=15, driver_fastpath_edges=0).collect()}
+                e, max_iter=15).collect()}
     assert set(fast) == set(dist)
     assert max(abs(fast[k] - dist[k]) for k in fast) < 1e-12
 

@@ -7,6 +7,7 @@ import random
 import numpy as np
 import pytest
 
+from multivac_spark import session
 from multivac_spark.operators import analytics
 
 
@@ -62,15 +63,15 @@ def test_pagerank_matches_dense_oracle(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_pagerank_distributed_equals_driver_path(spark):
+def test_pagerank_distributed_equals_driver_path(spark, monkeypatch):
     edges = _random_edges(13, n_nodes=25, n_edges=60)
     df = _edges_df(spark, edges)
     fast = {r["node"]: r["score"]
             for r in analytics.pagerank(df, tol=1e-10).collect()}
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     dist = {r["node"]: r["score"]
             for r in analytics.pagerank(
-                df, tol=1e-10, driver_fastpath_edges=0,
-                checkpoint_every=3).collect()}
+                df, tol=1e-10, checkpoint_every=3).collect()}
     assert set(fast) == set(dist)
     for nd in fast:
         assert dist[nd] == pytest.approx(fast[nd], abs=1e-9)

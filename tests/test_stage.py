@@ -1,8 +1,9 @@
 """session.stage, the one staging rule: a local checkpoint by default,
-a reliable one under the deployment's checkpoint directory. Plus its
-two users with a contract of their own: the lazy ``run_pipeline``
-stages its seven ``STAGES`` tables (one extraction pass per document
-for any set of reads), and ``textops.train_bigram_lm`` stages its two
+a reliable one under the deployment's checkpoint directory when the
+stage is eager. Plus its two users with a contract of their own: the
+lazy ``run_pipeline`` stages its seven ``STAGES`` tables (one
+extraction pass per document for any set of reads, with or without a
+checkpoint directory), and ``textops.train_bigram_lm`` stages its two
 aggregations from pool threads under the caller's job group."""
 
 import os
@@ -79,10 +80,16 @@ def test_lazy_stage_of_a_plan_without_shuffle_runs_no_job(spark):
     assert staged.count() == 44
 
 
-def test_lazy_build_extracts_each_document_once(spark, monkeypatch):
+@pytest.mark.parametrize("where", ["no_checkpoint_dir", "checkpoint_dir"])
+def test_lazy_build_extracts_each_document_once(spark, monkeypatch, request,
+                                                where):
     """Reading any set of tables passes every English document through
     the extraction kernel once: the accumulator taps the kernel's input
-    after its language filter."""
+    after its language filter. Under a checkpoint directory too: a lazy
+    stage stays local, since a lazy reliable checkpoint would run the
+    plan again to write itself."""
+    if where == "checkpoint_dir":
+        request.getfixturevalue("checkpoint_dir")
     docs = corpus.documents_df(spark, 40, partitions=2)
     n_en = docs.filter("lang = 'en'").count()
     passes = spark.sparkContext.accumulator(0)

@@ -112,30 +112,35 @@ def test_barrier_javardd_fallback_route(spark, monkeypatch):
     assert _stat_bits(b) <= 80
 
 
-def test_cc_distributed_path_stats_stay_bounded(spark):
+def test_cc_distributed_path_stats_stay_bounded(spark, monkeypatch):
     """connected_components' distributed route must come out with flat
     statistics (it feeds canonicalize → graph build → eigenvector)."""
+    from multivac_spark import session
     from multivac_spark.operators import canon
+
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
 
     verts = spark.createDataFrame(
         [(f"m{i}",) for i in range(40)], "mention string")
     edges = spark.createDataFrame(
         [(f"m{i}", f"m{i + 1}") for i in range(0, 38, 2)],
         "src string, dst string")
-    labels = canon.connected_components(verts, edges,
-                                        driver_fastpath_edges=0)
+    labels = canon.connected_components(verts, edges)
     assert _stat_bits(labels) <= 80, _stat_bits(labels)
     got = {r["mention"]: r["label"] for r in labels.collect()}
     assert got["m1"] == "m0" and got["m3"] == "m2"
 
 
-def test_eigenvector_distributed_stats_stay_bounded(spark):
+def test_eigenvector_distributed_stats_stay_bounded(spark, monkeypatch):
+    from multivac_spark import session
     from multivac_spark.operators import analytics
+
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 12) for i in range(12)],
         "head_id long, tail_id long")
-    ev = analytics.eigenvector_centrality(edges, driver_fastpath_edges=0)
+    ev = analytics.eigenvector_centrality(edges)
     # the result may sit up to checkpoint_every-1 iterations past the
     # last barrier: a handful of joins over 63-bit bases, so a few
     # hundred bits — bounded, vs millions when the blow-up compounds
