@@ -81,8 +81,11 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
     uses the L2 bound √n·‖Δ‖₂ < n·tol (nx checks L1 < n·tol; L1 ≤
     √n·L2, so this is the conservative side of the same criterion).
     Lineage (and carried join statistics) is cut by a stats_barrier
-    every ``checkpoint_every`` rounds — 1 job/iter + 1 every k, down
-    from 3/iter."""
+    every ``checkpoint_every`` rounds. With AQE off that is 1 job/iter
+    + 1 every k, down from 3/iter. Under AQE (``get_spark``'s default)
+    the action also runs one job per shuffle stage of the rounds since
+    the last barrier: about 12 jobs/iter on a 30-node path (pinned in
+    tests/test_multimodal_and_analytics.py)."""
     from ..session import driver_frame, stats_barrier
 
     sym = _sym(edges, src, dst)

@@ -82,6 +82,30 @@ def mention_embeddings(mentions: DataFrame, embeddings: DataFrame) -> DataFrame:
                     .alias("vector")))
 
 
+def grouped_mean(E: np.ndarray, rows: list[list[int]]) -> np.ndarray:
+    """Row i = the mean of ``E[rows[i]]`` (every list non-empty); the
+    one numpy mention average of the package's driver kernels.
+
+    np.mean over axis 0 is a STRICT left-to-right sequential fold
+    (verified for k up to 1000; np.add.reduceat is NOT — it diverges in
+    the last ulp from k=3), and so is ``mention_embeddings``' avg over
+    one mention's tokens. So lists are grouped by length k and summed by
+    k-1 successive row adds, vectorized ACROSS lists — bit-identical to
+    per-list np.mean (pinned in tests/test_r07_optimizations), 1.2s →
+    ~20ms over a 50k-mention dictionary."""
+    by_k: dict[int, list[int]] = defaultdict(list)
+    for pos, r in enumerate(rows):
+        by_k[len(r)].append(pos)
+    X = np.empty((len(rows), E.shape[1]))
+    for k, pos in by_k.items():
+        idx2d = np.asarray([rows[p] for p in pos])
+        acc = E[idx2d[:, 0]].copy()
+        for j in range(1, k):
+            acc += E[idx2d[:, j]]
+        X[np.asarray(pos)] = acc / k
+    return X
+
+
 # --------------------------------------------------------------------------
 # 2-3. LSH blocking + exact cosine on candidates
 # --------------------------------------------------------------------------
@@ -507,30 +531,15 @@ def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
                   for v in emb_pdf["vector"]]) \
         if len(emb_pdf) else np.zeros((0, EMBED_DIM))
 
-    # Vectorized mention averaging replacing 50k np.mean calls (1.2s →
-    # ~20ms at the 50k dictionary). np.mean over axis 0 is a STRICT
-    # left-to-right sequential fold (verified for k up to 1000; note
-    # np.add.reduceat is NOT — it diverges in the last ulp from k=3),
-    # so mentions are grouped by token count k and summed by k-1
-    # successive row adds, vectorized ACROSS mentions — bit-identical
-    # to per-mention np.mean (pinned in tests/test_r07_optimizations).
     kept: list[str] = []
     rows_per_mention: list[list[int]] = []
-    by_k: dict[int, list[int]] = defaultdict(list)
     for m, toks in zip(names, splits):
         rows = [tok_row[t] for t in toks if t in tok_row]
         if not rows:
             continue  # OOV mention: drops out, like rdf_graph.py:282-292
-        by_k[len(rows)].append(len(kept))
         kept.append(m)
         rows_per_mention.append(rows)
-    X = np.empty((len(kept), E.shape[1]))
-    for k, mention_pos in by_k.items():
-        idx2d = np.asarray([rows_per_mention[p] for p in mention_pos])
-        acc = E[idx2d[:, 0]].copy()
-        for j in range(1, k):
-            acc += E[idx2d[:, j]]
-        X[np.asarray(mention_pos)] = acc / k
+    X = grouped_mean(E, rows_per_mention)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
     planes = _seeded_planes(N_PLANES, X.shape[1])
     bits = (Xn @ planes.T > 0)

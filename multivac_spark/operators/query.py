@@ -15,6 +15,13 @@ Reference behavior (src/rdf_graph/map_queries.py:359-515 ``run`` and
    predicted_object, map_queries.py:268-356, re-expressed as two
    broadcast equi-joins)
 
+Two routes compute steps 2-5. ``answer_queries`` runs them as Spark
+jobs over any number of queries; it serves batch callers, imputation,
+and is the oracle. ``DriverKG`` runs them in process for one query
+over a KG collected once through ``session.driver_frame``, with the
+same kernels (``longest_triple``, ``canon.grouped_mean``) and the same
+floating-point folds, so both routes return the same answer set.
+
 The OpenKE TransE inference (con.predict_*_entity) is an external C++
 library boundary in the reference and is out of the rebuild's minimum
 slice (SURVEY.md §3.3); the KG-lookup path implemented here is the
@@ -26,13 +33,14 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.parse import parse_tokens, tokenize
 from ..functions.svo import extract_svo
-from ..session import stage
-from .canon import mention_embeddings
+from ..session import driver_frame, stage
+from .canon import grouped_mean, mention_embeddings
 from .dedup import cosine
 
 MATCH_THRESHOLD = 0.75  # map_queries.py:211
@@ -96,32 +104,40 @@ QPARTS_SCHEMA = ("query_id long, query string, q_subj string, "
                  "q_pred string, q_obj string")
 
 
+def longest_triple(query: str, lexicon: dict, lemmas: dict
+                   ) -> tuple[str, str, str] | None:
+    """sub_rdfs extraction of one cleaned query: the lower-cased
+    (subj, pred, obj) with the most tokens, the first on ties
+    (how='longest', rdf_parse.py:245-257); None when the query has no
+    triple."""
+    words = tokenize(query.rstrip("?"))
+    if not words:
+        return None
+    best, best_len = None, -1
+    for _idx, s, p, o in extract_svo(parse_tokens(words, lexicon, lemmas)):
+        total = len(s.split()) + len(p.split()) + len(o.split())
+        if total > best_len:
+            best, best_len = (s.lower(), p.lower(), o.lower()), total
+    return best
+
+
 def extract_query_parts(queries: DataFrame, lexicon: dict, lemmas: dict,
                         query_col: str = "query") -> DataFrame:
-    """sub_rdfs extraction, keep the triple with the most tokens
-    (how='longest', rdf_parse.py:245-257)."""
+    """``longest_triple`` of every query, one Arrow pass."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"query_id": [], "query": [], "q_subj": [],
                    "q_pred": [], "q_obj": []}
             for qid, q in zip(pdf["query_id"], pdf[query_col]):
-                words = tokenize(q.rstrip("?"))
-                if not words:
-                    continue
-                toks = parse_tokens(words, lexicon, lemmas)
-                best, best_len = None, -1
-                for idx, s, p, o in extract_svo(toks):
-                    total = len(s.split()) + len(p.split()) + len(o.split())
-                    if total > best_len:
-                        best, best_len = (s, p, o), total
+                best = longest_triple(q, lexicon, lemmas)
                 if best is None:
                     continue
                 out["query_id"].append(int(qid))
                 out["query"].append(q)
-                out["q_subj"].append(best[0].lower())
-                out["q_pred"].append(best[1].lower())
-                out["q_obj"].append(best[2].lower())
+                out["q_subj"].append(best[0])
+                out["q_pred"].append(best[1])
+                out["q_obj"].append(best[2])
             yield pd.DataFrame(out)
 
     return queries.mapInPandas(run, schema=QPARTS_SCHEMA)
@@ -265,3 +281,101 @@ def answer_queries(query_parts: DataFrame,
     return (exact.withColumn("score_micro", F.lit(1_000_000).cast("long"))
             .unionByName(imputed)
             .dropDuplicates(["query_id", "head", "rel", "answer", "slot"]))
+
+
+# -- driver route: one question over the collected KG ------------------------
+
+class DriverKG:
+    """What ``answer_queries`` reads for one KG, collected to the driver
+    once: the triples indexed by (subj, pred) → objs and (pred, obj) →
+    subjs, the ``kg_vectors`` as name-sorted float64 matrices with
+    their norms, and the embedding rows by token. ``answers`` is
+    ``answer_queries(impute=False)`` for one query in process, with no
+    Spark job.
+
+    Parity with the Spark route is bit for bit, not approximate: a
+    part's mean is ``canon.grouped_mean`` (the same sequential fold as
+    ``mention_embeddings``' avg) cast to float32 as that avg is; the
+    cosine is ``dedup.cosine``'s sequential fold over the dimensions,
+    vectorized across entities; ties at the argmax go to the smallest
+    name, as ``match_parts``' window does."""
+
+    def __init__(self, triples: pd.DataFrame, entity_vecs: pd.DataFrame,
+                 rel_vecs: pd.DataFrame, embeddings: pd.DataFrame):
+        self.objs: dict[tuple[str, str], set[str]] = {}
+        self.subjs: dict[tuple[str, str], set[str]] = {}
+        for s, p, o in zip(triples["subj"], triples["pred"], triples["obj"]):
+            self.objs.setdefault((s, p), set()).add(o)
+            self.subjs.setdefault((p, o), set()).add(s)
+        self.entities = self._matrix(entity_vecs)
+        self.relations = self._matrix(rel_vecs)
+        self.tok_row = {t: i for i, t in enumerate(embeddings["token"])}
+        self.emb = (np.stack(embeddings["vector"].tolist()).astype(np.float64)
+                    if len(embeddings) else np.zeros((0, 0)))
+
+    @classmethod
+    def collect(cls, final_triples: DataFrame, embeddings: DataFrame,
+                vectors: tuple[DataFrame, DataFrame]) -> "DriverKG | None":
+        """One ``session.driver_frame`` per input (the triples first);
+        None as soon as one holds more than ``DRIVER_ROWS`` rows."""
+        frames = []
+        for df in (final_triples.select("subj", "pred", "obj"), *vectors,
+                   embeddings.select("token", "vector")):
+            pdf = driver_frame(df)
+            if pdf is None:
+                return None
+            frames.append(pdf)
+        return cls(*frames)
+
+    @staticmethod
+    def _matrix(vecs: pd.DataFrame):
+        """(mention, vector) → (sorted names, (dim, n) float64 matrix,
+        the n norms, each a sequential fold as in ``dedup.cosine``)."""
+        vecs = vecs.sort_values("mention")
+        names = vecs["mention"].tolist()
+        if not names:
+            return names, None, None
+        m = np.stack(vecs["vector"].tolist()).astype(np.float64).T.copy()
+        sq = np.zeros(len(names))
+        for row in m:
+            sq += row * row
+        return names, m, np.sqrt(sq)
+
+    def match(self, part: str, which, threshold: float) -> str | None:
+        """``match_parts`` for one part against ``self.entities`` or
+        ``self.relations``: the name with the highest cosine at least
+        ``threshold``, the smallest name on ties; None if none."""
+        names, m, norms = which
+        rows = [self.tok_row[t] for t in part.split(" ") if t in self.tok_row]
+        if not rows or not names:
+            return None
+        p = grouped_mean(self.emb, [rows])[0].astype(np.float32) \
+            .astype(np.float64)
+        dot, sq = np.zeros(len(names)), 0.0
+        for x, row in zip(p, m):
+            dot += row * x
+            sq += x * x
+        denom = np.sqrt(sq) * norms
+        sim = np.divide(dot, denom, out=np.full(len(names), np.nan),
+                        where=denom != 0)
+        ok = np.flatnonzero(sim >= threshold)
+        return names[ok[np.argmax(sim[ok])]] if len(ok) else None
+
+    def answers(self, parts: tuple[str, str, str],
+                threshold: float) -> list[tuple[str, str, str, str]]:
+        """→ [(head, rel, answer, slot)] of ``answer_queries`` for one
+        query's (q_subj, q_pred, q_obj)."""
+        q_subj, q_pred, q_obj = parts
+        rel = self.match(q_pred, self.relations, threshold)
+        if rel is None:
+            return []
+        out = []
+        head = self.match(q_subj, self.entities, threshold)
+        if head is not None:
+            out += [(head, rel, o, "tail")
+                    for o in self.objs.get((head, rel), ())]
+        tail = self.match(q_obj, self.entities, threshold)
+        if tail is not None:
+            out += [(tail, rel, s, "head")
+                    for s in self.subjs.get((rel, tail), ())]
+        return out

@@ -5,9 +5,9 @@ internals is held output-identical to the formulation it replaced.
   32-way fold (``simhash_bits``), including empty/whitespace-only docs.
 * Corpus sampling: ``_weighted_draw`` replays ``RandomState.choice``'s
   exact draw (same RNG stream, same index) for every cached CDF.
-* Mention averaging: the grouped sequential-add vectorized averaging in
-  the driver clustering kernel is bit-identical to the per-mention
-  ``np.mean``.
+* Mention averaging: ``canon.grouped_mean``, the grouped sequential-add
+  vectorized averaging of the driver kernels, is bit-identical to the
+  per-mention ``np.mean``.
 * Cosine with per-row norms: dot/(na·nb) with precomputed na/nb equals
   the original three-fold ``cosine`` expression bit-for-bit.
 """
@@ -61,26 +61,18 @@ def test_weighted_draw_replays_choice_exactly():
 
 
 def test_grouped_sequential_mean_bit_identical():
-    """The by-token-count vectorized averaging in
-    canon._cluster_entities_driver == per-mention np.mean, bitwise.
-    (np.add.reduceat was rejected here: it is NOT a sequential fold —
-    it diverges from np.mean in the last ulp from k=3.)"""
-    from collections import defaultdict
+    """``canon.grouped_mean``, the by-token-count vectorized averaging
+    of the driver clustering kernel and the answer service, ==
+    per-mention np.mean, bitwise. (np.add.reduceat was rejected here:
+    it is NOT a sequential fold — it diverges from np.mean in the last
+    ulp from k=3.)"""
+    from multivac_spark.operators.canon import grouped_mean
 
     rng = np.random.RandomState(42)
     E = rng.standard_normal((500, 50))
     segments = [rng.randint(0, 500, size=k).tolist()
                 for k in rng.randint(1, 12, size=400)]
-    by_k = defaultdict(list)
-    for pos, s in enumerate(segments):
-        by_k[len(s)].append(pos)
-    vec = np.empty((len(segments), E.shape[1]))
-    for k, poss in by_k.items():
-        idx2d = np.asarray([segments[p] for p in poss])
-        acc = E[idx2d[:, 0]].copy()
-        for j in range(1, k):
-            acc += E[idx2d[:, j]]
-        vec[np.asarray(poss)] = acc / k
+    vec = grouped_mean(E, segments)
     ref = np.vstack([np.mean([E[i] for i in s], axis=0) for s in segments])
     assert (vec == ref).all()  # bitwise, not allclose
 
