@@ -7,8 +7,7 @@ Reference behaviors:
   escalation ×10 on convergence failure (calculate_network_change.py:22-31);
   rebuilt as power iteration: a numpy loop over the collected edge list
   when it fits ``session.driver_frame``, else over the edge DataFrame
-  (join + groupBy per step, a stats_barrier every few steps to cut
-  lineage);
+  (join + groupBy per step, each step one observed stats_barrier);
 * centrality delta — (after-before)/(before+1) per node over a full
   outer join (calculate_network_change.py:17-54);
 * key-triple scoring — score(edge) = gain(head)+gain(tail), top-k
@@ -23,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..session import stage
 
@@ -42,15 +41,15 @@ def degree_centrality(edges: DataFrame, src: str = "head_id",
     """(node, degree, centrality_micro): degree/(V-1) scaled to integer
     micro-units for cross-engine comparison.
 
-    One pass over the edge table: the degree aggregate is materialized
-    once (staged — node-count sized) and the node count V is
-    its row count, instead of a second distinct-count action that
-    recomputed the symmetrized edge set from scratch (guide §2.4:
-    the two actions shared no work; this halves the edge scans)."""
+    One pass over the edge table: the degree aggregate is staged once
+    (node-count sized), and the node count V is its row count, observed
+    by the staging job itself (deg has one row per node)."""
     sym = _sym(edges, src, dst)
+    obs = Observation()
     deg = stage(sym.groupBy(F.col("u").alias("node"))
-                .agg(F.count("*").alias("degree")))
-    n_nodes = deg.count()  # == count(distinct u): deg has one row per node
+                .agg(F.count("*").alias("degree"))
+                .observe(obs, F.count("*").alias("n")))
+    n_nodes = obs.get["n"]
     return deg.withColumn(
         "centrality_micro",
         F.floor(F.col("degree") * 1_000_000 / F.lit(max(n_nodes - 1, 1)))
@@ -60,8 +59,7 @@ def degree_centrality(edges: DataFrame, src: str = "head_id",
 def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
                            tol: float = 1e-6,
                            src: str = "head_id",
-                           dst: str = "tail_id",
-                           checkpoint_every: int = 5) -> DataFrame:
+                           dst: str = "tail_id") -> DataFrame:
     """Power iteration; mirrors the reference's tolerance-escalation loop
     (calculate_network_change.py:22-31) by relaxing tol ×10 if the
     iteration fails to converge within max_iter.
@@ -74,18 +72,13 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
     small graph). Same design precedent as canon.cluster_entities: work
     that does not grow with the corpus runs where latency is lowest.
 
-    **Distributed route**: ONE driver action per iteration (VERDICT r1
-    #7) — the norm and the convergence delta come from a single fused
-    aggregate — s2 = Σ raw², dot = Σ raw·prev — because prev is
-    unit-norm, so ‖x_new − x_prev‖₂ = √(2 − 2·dot/√s2). Convergence
-    uses the L2 bound √n·‖Δ‖₂ < n·tol (nx checks L1 < n·tol; L1 ≤
-    √n·L2, so this is the conservative side of the same criterion).
-    Lineage (and carried join statistics) is cut by a stats_barrier
-    every ``checkpoint_every`` rounds. With AQE off that is 1 job/iter
-    + 1 every k, down from 3/iter. Under AQE (``get_spark``'s default)
-    the action also runs one job per shuffle stage of the rounds since
-    the last barrier: about 12 jobs/iter on a 30-node path (pinned in
-    tests/test_multimodal_and_analytics.py)."""
+    **Distributed route**: each iteration is one observed
+    ``stats_barrier`` (the loop rule of ``session.stats_barrier``)
+    staging the unnormalized scores and observing s2 = Σ raw² and
+    dot = Σ raw·prev; prev is unit-norm, so ‖x_new − x_prev‖₂ =
+    √(2 − 2·dot/√s2). Convergence uses the L2 bound √n·‖Δ‖₂ < n·tol
+    (nx checks L1 < n·tol; L1 ≤ √n·L2, so this is the conservative
+    side of the same criterion)."""
     from ..session import driver_frame, stats_barrier
 
     sym = _sym(edges, src, dst)
@@ -94,31 +87,31 @@ def eigenvector_centrality(edges: DataFrame, max_iter: int = 30,
         return _driver_scores(sym, pdf, _eigenvector_driver, max_iter, tol)
 
     sym = stats_barrier(sym)
-    nodes = stats_barrier(sym.select(F.col("u").alias("node")).distinct())
-    n = nodes.count()
+    obs = Observation()
+    nodes = stats_barrier(sym.select(F.col("u").alias("node")).distinct()
+                          .observe(obs, F.count("*").alias("n")))
+    n = obs.get["n"]
     x = nodes.withColumn("score", F.lit(1.0 / n ** 0.5))
     current_tol = tol
-    it_total = 0
-    for attempt in range(3):  # tolerance escalation ×10 per attempt
+    for _ in range(3):  # tolerance escalation ×10 per attempt
         for _ in range(max_iter):
             msgs = (sym.join(x, sym.v == x.node)
-                    .groupBy("u").agg(F.sum("score").alias("raw")))
-            nxt = (nodes.join(msgs, nodes.node == msgs.u, "left")
-                   .select("node", F.coalesce("raw", F.lit(0.0)).alias("raw")))
-            row = (nxt.join(x.select("node",
-                                     F.col("score").alias("prev")), "node")
-                   .agg(F.sum(F.col("raw") ** 2).alias("s2"),
-                        F.sum(F.col("raw") * F.col("prev")).alias("dot"))
-                   .collect()[0])
-            s2 = row["s2"] or 0.0
+                    .groupBy(F.col("u").alias("node"))
+                    .agg(F.sum("score").alias("raw")))
+            obs = Observation()
+            nxt = stats_barrier(
+                x.join(msgs, "node", "left")
+                .select("node", F.coalesce("raw", F.lit(0.0)).alias("raw"),
+                        F.col("score").alias("prev"))
+                .observe(obs, F.sum(F.col("raw") ** 2).alias("s2"),
+                         F.sum(F.col("raw") * F.col("prev")).alias("dot"))
+                .drop("prev"))
+            s2 = obs.get["s2"] or 0.0
             if s2 == 0.0:
                 return x
             norm = s2 ** 0.5
-            cos = min(1.0, max(-1.0, (row["dot"] or 0.0) / norm))
+            cos = min(1.0, max(-1.0, (obs.get["dot"] or 0.0) / norm))
             x = nxt.select("node", (F.col("raw") / norm).alias("score"))
-            it_total += 1
-            if it_total % checkpoint_every == 0:
-                x = stats_barrier(x)
             delta_l2 = max(0.0, 2.0 - 2.0 * cos) ** 0.5
             if delta_l2 * n ** 0.5 < n * current_tol:
                 return x
@@ -197,8 +190,7 @@ def top_triples_by_gain(edges: DataFrame, gains: DataFrame,
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
              max_iter: int = 50, tol: float = 1e-8,
-             src: str = "head_id", dst: str = "tail_id",
-             checkpoint_every: int = 5) -> DataFrame:
+             src: str = "head_id", dst: str = "tail_id") -> DataFrame:
     """Directed PageRank over the KG edge table → (node, score).
 
     Beyond the reference's centrality pair (degree/eigenvector,
@@ -212,12 +204,10 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     **Driver route** (bounded graphs — the canonical KG's node set is
     dictionary-bounded): the distinct edge list, when it fits
     ``session.driver_frame``, feeds a numpy loop. **Distributed
-    route** otherwise: ONE action per iteration — the L1 delta and the
-    NEXT iteration's dangling mass come from a single fused aggregate;
-    the only shuffle per round is the keyed groupBy(dst) of
-    contributions; ``stats_barrier`` every ``checkpoint_every`` rounds
-    cuts the self-join lineage exactly like eigenvector_centrality
-    above.
+    route** otherwise: each iteration is one observed ``stats_barrier``
+    that stages the new scores and observes the L1 delta and the NEXT
+    iteration's dangling mass, like eigenvector_centrality above; the
+    only shuffle per round is the keyed groupBy(dst) of contributions.
     """
     from ..session import driver_frame, stats_barrier
 
@@ -234,32 +224,35 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     outdeg = e.groupBy(F.col("u").alias("node")) \
         .agg(F.count("*").alias("outdeg"))
     # (node, outdeg|null) — null marks a dangling node
-    base = stats_barrier(nodes.join(outdeg, "node", "left"))
-    n = base.count()
+    obs = Observation()
+    base = stats_barrier(
+        nodes.join(outdeg, "node", "left")
+        .observe(obs, F.count("*").alias("n"),
+                 F.count_if(F.col("outdeg").isNull()).alias("dangling")))
+    n = obs.get["n"]
     x = base.withColumn("score", F.lit(1.0 / n))
-    dangling = (x.filter(F.col("outdeg").isNull())
-                .agg(F.sum("score")).collect()[0][0]) or 0.0
-    for it in range(max_iter):
+    dangling = obs.get["dangling"] / n  # each dangling node holds 1/n
+    for _ in range(max_iter):
         w = (x.filter(F.col("outdeg").isNotNull())
              .select(F.col("node").alias("u"),
                      (F.col("score") / F.col("outdeg")).alias("w")))
         msgs = (e.join(w, "u").groupBy(F.col("v").alias("node"))
                 .agg(F.sum("w").alias("msg")))
-        nxt = (x.join(msgs, "node", "left")
-               .withColumn("new_score",
-                           F.lit((1.0 - damping) / n)
-                           + damping * (F.coalesce("msg", F.lit(0.0))
-                                        + F.lit(dangling / n))))
-        row = (nxt.agg(
-            F.sum(F.abs(F.col("new_score") - F.col("score"))).alias("l1"),
-            F.sum(F.when(F.col("outdeg").isNull(),
-                         F.col("new_score"))).alias("dang"))
-            .collect()[0])
-        x = nxt.select("node", "outdeg", F.col("new_score").alias("score"))
-        if (it + 1) % checkpoint_every == 0:
-            x = stats_barrier(x)
-        dangling = row["dang"] or 0.0
-        if row["l1"] < n * tol:
+        obs = Observation()
+        x = stats_barrier(
+            x.join(msgs, "node", "left")
+            .withColumn("new_score",
+                        F.lit((1.0 - damping) / n)
+                        + damping * (F.coalesce("msg", F.lit(0.0))
+                                     + F.lit(dangling / n)))
+            .observe(obs,
+                     F.sum(F.abs(F.col("new_score") - F.col("score")))
+                     .alias("l1"),
+                     F.sum(F.when(F.col("outdeg").isNull(),
+                                  F.col("new_score"))).alias("dang"))
+            .select("node", "outdeg", F.col("new_score").alias("score")))
+        dangling = obs.get["dang"] or 0.0
+        if obs.get["l1"] < n * tol:
             break
     return x.select("node", "score")
 
@@ -299,7 +292,8 @@ def frontier_reach(adj: DataFrame, start: DataFrame,
     key, takes ``distinct``, anti-joins the reached set, and cuts the
     new delta — hop number included — with one ``stats_barrier``
     (without the cut, Catalyst's BigInt size stats square per round;
-    see session.stats_barrier). The reached set stays a plan-level
+    see session.stats_barrier), whose observed row count ends the walk
+    once no new node is reached. The reached set stays a plan-level
     union of those disjoint materialized deltas: checkpointing the
     union itself would pin O(rounds × reached) blocks, the shape that
     OOM'd a 24 GB heap on the sf1.0 transitive closure (24.9M pairs).
@@ -320,16 +314,15 @@ def frontier_reach(adj: DataFrame, start: DataFrame,
     hop = 0
     while max_hops is None or hop < max_hops:
         hop += 1
+        obs = Observation()
         delta = stats_barrier(
             adj.join(delta.select("_s", F.col("_n").alias("u")), "u")
             .select("_s", F.col("v").alias("_n")).distinct()
             .join(reached.select("_s", "_n"), ["_s", "_n"], "left_anti")
-            .withColumn("hops", F.lit(hop)))
+            .withColumn("hops", F.lit(hop))
+            .observe(obs, F.count("*").alias("rows")))
         reached = reached.unionByName(delta)
-        # an emptiness probe is one Spark job: none for the start frame
-        # (an empty one just yields an empty first round) and none after
-        # the last allowed round, where it would decide nothing
-        if hop != max_hops and delta.isEmpty():
+        if obs.get["rows"] == 0:
             break
     return reached
 

@@ -44,7 +44,7 @@ from collections import defaultdict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..session import driver_frame, stage
 
@@ -284,9 +284,11 @@ def similarity_edges(vectors: DataFrame,
 # 4. connected components (GraphFrames-free min-label propagation)
 # --------------------------------------------------------------------------
 
+CC_MAX_ROUNDS = 20  # pointer doubling: a diameter up to ~2^20
+
+
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         key: str = "mention",
-                         max_iter: int = 20) -> DataFrame:
+                         key: str = "mention") -> DataFrame:
     """vertices(key), edges(src, dst) → (key, cluster_label).
 
     Two routes, chosen by ``session.driver_frame`` on the edge list:
@@ -299,8 +301,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
       label map goes back as one broadcast-joinable Arrow frame.
     * **distributed min-label propagation** otherwise: symmetrized
       edges, a one-hop neighbor-min step then a pointer-doubling jump
-      (label := label(label)) per round, one ``stats_barrier`` per round
-      to cut lineage and stats; rounds = O(log component diameter).
+      (label := label(label)) per round, one observed ``stats_barrier``
+      per round (the loop rule of ``session.stats_barrier``); rounds =
+      O(log component diameter).
     """
     from ..session import stats_barrier
 
@@ -339,9 +342,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     labels = stats_barrier(
         vertices.select(F.col(key), F.col(key).alias("label")))
 
-    from pyspark.sql import Observation
-
-    for i in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # step 1: neighbor-min propagation (1 hop)
         nbr_min = (sym.join(labels, sym.dst == labels[key], "inner")
                    .groupBy("src").agg(F.min("label").alias("nbr_label")))
@@ -358,12 +359,8 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         # monotone (label(x) <= x), so the lookup only ever improves.
         jump = stepped.select(F.col(key).alias("_jk"),
                               F.col("label").alias("_jl"))
-        # convergence probe rides the SAME pass as the label update via
-        # observe(): the materialization job inside stats_barrier both
-        # checkpoints the new labels and emits sum(label != old) —
-        # 1 job/round, not 3
-        obs = Observation(f"cc_changed_{i}")
-        new = stats_barrier(
+        obs = Observation()
+        labels = stats_barrier(
             stepped.join(jump, stepped.label == jump._jk, "left")
             .select(F.col(key),
                     F.least(F.col("label"),
@@ -372,13 +369,12 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             .observe(obs, F.sum((F.col("label") != F.col("_old"))
                                 .cast("long")).alias("changed"))
             .drop("_old"))
-        labels = new
         if (obs.get["changed"] or 0) == 0:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        f"(pointer-doubling handles diameter ~2^{max_iter}; this graph "
-        "should not exist — raise max_iter or inspect the edge set)")
+        f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
+        f"(pointer doubling handles a diameter up to ~2^{CC_MAX_ROUNDS}; "
+        "inspect the edge set)")
 
 
 # --------------------------------------------------------------------------

@@ -143,6 +143,15 @@ def stats_barrier(df):
     "huge"), so a barrier'd frame is never auto-broadcast: loop-state
     frames are probe sides, which is the safe direction; broadcast
     anything downstream explicitly.
+
+    The loop rule of the package: each round of a distributed graph
+    loop (``canon.connected_components``,
+    ``analytics.eigenvector_centrality``, ``pagerank``,
+    ``frontier_reach``) is one ``stats_barrier(nxt.observe(obs, ...))``
+    whose staging job also computes the round's stop test, read from
+    ``obs.get``: one Spark job per round (under AQE, plus one per
+    shuffle stage of its own plan), and no round re-runs an earlier
+    round's shuffles, on the local and the reliable checkpoint alike.
     """
     from pyspark.sql import DataFrame
 

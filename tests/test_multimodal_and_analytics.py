@@ -128,19 +128,17 @@ def test_eigenvector_driver_route_matches_distributed(spark, monkeypatch):
 
 
 def test_eigenvector_one_job_per_iteration(spark, monkeypatch):
-    """VERDICT r1 #7: the fused norm+delta aggregate is ONE driver
-    action per power-iteration round. ``DRIVER_ROWS = 0`` forces the
+    """VERDICT r1 #7: each power-iteration round is ONE job, the
+    observed ``stats_barrier`` that stages the round and carries its
+    norm and convergence delta. ``DRIVER_ROWS = 0`` forces the
     distributed loop (a 29-edge path is under the driver cap). The loop
     runs 3 rounds (3 attempts x ``max_iter=1``: a path is bipartite, so
-    the iteration oscillates and the tol is unreachable) with a
-    ``stats_barrier`` after round 2.
+    the iteration oscillates and the tol is unreachable).
 
-    With AQE off that is exactly one job per round: 4 set-up jobs (the
-    sym and nodes barriers, the node count) + 3 rounds + 1 barrier.
-    Under AQE (the session default) each round's aggregate also runs a
-    job per shuffle stage of the rounds since the last barrier, whose
-    plans it re-runs; measured 42 jobs here (about 12 per round, 10-16
-    growing with the rounds since the barrier)."""
+    With AQE off that is 3 set-up jobs (the sizing collect, the sym and
+    the observed nodes barriers) + 3 rounds. Under AQE (the session
+    default) each barrier also runs one job per shuffle stage of its
+    own plan: 5 set-up jobs + 7 per round."""
     from multivac_spark import session
 
     monkeypatch.setattr(session, "DRIVER_ROWS", 0)
@@ -153,14 +151,12 @@ def test_eigenvector_one_job_per_iteration(spark, monkeypatch):
             spark.conf.set("spark.sql.adaptive.enabled", mode)
             group = f"eig-jobs-aqe-{mode}"
             sc.setJobGroup(group, "count jobs per iteration")
-            analytics.eigenvector_centrality(e, max_iter=1, tol=1e-300,
-                                             checkpoint_every=2)
+            analytics.eigenvector_centrality(e, max_iter=1, tol=1e-300)
             n_jobs[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert n_jobs["false"] == 4 + 3 + 1, n_jobs
-    assert 4 + 3 + 1 < n_jobs["true"] <= 43, n_jobs
+    assert n_jobs == {"false": 3 + 3, "true": 5 + 3 * 7}, n_jobs
 
 
 def test_centrality_delta_and_top_triples(spark):

@@ -70,8 +70,7 @@ def test_pagerank_distributed_equals_driver_path(spark, monkeypatch):
             for r in analytics.pagerank(df, tol=1e-10).collect()}
     monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     dist = {r["node"]: r["score"]
-            for r in analytics.pagerank(
-                df, tol=1e-10, checkpoint_every=3).collect()}
+            for r in analytics.pagerank(df, tol=1e-10).collect()}
     assert set(fast) == set(dist)
     for nd in fast:
         assert dist[nd] == pytest.approx(fast[nd], abs=1e-9)
@@ -142,7 +141,8 @@ def test_k_hop_checkpoints_only_deltas(spark, monkeypatch):
     """Each round checkpoints only the newly reached nodes: walking an
     n-edge chain materializes ≤ 2n+1 rows in total (the adjacency,
     the seed and one row per reached node), not the whole reached set
-    once per round (O(n²) rows)."""
+    once per round (O(n²) rows). The walk cuts the adjacency, the seed
+    and each round once: ``n + 2`` barriers."""
     from multivac_spark import session
 
     n = 30
@@ -161,3 +161,4 @@ def test_k_hop_checkpoints_only_deltas(spark, monkeypatch):
            for r in analytics.k_hop(df, seeds, n, "out").collect()}
     assert got == {(i, i) for i in range(n + 1)}
     assert sum(checkpointed) <= 2 * n + 1, sum(checkpointed)
+    assert len(checkpointed) == n + 2, len(checkpointed)

@@ -11,8 +11,9 @@ import tempfile
 
 import pytest
 
+from multivac_spark import session
 from multivac_spark.functions import fused
-from multivac_spark.operators import textops
+from multivac_spark.operators import analytics, textops
 from multivac_spark.plans.pipeline import PipelineConfig, run_pipeline
 from multivac_spark.session import stage, stats_barrier
 from multivac_spark.sources import corpus
@@ -58,6 +59,39 @@ def test_stage_is_reliable_under_a_checkpoint_dir(spark, checkpoint_dir):
     assert _rows(staged) == _rows(df.groupBy("k").count())
     # the barrier's rebuild reads the reliable checkpoint just the same
     assert _rows(stats_barrier(df)) == _rows(df)
+
+
+def test_distributed_loops_match_the_driver_route_under_a_checkpoint_dir(
+        spark, monkeypatch, checkpoint_dir):
+    """Each round of a distributed graph loop reads its stop test from
+    an observation on its ``stats_barrier``; under a checkpoint
+    directory that barrier is the reliable ``checkpoint()``, and the
+    observations fire there once per round all the same: forced
+    distributed, eigenvector and PageRank return the driver route's
+    scores (their norm and dangling mass are observed each round, so a
+    wrong observation would move every later score), and a k-hop walk
+    past the end of a chain stops on its first empty round with the
+    BFS answer."""
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 15) for i in range(15)]
+        + [(i, (4 * i + 3) % 15) for i in range(0, 15, 2)],
+        "head_id long, tail_id long")
+
+    def scores():
+        return [dict(map(tuple, op.collect())) for op in (
+            analytics.eigenvector_centrality(edges, max_iter=2),
+            analytics.pagerank(edges, max_iter=6))]
+
+    driver = scores()
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
+    for (want, got), tol in zip(zip(driver, scores()), (1e-12, 1e-9)):
+        assert set(got) == set(want)
+        assert max(abs(got[k] - want[k]) for k in want) < tol
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "head_id long, tail_id long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    assert _rows(analytics.k_hop(chain, seeds, 20, "out")) == [
+        (i, i) for i in range(6)]
 
 
 def test_stage_is_local_without_a_checkpoint_dir(spark):

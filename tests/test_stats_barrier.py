@@ -7,8 +7,10 @@ every join, and localCheckpoint carries origin statistics forward
 squares per round — measured 54 → 10,249 bits in 8 rounds WITH a
 per-round localCheckpoint, which eventually serializes the driver in
 BigInteger multiplications. These tests pin (a) value fidelity through
-the barrier, (b) bounded statistics across self-join rounds, and
-(c) that the CC/eigenvector loops stay on bounded statistics.
+the barrier, (b) bounded statistics across self-join rounds,
+(c) that the CC/eigenvector loops stay on bounded statistics, and
+(d) the loop rule: each round of a distributed graph loop is one
+observed barrier, so its Spark jobs per round are constant.
 """
 
 import pytest
@@ -141,12 +143,59 @@ def test_eigenvector_distributed_stats_stay_bounded(spark, monkeypatch):
         [(i, (i + 1) % 12) for i in range(12)],
         "head_id long, tail_id long")
     ev = analytics.eigenvector_centrality(edges)
-    # the result may sit up to checkpoint_every-1 iterations past the
-    # last barrier: a handful of joins over 63-bit bases, so a few
-    # hundred bits — bounded, vs millions when the blow-up compounds
-    assert _stat_bits(ev) <= 1000, _stat_bits(ev)
+    # the result is a projection of the last round's barrier: the same
+    # flat bound as connected_components
+    assert _stat_bits(ev) <= 80, _stat_bits(ev)
     rows = ev.collect()
     assert len(rows) == 12
     # ring graph: uniform centrality 1/sqrt(12)
     for r in rows:
         assert r["score"] == pytest.approx(12 ** -0.5, abs=1e-3)
+
+
+@pytest.mark.parametrize("loop", ["eigenvector", "pagerank", "k_hop"])
+def test_distributed_loop_jobs_per_round(spark, monkeypatch, loop):
+    """Each round is one observed ``stats_barrier`` and nothing else:
+    with AQE off, a fixed set-up plus exactly one job per round; with
+    AQE on, a fixed number per round (one per shuffle stage of the
+    round's plan), so 6 rounds cost exactly 3 rounds' jobs more than 3
+    rounds. Before the rule, rounds past the last barrier re-ran its
+    shuffles: 9, 12, 14, 16 jobs for eigenvector rounds 1-4.
+
+    On a 29-edge path every loop runs its full budget: the power
+    iteration oscillates on a bipartite graph (3 tolerance attempts x
+    ``max_iter`` rounds), PageRank's ``tol=0`` never stops it, and
+    each k-hop round reaches one new node."""
+    from multivac_spark import session
+    from multivac_spark.operators import analytics
+
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
+    path = spark.createDataFrame([(i, i + 1) for i in range(29)],
+                                 "head_id long, tail_id long")
+    seeds = spark.createDataFrame([(0,)], "node long")
+    run, per_unit, setup = {
+        "eigenvector": (lambda r: analytics.eigenvector_centrality(
+            path, max_iter=r, tol=1e-300), 3, 3),
+        "pagerank": (lambda r: analytics.pagerank(
+            path, max_iter=r, tol=0.0), 1, 3),
+        "k_hop": (lambda r: analytics.k_hop(path, seeds, r), 1, 2),
+    }[loop]
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    jobs = {}
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set("spark.sql.adaptive.enabled", mode)
+            for rounds in (0, 3, 6):
+                group = f"loop-jobs/{loop}/{mode}/{rounds}"
+                sc.setJobGroup(group, group)
+                run(rounds // per_unit)
+                jobs[mode, rounds] = len(
+                    sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert [jobs["false", r] for r in (0, 3, 6)] == [
+        setup, setup + 3, setup + 6], jobs
+    per_3 = jobs["true", 3] - jobs["true", 0]
+    assert per_3 >= 3 and jobs["true", 6] - jobs["true", 3] == per_3, jobs
