@@ -16,6 +16,15 @@ Reference behaviors:
 The graph is treated as undirected and unlabeled, exactly like the
 reference building nx.Graph from the first two edge columns
 (get_kg_query_params.py:28-33, predict_kg.py:205-212).
+
+Beyond the reference, over directed edges:
+* PageRank — a numpy loop when the distinct edge list fits
+  ``session.driver_frame``, else one observed stats_barrier per step;
+* k-hop neighborhoods and the SPARQL property paths — one frontier
+  walk, ``frontier_reach``: a per-root BFS over the collected edges
+  when they and the start rows fit ``session.driver_frame`` (and the
+  reached pairs stay within ``DRIVER_ROWS``), else a semi-naive loop,
+  one observed stats_barrier per round.
 """
 
 from __future__ import annotations
@@ -23,17 +32,27 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import (IntegerType, IntegralType, StructField,
+                               StructType)
 
 from ..session import stage
+
+
+def _adjacency(edges: DataFrame, src: str, dst: str,
+               direction: str) -> DataFrame:
+    """(u, v) steps along ``direction`` (``out`` src→dst, ``in``
+    dst→src, ``both``), self-loop-free, duplicates kept."""
+    a = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    b = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+    adj = {"out": a, "in": b, "both": a.union(b)}[direction]
+    return adj.filter(F.col("u") != F.col("v"))
 
 
 def _sym(edges: DataFrame, src: str = "head_id",
          dst: str = "tail_id") -> DataFrame:
     """Undirected view: both directions, self-loop-free, distinct
     neighbor pairs (nx.Graph semantics: parallel edges collapse)."""
-    a = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    b = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    return a.union(b).filter(F.col("u") != F.col("v")).distinct()
+    return _adjacency(edges, src, dst, "both").distinct()
 
 
 def degree_centrality(edges: DataFrame, src: str = "head_id",
@@ -282,49 +301,165 @@ def frontier_reach(adj: DataFrame, start: DataFrame,
                    max_hops: int | None = None) -> DataFrame:
     """Semi-naive frontier walk → (``_s`` root, ``_n`` node, ``hops``):
     every node reachable from a root through ``adj(u, v)``, once per
-    root, at its least hop count. ``start(_s, _n)`` holds the distinct
-    (root, node) rows at hop 0; ``max_hops`` stops after that many
-    rounds (None: walk until no new node is reached).
+    root, at its least hop count. ``start(_s, _n)`` holds the (root,
+    node) rows at hop 0; ``max_hops`` stops after that many rounds
+    (None: walk until no new node is reached). Neither input need be
+    distinct or cut: the routes below take care of both. A null node
+    is reached like any other but never expands (no edge joins it).
 
-    ``adj`` must already be cut with ``stats_barrier``: the loop joins
-    it every round, and an uncut slice would re-run its upstream scan
-    per round. Each round joins the newest delta against ``adj`` on one
-    key, takes ``distinct``, anti-joins the reached set, and cuts the
-    new delta — hop number included — with one ``stats_barrier``
-    (without the cut, Catalyst's BigInt size stats square per round;
-    see session.stats_barrier), whose observed row count ends the walk
-    once no new node is reached. The reached set stays a plan-level
-    union of those disjoint materialized deltas: checkpointing the
-    union itself would pin O(rounds × reached) blocks, the shape that
-    OOM'd a 24 GB heap on the sf1.0 transitive closure (24.9M pairs).
+    Two routes, chosen by ``session.driver_frame`` (the one
+    driver-route rule):
 
-    Work shape: each round costs |delta| × fanout, never reached ⋈
-    reached. Pointer doubling (P ∪ P∘P) was measured 6.5× slower on
-    the sf0.1 KG's densest predicate slice (1,332 edges → 390,590
-    reachability pairs, 34.1 s vs 5.2 s): its round-2/3 self-joins build a ~100M-row
-    intermediate that distinct() then crushes, while the delta chain
-    peaks at |delta| × fanout ≈ 1M. Rounds equal the walk's depth, and
-    a diameter-D digraph has ≥ D(D+1)/2 reachable pairs, so an
-    unbounded walk from every edge runs ≤ √(2·output) rounds.
+    * **Driver route**: ``adj`` and ``start`` each fit, as one bounded
+      collect apiece, with nothing staged or ``distinct()``-ed first.
+      A per-root BFS over the collected edges returns the same rows as
+      one Arrow ``createDataFrame`` — a local relation, so reading the
+      result runs no Spark job. The walk gives the route up for the
+      distributed one as soon as it has reached more than
+      ``DRIVER_ROWS`` (root, node) pairs.
+    * **Distributed route** (the oracle): ``adj.distinct()`` is staged
+      once with ``stats_barrier``, because every round joins it. Each
+      round joins the newest delta against it on one key, takes
+      ``distinct``, anti-joins the reached set (null-safe), and cuts
+      the new delta — hop number included — with one ``stats_barrier``
+      (without the cut, Catalyst's BigInt size stats square per round;
+      see session.stats_barrier), whose observed row count ends the
+      walk once no new node is reached. The reached set stays a
+      plan-level union of those disjoint materialized deltas:
+      checkpointing the union itself would pin O(rounds × reached)
+      blocks, the shape that OOM'd a 24 GB heap on the sf1.0
+      transitive closure (24.9M pairs).
+
+    Work shape of a distributed round: |delta| × fanout, never
+    reached ⋈ reached. Pointer doubling (P ∪ P∘P) was measured 6.5×
+    slower on the sf0.1 KG's densest predicate slice (1,332 edges →
+    390,590 reachability pairs, 34.1 s vs 5.2 s): its round-2/3
+    self-joins build a ~100M-row intermediate that distinct() then
+    crushes, while the delta chain peaks at |delta| × fanout ≈ 1M.
+    Rounds equal the walk's depth, and a diameter-D digraph has
+    ≥ D(D+1)/2 reachable pairs, so an unbounded walk from every edge
+    runs ≤ √(2·output) rounds.
     """
+    from ..session import driver_frame
+
+    adj, start = adj.select("u", "v"), start.select("_s", "_n")
+    edges = driver_frame(adj)
+    roots = driver_frame(start) if edges is not None else None
+    if roots is not None:
+        rows = _reach_driver(edges, adj.schema, roots, start.schema,
+                             max_hops)
+        if rows is not None:
+            # object columns: a long column with a null in it stays
+            # exact instead of going through float64
+            return adj.sparkSession.createDataFrame(
+                pd.DataFrame(rows, columns=["_s", "_n", "hops"],
+                             dtype=object),
+                _reach_schema(adj, start, max_hops))
+    return _reach_distributed(adj, start, max_hops)
+
+
+def _step(adj: DataFrame, delta: DataFrame, hop: int) -> DataFrame:
+    """One round's candidate rows: the delta's nodes' successors,
+    kept under their root, at hop ``hop``."""
+    return (adj.join(delta.select("_s", F.col("_n").alias("u")), "u")
+            .select("_s", F.col("v").alias("_n"), F.lit(hop).alias("hops")))
+
+
+def _reach_schema(adj: DataFrame, start: DataFrame, max_hops):
+    """The distributed route's output schema without a plan analysis
+    in the common case: the hop-0 rows' (``_s``, ``_n``), whose ``_n``
+    a walk that runs rounds unions with ``adj``'s ``v`` (a type
+    mismatch is widened by Spark's union), and a non-null int
+    ``hops``."""
+    s, n = start.schema
+    if max_hops != 0:
+        v = adj.schema["v"]
+        if v.dataType == n.dataType:
+            n = StructField("_n", n.dataType, n.nullable or v.nullable)
+        else:
+            n = start.select("_n").unionByName(
+                adj.select(F.col("v").alias("_n"))).schema["_n"]
+    return StructType([s, n, StructField("hops", IntegerType(), False)])
+
+
+def _reach_distributed(adj: DataFrame, start: DataFrame, max_hops):
+    """`frontier_reach`'s distributed loop: the edge slice staged once,
+    then one observed ``stats_barrier`` per round."""
     from ..session import stats_barrier
 
-    delta = stats_barrier(start.select("_s", "_n", F.lit(0).alias("hops")))
+    adj = stats_barrier(adj.distinct())
+    delta = stats_barrier(
+        start.distinct().withColumn("hops", F.lit(0)))
     reached = delta
     hop = 0
     while max_hops is None or hop < max_hops:
         hop += 1
+        seen = reached.select(F.col("_s").alias("_rs"),
+                              F.col("_n").alias("_rn"))
         obs = Observation()
         delta = stats_barrier(
-            adj.join(delta.select("_s", F.col("_n").alias("u")), "u")
-            .select("_s", F.col("v").alias("_n")).distinct()
-            .join(reached.select("_s", "_n"), ["_s", "_n"], "left_anti")
-            .withColumn("hops", F.lit(hop))
+            _step(adj, delta, hop).distinct()
+            .join(seen, F.col("_s").eqNullSafe(F.col("_rs"))
+                  & F.col("_n").eqNullSafe(F.col("_rn")), "left_anti")
             .observe(obs, F.count("*").alias("rows")))
         reached = reached.unionByName(delta)
         if obs.get["rows"] == 0:
             break
     return reached
+
+
+def _rows(pdf, schema) -> list:
+    """A collected frame's rows as tuples of Python values, None for
+    null (Arrow hands a nullable integral column over as float64 with
+    NaN)."""
+    cols = []
+    for field in schema:
+        col = pdf[field.name]
+        if col.hasnans:
+            integral = isinstance(field.dataType, IntegralType)
+            col = [None if pd.isna(x) else int(x) if integral else x
+                   for x in col]
+        else:
+            col = col.tolist()
+        cols.append(col)
+    return list(zip(*cols))
+
+
+def _reach_driver(edges, adj_schema, roots, start_schema, max_hops):
+    """The driver route's per-root BFS over the collected ``edges(u,
+    v)`` from the collected ``roots(_s, _n)`` → (root, node, hops)
+    rows, each (root, node) once at its least hop count; None as soon
+    as more than ``DRIVER_ROWS`` pairs are reached."""
+    from .. import session
+
+    succ: dict = {}
+    for u, v in _rows(edges, adj_schema):
+        if u is not None:  # a null key joins no delta row
+            succ.setdefault(u, set()).add(v)
+    frontiers: dict = {}
+    for s, n in _rows(roots, start_schema):
+        frontiers.setdefault(s, set()).add(n)
+    budget = session.DRIVER_ROWS
+    rows = []
+    for root, frontier in frontiers.items():
+        hops = dict.fromkeys(frontier, 0)
+        budget -= len(hops)
+        hop = 0
+        while (budget >= 0 and frontier
+               and (max_hops is None or hop < max_hops)):
+            hop += 1
+            nxt = set()
+            for n in frontier:
+                for v in succ.get(n, ()):
+                    if v not in hops:
+                        hops[v] = hop
+                        nxt.add(v)
+            budget -= len(nxt)
+            frontier = nxt
+        if budget < 0:
+            return None
+        rows.extend((root, n, h) for n, h in hops.items())
+    return rows
 
 
 def k_hop(edges: DataFrame, seeds: DataFrame, k: int,
@@ -338,21 +473,14 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int,
     (restrict a query to the k-neighborhood of its seed entities)
     that the reference delegates to in-memory networkx traversals.
     `frontier_reach` from the seeds as one root, at most k rounds,
-    never an all-pairs expansion. ``direction``: ``out`` follows
-    src→dst, ``in`` follows dst→src, ``both`` treats edges as
-    undirected (`_sym`).
+    never an all-pairs expansion; it chooses the driver or the
+    distributed route. ``direction``: ``out`` follows src→dst, ``in``
+    follows dst→src, ``both`` treats edges as undirected.
     """
-    from ..session import stats_barrier
-
     if direction not in ("out", "in", "both"):
         raise ValueError(f"direction must be out|in|both, got {direction}")
-    if direction == "both":
-        adj = _sym(edges, src, dst)
-    else:
-        u, v = (src, dst) if direction == "out" else (dst, src)
-        adj = (edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
-               .filter(F.col("u") != F.col("v")).distinct())
     start = seeds.select(F.lit(0).alias("_s"),
-                         F.col(seeds.columns[0]).alias("_n")).distinct()
-    return (frontier_reach(stats_barrier(adj), start, max_hops=k)
+                         F.col(seeds.columns[0]).alias("_n"))
+    return (frontier_reach(_adjacency(edges, src, dst, direction), start,
+                           max_hops=k)
             .select(F.col("_n").alias("node"), "hops"))

@@ -1182,8 +1182,8 @@ def _scan(triples: DataFrame, p: _Pattern, idx: int) -> tuple:
 
     Constant terms become pushed-down equality filters; a ``<p>+``
     path pattern evaluates to its reachability pairs first
-    (`_path_pairs`: a semi-naive frontier walk, seeded from a ground
-    endpoint when there is one)."""
+    (`_path_pairs`: one `analytics.frontier_reach` walk, seeded from a
+    ground endpoint when there is one)."""
     if p.path:
         return _bind(_path_pairs(triples, p),
                      list(zip(("_ps", "_po"), (p.terms[0], p.terms[2]))),
@@ -1192,17 +1192,15 @@ def _scan(triples: DataFrame, p: _Pattern, idx: int) -> tuple:
 
 
 def _edge_slice(triples: DataFrame, pred_term) -> DataFrame:
-    """The distinct (``_ps``, ``_po``) edge slice a path step walks:
-    a pushed-down equality / [NOT] IN predicate filter over the
+    """The (``_ps``, ``_po``) edge slice a path step walks, duplicates
+    kept: a pushed-down equality / [NOT] IN predicate filter over the
     triples scan, for all three pred kinds (const / alt / neg)."""
     kind, val = pred_term
     cond = (F.col("pred") == val if kind == "const"
             else F.col("pred").isin(*val) if kind == "alt"
             else ~F.col("pred").isin(*val))
-    return (triples.filter(cond)
-            .select(F.col("subj").alias("_ps"),
-                    F.col("obj").alias("_po"))
-            .distinct())
+    return triples.filter(cond).select(F.col("subj").alias("_ps"),
+                                       F.col("obj").alias("_po"))
 
 
 def _path_pairs(triples: DataFrame, p: _Pattern,
@@ -1218,35 +1216,39 @@ def _path_pairs(triples: DataFrame, p: _Pattern,
     the subject when ``forward``, else the object — that earlier
     patterns bound (`_scan_seeded`); a ground endpoint seeds the walk
     itself. Every shape is one `analytics.frontier_reach` over the
-    pushed-down edge slice and differs only in its start frame: the
-    seeds' one-edge successors, or every edge when there are no seeds
-    (the full closure). Work is proportional to the seeds' reachable
-    set, never the graph, unless no endpoint is known. ``?`` is the
-    start frame itself, with no walk; ``*`` and ``?`` add the identity
-    rows of the seeds, or of every graph term without seeds."""
-    from ..session import stats_barrier
-
+    pushed-down edge slice (the walk either collects it to the driver
+    or dedups and stages it) and differs only in its start frame: the
+    ground endpoint's edges (a second pushed-down filter on the
+    slice), the seeds' one-edge successors, or every edge when there
+    are no seeds (the full closure). Work is proportional to the
+    seeds' reachable set, never the graph, unless no endpoint is
+    known. ``?`` is the start frame itself, with no walk; ``*`` and
+    ``?`` add the identity rows of the ground endpoint or the seeds,
+    or of every graph term without either."""
     (s_kind, s_val), (o_kind, o_val) = p.terms[0], p.terms[2]
+    ground = None
     if seeds is None and "const" in (s_kind, o_kind):
         forward = s_kind == "const"
-        # a JVM-side one-row frame: createDataFrame([(v,)]) is a Python
-        # RDD, and joining it costs a Python-worker round trip
-        seeds = triples.sparkSession.range(1).select(
-            F.lit(s_val if forward else o_val).alias("_s"))
+        ground = s_val if forward else o_val
     src, dst = ("_ps", "_po") if forward else ("_po", "_ps")
     adj = _edge_slice(triples, p.terms[1]).select(
         F.col(src).alias("u"), F.col(dst).alias("v"))
-    if p.path != "?":
-        adj = stats_barrier(adj)  # the walk scans its edge slice once
-    if seeds is None:
-        start = adj.select(F.col("u").alias("_s"), F.col("v").alias("_n"))
+    if ground is not None:
+        start = adj.filter(F.col("u") == ground)
+    elif seeds is not None:
+        start = adj.join(seeds, F.col("u") == F.col("_s"))
     else:
-        start = (adj.join(seeds, F.col("u") == F.col("_s"))
-                 .select("_s", F.col("v").alias("_n")))
+        start = adj
+    start = start.select(F.col("u").alias("_s"), F.col("v").alias("_n"))
     reach = (start if p.path == "?"
              else frontier_reach(adj, start).select("_s", "_n"))
     if p.path in ("*", "?"):
-        if seeds is None:
+        if ground is not None:
+            # a JVM-side one-row frame: createDataFrame([(v,)]) is a
+            # Python RDD, and reading it costs a Python-worker job
+            seeds = triples.sparkSession.range(1).select(
+                F.lit(ground).alias("_s"))
+        elif seeds is None:
             seeds = (triples.select(F.col("subj").alias("_s"))
                      .unionByName(triples.select(F.col("obj").alias("_s")))
                      .distinct())

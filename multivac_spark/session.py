@@ -15,7 +15,13 @@ themselves.
 ``driver_frame`` is the one driver-route rule: an operator with a
 driver kernel and a distributed loop hands it its input, and one
 bounded Arrow collect both sizes that input against ``DRIVER_ROWS``
-and, when it fits, is all the driver kernel reads.
+and, when it fits, is all the driver kernel reads. The operators with
+a driver route: ``canon.cluster_entities``,
+``canon.connected_components``, ``analytics.eigenvector_centrality``,
+``analytics.pagerank`` and ``analytics.frontier_reach`` (the walk
+under ``analytics.k_hop`` and the SPARQL property paths, whose
+reached pairs the same cap bounds), plus the answer service's
+``query.DriverKG``.
 """
 
 from __future__ import annotations

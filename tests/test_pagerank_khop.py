@@ -142,10 +142,10 @@ def test_k_hop_checkpoints_only_deltas(spark, monkeypatch):
     n-edge chain materializes ≤ 2n+1 rows in total (the adjacency,
     the seed and one row per reached node), not the whole reached set
     once per round (O(n²) rows). The walk cuts the adjacency, the seed
-    and each round once: ``n + 2`` barriers."""
-    from multivac_spark import session
-
+    and each round once: ``n + 2`` barriers. ``DRIVER_ROWS = 0``
+    forces the distributed loop; the driver route cuts nothing."""
     n = 30
+    monkeypatch.setattr(session, "DRIVER_ROWS", 0)
     checkpointed = []
     orig = session.stats_barrier
 

@@ -165,7 +165,12 @@ def test_distributed_loop_jobs_per_round(spark, monkeypatch, loop):
     On a 29-edge path every loop runs its full budget: the power
     iteration oscillates on a bipartite graph (3 tolerance attempts x
     ``max_iter`` rounds), PageRank's ``tol=0`` never stops it, and
-    each k-hop round reaches one new node."""
+    each k-hop round reaches one new node. ``DRIVER_ROWS = 0`` forces
+    each operator's distributed loop (k_hop's is
+    ``analytics.frontier_reach``'s). Every set-up counts the operator's
+    one ``driver_frame`` sizing collect: k_hop's 3 are that collect and
+    the adjacency and seed barriers, PageRank's are that collect and
+    two barriers."""
     from multivac_spark import session
     from multivac_spark.operators import analytics
 
@@ -178,7 +183,7 @@ def test_distributed_loop_jobs_per_round(spark, monkeypatch, loop):
             path, max_iter=r, tol=1e-300), 3, 3),
         "pagerank": (lambda r: analytics.pagerank(
             path, max_iter=r, tol=0.0), 1, 3),
-        "k_hop": (lambda r: analytics.k_hop(path, seeds, r), 1, 2),
+        "k_hop": (lambda r: analytics.k_hop(path, seeds, r), 1, 3),
     }[loop]
     sc = spark.sparkContext
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
