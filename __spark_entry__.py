@@ -1301,8 +1301,8 @@ FROM tf JOIN df ON tf.token = df.token
 # golden triple-set digest of the 100-doc synthetic pipeline run, pinned
 # from two independent runs at local[4]/sp=8 and local[16]/sp=32 (the
 # whole pipeline is deterministic under reparallelization by design:
-# seeded corpus, seeded LSH planes, order-independent union-find,
-# lexicographic representatives).
+# seeded corpus, seeded LSH planes, order-independent component-minimum
+# labels, lexicographic representatives).
 KG_SYNTH_N = 1309
 KG_SYNTH_HASH = "b467c56201e0f4348176dc975efce743"
 

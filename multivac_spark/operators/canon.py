@@ -14,12 +14,15 @@ Spark-first replacement:
 1. mention avg-embedding via explode → broadcast-join embeddings →
    per-dimension mean (all built-in, map-side combinable);
 2. random-hyperplane LSH blocking: banded sign-signatures over seeded
-   hyperplanes, candidate pairs from equal band keys only (no O(n²));
+   hyperplanes, candidate pairs from equal band keys only (no O(n²)).
+   One signature kernel (``_signatures``) serves both routes: a packed
+   int64 signature and one int64 key per band;
 3. exact cosine on candidates, keep dist ≤ threshold → similarity edges;
-4. connected components by min-label propagation with pointer doubling
-   (driver union-find when the edge list fits ``session.driver_frame``,
-   the package's one driver-route rule); the distributed loop converges
-   in O(log diameter) rounds — GraphFrames-free;
+4. connected components by min-label propagation with pointer doubling,
+   GraphFrames-free: a distributed loop of O(log diameter) rounds, and
+   its numpy twin (``_components``) on the driver, which both driver
+   routes call (``session.driver_frame``, the package's one
+   driver-route rule);
 5. per-block refinement: each connected component (a block) runs the
    reference's average linkage cut at the threshold (``_split_block``;
    ``refine_components`` on the distributed route), which splits
@@ -123,6 +126,22 @@ def _seeded_planes(n_planes: int, dim: int, seed: str = "multivac-lsh") -> np.nd
     return rng.standard_normal((n_planes, dim))
 
 
+def _signatures(X: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(n, dim) vectors → (unit rows, signature, band keys); the one LSH
+    signature kernel of both clustering routes. The signature packs the
+    ``N_PLANES`` sign bits big-endian into one signed int64; band b's
+    key is its bits as an integer with b in the bits above them, so keys
+    of different bands never collide."""
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    bits = Xn @ _seeded_planes(N_PLANES, X.shape[1]).T > 0
+    sig = np.packbits(bits, axis=1).view(">i8")[:, 0].astype(np.int64)
+    rows_per_band = N_PLANES // BANDS
+    weights = 1 << np.arange(rows_per_band - 1, -1, -1, dtype=np.int64)
+    bands = bits.reshape(len(X), BANDS, rows_per_band) @ weights
+    return Xn, sig, bands + (np.arange(BANDS, dtype=np.int64)
+                             << rows_per_band)
+
+
 # --------------------------------------------------------------------------
 # average-linkage kernel (the reference's fastcluster.linkage('average') +
 # fcluster(t, 'distance') semantics, rdf_graph.py:93-98) — numpy
@@ -203,7 +222,7 @@ def similarity_edges(vectors: DataFrame,
     removes false positives, so banding only costs recall, which the
     clustering-oracle test pins.
 
-    Signatures are computed by one numpy matmul per Arrow batch
+    Signatures are computed by ``_signatures`` per Arrow batch
     (vectorized pandas UDF) — 64 hyperplane dots per row as BLAS, not 64
     expression-tree aggregates.
 
@@ -214,36 +233,23 @@ def similarity_edges(vectors: DataFrame,
     only on Hamming survivors with vectors re-attached by broadcast
     (the mention dictionary is top-N-truncated → broadcastable by
     construction); dropDuplicates shuffles only final-edge-scale rows."""
-    planes = _seeded_planes(N_PLANES, EMBED_DIM)
-    rows_per_band = N_PLANES // BANDS
-
     def signatures(batches):
         for pdf in batches:
-            X = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf["vector"]])
-            if len(X) == 0:
+            if len(pdf) == 0:
                 yield pd.DataFrame({key: [], "uvec": [], "sigbits": [],
                                     "bkeys": []})
                 continue
-            Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-            bits = (Xn @ planes.T > 0).astype(np.uint8)  # (n, N_PLANES)
-            bkeys, signed = [], []
-            for row in bits:
-                s = "".join("1" if b else "0" for b in row)
-                v = int(s, 2)
-                signed.append(v - (1 << 64) if v >= (1 << 63) else v)
-                bkeys.append(
-                    [f"{bi}:{s[bi * rows_per_band:(bi + 1) * rows_per_band]}"
-                     for bi in range(BANDS)])
+            Xn, sig, bkeys = _signatures(np.array(
+                [np.asarray(v, dtype=np.float64) for v in pdf["vector"]]))
             yield pd.DataFrame({key: pdf[key],
-                                "uvec": [r.tolist() for r in Xn],
-                                "sigbits": signed,
-                                "bkeys": bkeys})
+                                "uvec": Xn.tolist(),
+                                "sigbits": sig,
+                                "bkeys": bkeys.tolist()})
 
     sig = vectors.mapInPandas(
         signatures,
         schema=(f"{key} string, uvec array<double>, sigbits long, "
-                "bkeys array<string>"))
+                "bkeys array<long>"))
     sig = stage(sig)
 
     # Hamming cut: E[hamming] = N_PLANES * acos(1-threshold)/π at the
@@ -287,18 +293,41 @@ def similarity_edges(vectors: DataFrame,
 CC_MAX_ROUNDS = 20  # pointer doubling: a diameter up to ~2^20
 
 
+def _components(n: int, src: np.ndarray, dst: np.ndarray) -> np.ndarray:
+    """Vertices 0..n-1, edges (src[k], dst[k]) → per vertex the smallest
+    vertex of its component; the driver routes' one connected-components
+    kernel, the numpy twin of the distributed round (neighbor-min step,
+    then the jump label := label(label), until no label changes).
+
+    The step also lowers the label of each vertex's label (Shiloach-
+    Vishkin hooking), which the distributed round does not: without it a
+    chain in shuffled vertex order needs about n/3 rounds (31,178 on
+    100,000 vertices), with it 15. The fixed point is the same."""
+    a = np.concatenate([src, dst])
+    b = np.concatenate([dst, src])
+    label = np.arange(n)
+    while True:
+        stepped = label.copy()
+        np.minimum.at(stepped, a, label[b])
+        np.minimum.at(stepped, label[a], label[b])
+        stepped = stepped[stepped]
+        if np.array_equal(stepped, label):
+            return label
+        label = stepped
+
+
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          key: str = "mention") -> DataFrame:
     """vertices(key), edges(src, dst) → (key, cluster_label).
 
     Two routes, chosen by ``session.driver_frame`` on the edge list:
-    * **driver union-find** when the edges fit (at most
+    * **driver kernel** ``_components`` when the edges fit (at most
       ``DRIVER_ROWS``). This is not a scale cheat: the clustered
       dictionary is top-N-truncated (top_n_ent=50000,
       rdf_graph.py:25) *by the reference's own design*, so the
-      similarity edges are bounded regardless of corpus size; union-find
-      over the one Arrow collect replaces 5+ shuffle rounds, and the
-      label map goes back as one broadcast-joinable Arrow frame.
+      similarity edges are bounded regardless of corpus size; the
+      kernel over the one Arrow collect replaces 5+ shuffle rounds, and
+      the label map goes back as one broadcast-joinable Arrow frame.
     * **distributed min-label propagation** otherwise: symmetrized
       edges, a one-hop neighbor-min step then a pointer-doubling jump
       (label := label(label)) per round, one observed ``stats_barrier``
@@ -309,25 +338,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 
     pdf = driver_frame(edges.select("src", "dst"))
     if pdf is not None:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # min-label union keeps the lexicographic-min
-                # representative semantics of the distributed route
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        label_map = pd.DataFrame({key: list(parent),
-                                  "_cc_label": [find(x) for x in parent]})
+        # sorted names: the smallest index is the lexicographic-min name,
+        # the label the distributed route gives
+        names, idx = np.unique(
+            np.concatenate([pdf["src"].to_numpy(object),
+                            pdf["dst"].to_numpy(object)]),
+            return_inverse=True)
+        label = _components(len(names), idx[:len(pdf)], idx[len(pdf):])
+        label_map = pd.DataFrame({key: names, "_cc_label": names[label]})
         map_df = vertices.sparkSession.createDataFrame(
             label_map, f"{key} string, _cc_label string")
         return (vertices.select(key)
@@ -446,18 +464,18 @@ def cluster_entities(mentions: DataFrame, embeddings: DataFrame,
                      char_limit: int = CHAR_LIMIT) -> DataFrame:
     """End-to-end: mentions(mention) → (mention, label, rep).
 
-    Two routes with the same planes, the same banding (``N_PLANES``,
-    ``BANDS``, ``MAX_BUCKET``), the same union-find semantics, the same
-    block split (``_split_block``) and the same representative rule
-    (``representative_rows``). Only the distributed route applies the
-    Hamming prefilter; the driver route runs the exact cosine on every
-    bucket pair, so its candidate set is a superset (parity pinned by
-    test). ``session.driver_frame`` chooses:
+    Two routes with the same signature kernel (``_signatures``), the
+    same ``MAX_BUCKET``, the same connected components (``_components``
+    on the driver), the same block split (``_split_block``) and the same
+    representative rule (``representative_rows``). Only the distributed
+    route applies the Hamming prefilter; the driver route runs the exact
+    cosine on every bucket pair, so its candidate set is a superset
+    (parity pinned by test). ``session.driver_frame`` chooses:
 
     * **driver route** (at most ``DRIVER_ROWS`` mentions — the default
       build's top_n_ent=50000, rdf_graph.py:25; ``top_n_ent=None`` does
       not bound it): the sizing collect is the mention list; the needed
-      token vectors are collected, the LSH → exact-cosine → union-find →
+      token vectors are collected, the LSH → exact-cosine → components →
       linkage kernel runs as one numpy pass, and the labels go back as
       one Arrow frame. This is the reference's own in-memory shape
       (rdf_graph.py:86-111) minus the O(n²) pdist, in two collects
@@ -535,79 +553,44 @@ def _cluster_entities_driver(names: list[str], embeddings: DataFrame,
             continue  # OOV mention: drops out, like rdf_graph.py:282-292
         kept.append(m)
         rows_per_mention.append(rows)
-    X = grouped_mean(E, rows_per_mention)
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    planes = _seeded_planes(N_PLANES, X.shape[1])
-    bits = (Xn @ planes.T > 0)
-    rows_per_band = N_PLANES // BANDS
+    Xn, _, bkeys = _signatures(grouped_mean(E, rows_per_mention))
 
-    # union-find (rank-free, path-halving). Root choice is irrelevant to
-    # the output: roots are only dict keys for the block partition — the
-    # per-block linkage + sorted-members labeling below fully determines
-    # labels/reps, so dropping the old lexicographic-min union changes
-    # nothing (pinned by the A/B parity test).
-    parent = list(range(len(kept)))
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    # band buckets via uint64 views: one vectorized pass per band; run
-    # boundaries found with diff/flatnonzero instead of a 50k-iteration
-    # Python scan per band
-    pow2 = (1 << np.arange(rows_per_band - 1, -1, -1)).astype(np.uint64)
-    buckets: dict[tuple, np.ndarray] = {}
-    for b in range(BANDS):
-        seg = bits[:, b * rows_per_band:(b + 1) * rows_per_band]
-        keys = seg.astype(np.uint64) @ pow2
-        order = np.argsort(keys, kind="stable")
-        sk = keys[order]
-        bounds = np.concatenate(
-            ([0], np.flatnonzero(sk[1:] != sk[:-1]) + 1, [len(sk)]))
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            if e - s > 1:
-                buckets[(b, int(sk[s]))] = order[s:e]
+    # one grouping over every band's keys: a bucket is a run of equal keys,
+    # its rows ascending (a stable sort of the row-major key matrix)
+    flat = bkeys.ravel()
+    order = np.argsort(flat, kind="stable")
+    bounds = np.flatnonzero(np.diff(flat[order], prepend=-1, append=-1))
+    rows = order // BANDS
+    sizes = np.diff(bounds)
+    shared = (sizes > 1) & (sizes <= MAX_BUCKET)
 
     # per bucket: ONE cosine matmul (≤ MAX_BUCKET² × dim flops), then
-    # union every pair within the distance threshold. The distributed
+    # keep every pair within the distance threshold. The distributed
     # path's Hamming prefilter (`cut`) is deliberately NOT applied here:
     # on the driver the exact matmul is BLAS-cheap, and skipping the
     # prefilter means the driver path's recall is a superset — parity
     # with the distributed path is pinned by test instead.
-    # Edges are gathered into flat arrays and DEDUPED vectorized before
-    # the Python union loop: the same near-dup pair collides in several
-    # bands, and the old per-bucket loops paid ~600k interpreted union
-    # calls at the 50k dictionary (0.9s) for a much smaller unique set.
-    ea: list[np.ndarray] = []
-    eb: list[np.ndarray] = []
-    for idx in buckets.values():
-        if len(idx) > MAX_BUCKET:
-            continue
+    # The same near-dup pair collides in several bands: np.unique.
+    ea: list[np.ndarray] = [np.zeros(0, np.int64)]
+    eb: list[np.ndarray] = [np.zeros(0, np.int64)]
+    for s, e in zip(bounds[:-1][shared], bounds[1:][shared]):
+        idx = rows[s:e]
         sub = Xn[idx]
-        sims = sub @ sub.T
-        ii, jj = np.nonzero(sims >= 1.0 - threshold)
+        ii, jj = np.nonzero(sub @ sub.T >= 1.0 - threshold)
         up = ii < jj
         ea.append(idx[ii[up]])
         eb.append(idx[jj[up]])
-    if ea:
-        n_kept = len(kept)
-        packed = np.unique(
-            np.concatenate(ea).astype(np.int64) * n_kept
-            + np.concatenate(eb).astype(np.int64))
-        for p in packed.tolist():
-            i, j = divmod(p, n_kept)
-            ri, rj = find(i), find(j)
-            if ri != rj:
-                parent[rj] = ri
+    n_kept = len(kept)
+    packed = np.unique(np.concatenate(ea) * n_kept + np.concatenate(eb))
+    label = _components(n_kept, packed // n_kept, packed % n_kept)
 
-    blocks: dict[int, list[int]] = defaultdict(list)
-    for i in range(len(kept)):
-        blocks[find(i)].append(i)
-    clusters = [c for members in blocks.values()
-                for c in _split_block([kept[i] for i in members], members,
-                                      Xn, threshold)]
+    # blocks by label in ascending row order: members ascending, blocks
+    # by their first member (average-linkage tie-breaks depend on it)
+    order = np.argsort(label, kind="stable")
+    bounds = np.flatnonzero(np.diff(label[order], prepend=-1, append=-1))
+    clusters = [c for s, e in zip(bounds[:-1], bounds[1:])
+                for c in _split_block([kept[i] for i in order[s:e]],
+                                      order[s:e], Xn, threshold)]
     # pandas → Arrow-path createDataFrame: a plain list-of-tuples would
     # serialize row-by-row through py4j (seconds at 50k mentions)
     return spark.createDataFrame(

@@ -1563,8 +1563,10 @@ def _describe(triples: DataFrame, q: _Query) -> DataFrame:
     var_names = [n for k, n in q.describe if k == "var"]
     res = None
     if ground:
-        res = triples.sparkSession.createDataFrame(
-            [(g,) for g in ground], "_res string")
+        # a JVM-side literal frame: createDataFrame over Python rows is
+        # an RDD scan that needs a Python worker to read
+        res = triples.sparkSession.range(1).select(
+            F.explode(F.array(*[F.lit(g) for g in ground])).alias("_res"))
     if var_names:
         sols, _ = _solve(triples, q)
         for v in var_names:

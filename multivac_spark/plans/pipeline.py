@@ -75,8 +75,9 @@ class LazyTables(Mapping):
     FIRST ACCESS by a memoized thunk of ``_tables``, so repeated access
     returns the same object. Constructing the mapping schedules zero
     Spark jobs — the clustering stages (which are eager by design:
-    bounded dictionary collect + union-find, canon.py) only run when a
-    caller touches a clustering-dependent table. Job-count pinned in
+    bounded dictionary collect + the numpy LSH and connected-components
+    kernels, canon.py) only run when a caller touches a
+    clustering-dependent table. Job-count pinned in
     tests/test_lazy_pipeline.py."""
 
     def __init__(self, thunks: dict[str, Callable[[], DataFrame]]):

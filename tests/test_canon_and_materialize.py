@@ -1,6 +1,9 @@
 """Canonicalization vs exact-clustering oracle (FIXTURES.md invariant #3)
 + materialization semantics."""
 
+from collections import deque
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -139,9 +142,12 @@ def test_representative_rule():
 
 @pytest.mark.parametrize("driver_rows", [5_000_000, 0])
 def test_connected_components_chain(spark, monkeypatch, driver_rows):
-    """Both CC paths (driver union-find and distributed min-label
-    propagation) must produce identical labels; ``DRIVER_ROWS = 0``
-    forces the distributed one."""
+    """Both CC paths (the driver's numpy kernel ``canon._components`` and
+    distributed min-label propagation, each a neighbor-min step then a
+    pointer-doubling jump per round) must produce identical labels;
+    ``DRIVER_ROWS = 0`` forces the distributed one. The 100-vertex
+    chain needs the jump: one hop per round would take 99 rounds, over
+    ``CC_MAX_ROUNDS``."""
     monkeypatch.setattr(session, "DRIVER_ROWS", driver_rows)
     v = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("e",),
                                ("z",)], "mention string")
@@ -152,6 +158,91 @@ def test_connected_components_chain(spark, monkeypatch, driver_rows):
     assert labels["a"] == labels["b"] == labels["c"] == "a"
     assert labels["d"] == labels["e"] == "d"
     assert labels["z"] == "z"  # isolated vertex keeps its own label
+
+    names = [f"v{i:03d}" for i in range(100)]
+    v = spark.createDataFrame([(x,) for x in names], "mention string")
+    # edges in both directions along the chain
+    e = spark.createDataFrame(
+        [(names[i], names[i + 1]) if i % 2 else (names[i + 1], names[i])
+         for i in range(99)], "src string, dst string")
+    labels = {r["mention"]: r["label"]
+              for r in canon.connected_components(v, e).collect()}
+    assert labels == {x: "v000" for x in names}
+
+
+def _string_signatures(X):
+    """The string formulation ``similarity_edges`` used before
+    ``canon._signatures``: the oracle of the packed kernel."""
+    planes = canon._seeded_planes(canon.N_PLANES, X.shape[1])
+    rows_per_band = canon.N_PLANES // canon.BANDS
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    bits = (Xn @ planes.T > 0).astype(np.uint8)
+    bkeys, signed = [], []
+    for row in bits:
+        s = "".join("1" if b else "0" for b in row)
+        v = int(s, 2)
+        signed.append(v - (1 << 64) if v >= (1 << 63) else v)
+        bkeys.append(
+            [f"{bi}:{s[bi * rows_per_band:(bi + 1) * rows_per_band]}"
+             for bi in range(canon.BANDS)])
+    return Xn, signed, bkeys
+
+
+def test_signatures_match_the_string_formulation():
+    """The packed signature equals the string formulation's integer, and
+    the int64 band keys bucket the rows exactly as the string keys do,
+    within each band and across bands."""
+    X = np.random.default_rng(0).standard_normal((5000, canon.EMBED_DIM))
+    Xn, sig, bkeys = canon._signatures(X)
+    want_n, want_sig, want_keys = _string_signatures(X)
+    assert np.array_equal(Xn, want_n)
+    assert sig.dtype == np.int64 and sig.tolist() == want_sig
+    assert bkeys.shape == (len(X), canon.BANDS)
+    pairs = set(zip((k for row in want_keys for k in row),
+                    bkeys.ravel().tolist()))
+    # a bijection between the two key sets is the same bucketing
+    assert len(pairs) == len({s for s, _ in pairs}) == \
+        len({k for _, k in pairs})
+    # keys of different bands never collide
+    assert all(int(s.split(":")[0]) == k >> (canon.N_PLANES // canon.BANDS)
+               for s, k in pairs)
+
+
+def _bfs_min_labels(n, edges):
+    adj = [[] for _ in range(n)]
+    for a, b in edges:
+        adj[a].append(b)
+        adj[b].append(a)
+    label = [-1] * n
+    for root in range(n):  # ascending, so each root is its component's min
+        if label[root] < 0:
+            label[root], todo = root, deque([root])
+            while todo:
+                for w in adj[todo.popleft()]:
+                    if label[w] < 0:
+                        label[w] = root
+                        todo.append(w)
+    return label
+
+
+def test_component_kernel_matches_bfs():
+    """``canon._components`` gives each vertex its component's smallest
+    vertex, as a BFS does: seeded random graphs (isolated vertices,
+    self-loops and repeated edges included), no vertices, no edges, and
+    a 5,000-vertex chain."""
+    rng = np.random.default_rng(7)
+    graphs = [(0, []), (5, [])]
+    for _ in range(200):
+        n = int(rng.integers(1, 60))
+        m = int(rng.integers(0, 2 * n))
+        graphs.append((n, rng.integers(0, n, size=(m, 2)).tolist()))
+    chain = rng.permutation(5000)
+    graphs.append((5000, list(zip(chain[:-1], chain[1:]))))
+    for n, edges in graphs:
+        a = np.array([x for x, _ in edges], dtype=np.int64)
+        b = np.array([y for _, y in edges], dtype=np.int64)
+        assert canon._components(n, a, b).tolist() == \
+            _bfs_min_labels(n, edges)
 
 
 def test_distributed_cc_one_job_per_round(spark, monkeypatch):

@@ -666,6 +666,20 @@ def test_describe_ground_resource_no_where(triples):
                        ("virus x", "infect", "cell")])
 
 
+def test_describe_ground_resource_runs_no_python_scan(spark):
+    """The ground resources are a JVM-side literal frame: no
+    ``ExistingRDD`` scan (a Python RDD a worker must read) in the
+    executed plan."""
+    import pandas as pd
+    df = spark.createDataFrame(pd.DataFrame(
+        TRIPLES, columns=["subj", "pred", "obj"]))
+    out = S.sparql(df, f'DESCRIBE <{S.DEFAULT_BASE}cell> '
+                       f'<{S.DEFAULT_BASE}host>')
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert len(out.collect()) == 5
+
+
 def test_describe_variable_with_where(triples):
     got = run(triples, 'DESCRIBE ?x WHERE { ?x "mutate" ?g }')
     assert got == srt([("virus x", "infect", "cell"),

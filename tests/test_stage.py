@@ -162,5 +162,7 @@ def test_train_bigram_lm_stages_in_the_callers_job_group(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert lm["vocab_n"] == 3
-    assert set(_jobs(spark, None)) == ungrouped
+    # no new ungrouped job; the status store may evict the oldest jobs
+    # (spark.ui.retainedJobs) during the call, so the set can shrink
+    assert set(_jobs(spark, None)) <= ungrouped
     assert len(_jobs(spark, "lm-train")) >= 3
